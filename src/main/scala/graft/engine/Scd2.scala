@@ -174,21 +174,65 @@ object Scd2 {
                  key: String, ts: String, tie: String,
                  opCol: Option[String]): MergeResult = {
     val b = Cdc.dedupLastPerKey(batch, key, ts, tie)
-    val cur = current(dim)
-    // Per-key last-version metadata over ALL versions, not just current
-    // rows: after a DELETE a key has no current row but its version chain
-    // (and the stale-change guard) must continue from the last version.
-    // The guard compares against the key's TIMELINE END — max(valid_to)
-    // can exceed max(valid_from) after a DELETE (the delete stamps
-    // valid_to without inserting a version), and admitting a change
-    // inside that closed interval would create overlapping versions.
-    val keyMeta = dim.groupBy(col(key)).agg(
+    val r = route(b, keyMeta(dim, key), current(dim), key, ts, opCol)
+    val cols = dim.columns.toIndexedSeq.map(col)
+    val result = dim.filter(!col("is_current"))
+      .unionByName(r.curUnchanged)
+      .unionByName(r.expired.select(cols: _*))
+      .unionByName(r.newVersions.select(cols: _*))
+    MergeResult(result, () => Caches.release(r.routed))
+  }
+
+  /** A merge over a dimension kept as two segments, split by what the
+    * merge rewrites: `closed` is the closed rows added by this batch
+    * (the versions it expires, plus any closed rows the live segment
+    * still held), `current` is every row current after it. `cleanup`
+    * is [[MergeResult]]'s. */
+  final case class SegmentMerge(closed: DataFrame, current: DataFrame,
+                                cleanup: () => Unit)
+
+  /** [[mergeBatch]] over `history` (closed rows only, never rewritten)
+    * plus `live` (the rest): `history ∪ closed ∪ current` equals
+    * `mergeBatch(history ∪ live)`. The key metadata the batch's keys
+    * join against (timeline end, max `version_no`, has-current) still
+    * spans both segments, so the history is scanned for five narrow
+    * columns but never re-encoded. */
+  def mergeSegments(history: Option[DataFrame], live: DataFrame,
+                    batch: DataFrame, key: String, ts: String, tie: String,
+                    opCol: Option[String]): SegmentMerge = {
+    val b = Cdc.dedupLastPerKey(batch, key, ts, tie)
+    val all = history.fold(live)(_.unionByName(live))
+    val r = route(b, keyMeta(all, key), current(live), key, ts, opCol)
+    val cols = live.columns.toIndexedSeq.map(col)
+    SegmentMerge(
+      live.filter(!col("is_current")).unionByName(r.expired.select(cols: _*)),
+      r.curUnchanged.unionByName(r.newVersions.select(cols: _*)),
+      () => Caches.release(r.routed))
+  }
+
+  // Per-key last-version metadata over ALL versions, not just current
+  // rows: after a DELETE a key has no current row but its version chain
+  // (and the stale-change guard) must continue from the last version.
+  // The guard compares against the key's TIMELINE END — max(valid_to)
+  // can exceed max(valid_from) after a DELETE (the delete stamps
+  // valid_to without inserting a version), and admitting a change
+  // inside that closed interval would create overlapping versions.
+  private def keyMeta(dim: DataFrame, key: String): DataFrame =
+    dim.groupBy(col(key)).agg(
       greatest(max(col("valid_from")),
         coalesce(max(col("valid_to")), max(col("valid_from"))))
         .as("_tl_end"),
       max(col("version_no")).as("_max_vn"),
       max(when(col("is_current"), 1).otherwise(0)).as("_has_cur"))
 
+  /** The batch-dependent parts of a merge: the cached routed batch, the
+    * versions it opens, the current rows it expires and the current rows
+    * it leaves alone. */
+  private final case class Routing(routed: DataFrame, newVersions: DataFrame,
+                                   expired: DataFrame, curUnchanged: DataFrame)
+
+  private def route(b: DataFrame, keyMeta: DataFrame, cur: DataFrame,
+                    key: String, ts: String, opCol: Option[String]): Routing = {
     // J1 keyed lookup + T4 stale guard. The routed batch feeds three
     // branches of the union rewrite (new versions, expiry keys, anti-join
     // keys) — persist it so the dedup window + join run once, not per
@@ -223,13 +267,7 @@ object Scd2 {
 
     val curUnchanged =
       cur.join(maybeBroadcast(changedKeys.select(col(key))), Seq(key), "left_anti")
-
-    val cols = dim.columns.toIndexedSeq.map(col)
-    val result = dim.filter(!col("is_current"))
-      .unionByName(curUnchanged)
-      .unionByName(expired.select(cols: _*))
-      .unionByName(newVersions.select(cols: _*))
-    MergeResult(result, () => Caches.release(routed))
+    Routing(routed, newVersions, expired, curUnchanged)
   }
 
   /** Schema evolution for the merge path — the ALTER TABLE case a live

@@ -18,6 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * orphan dir — harmless, the pointer still names the last good version
   * (same replay-safety window the reference has between commit and ledger
   * append, solved the same way: re-publishing version N+1 is idempotent).
+  *
+  * History segment: a flat version written by [[publishSegments]] (the
+  * whole-dim SCD2 publish, and the only writer of it) keeps its closed
+  * rows (`is_current = false`) in `hist-`-prefixed files apart from the
+  * rest. Closed versions never change, so the next such publish
+  * hard-links those files forward and rewrites only the current rows.
+  * The split is invisible to readers: a version is still one parquet
+  * directory with one schema, and every other writer (including
+  * [[purgeKeys]]' rewrites) produces versions without a history
+  * segment, which the next [[publishSegments]] simply re-splits.
   */
 class SnapshotStore(spark: SparkSession, root: String) {
   private val rootPath = Paths.get(root)
@@ -251,6 +261,128 @@ class SnapshotStore(spark: SparkSession, root: String) {
         }
     } }
 
+  /** File-name prefix of a version's history segment (closed rows only).
+    * Visible to Spark's listing, so readers of the version dir see these
+    * files like any other. */
+  private val HistoryPrefix = "hist-"
+
+  /** A version's history-segment files, by name. */
+  private[graft] def historyFiles(v: Long): Seq[java.nio.file.Path] =
+    dataFiles(rootPath.resolve(s"v$v")).filter(
+      _.getFileName.toString.startsWith(HistoryPrefix))
+
+  /** The visible parquet files directly inside `dir`, sorted by name. */
+  private def dataFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val stream = Files.list(dir)
+    try {
+      val it = stream.iterator()
+      val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+      while (it.hasNext) {
+        val p = it.next()
+        val n = p.getFileName.toString
+        if (n.endsWith(".parquet") && !n.startsWith("_") &&
+            !n.startsWith(".") && Files.isRegularFile(p)) buf += p
+      }
+      buf.sortBy(_.getFileName.toString).toSeq
+    } finally stream.close()
+  }
+
+  /** The current version as the two segments a whole-dim merge wants:
+    * its history segment (None when it has none) and everything else.
+    * A version without one (a plain [[publish]], a purge rewrite, a
+    * bucketed or manifest version) is all "everything else". None on an
+    * empty store. */
+  def readSegments(): Option[(Option[DataFrame], DataFrame)] =
+    currentVersion().map { v =>
+      val hist = historyFiles(v).map(_.toString)
+      val live = dataFiles(rootPath.resolve(s"v$v")).map(_.toString)
+        .filterNot(hist.contains)
+      if (hist.isEmpty) (None, readVersion(v))
+      else if (live.isEmpty) { // every key deleted: no current row left
+        val h = spark.read.parquet(hist: _*)
+        (Some(h), h.limit(0))
+      } else {
+        // the history read reuses the live read's schema: one footer
+        // inference per batch, not one per segment
+        val l = spark.read.parquet(live: _*)
+        (Some(spark.read.schema(l.schema).parquet(hist: _*)), l)
+      }
+    }
+
+  /** Whole-dim publish of a dimension kept as a history segment plus
+    * current rows (the output of [[Scd2.mergeSegments]]), all inside the
+    * version dir before the pointer flip:
+    *
+    *  - `current` is rewritten into at most `defaultParallelism` files;
+    *  - with `carry`, the previous version's history files are
+    *    hard-linked forward (copied where links are unsupported) and
+    *    `closed` becomes ONE new history file, so write work is
+    *    O(current rows + closed rows) instead of O(every version ever
+    *    written);
+    *  - without `carry`, `closed` is taken to be the WHOLE history and is
+    *    written into `defaultParallelism` files (a widened schema: a
+    *    carried file without the new column could hide it from readers,
+    *    since Spark infers a flat dir's schema from one footer).
+    *
+    * A version holds at most `2 × defaultParallelism` history files: a
+    * publish that would exceed that folds its smallest carried files into
+    * the new one, down to `defaultParallelism` files. A previous version
+    * without a history segment carries nothing, so the seed publish, a
+    * purge rewrite, a migration back from bucketed and an empty store all
+    * go through here unchanged. */
+  def publishSegments(closed: DataFrame, current: DataFrame,
+                      carry: Boolean): Long =
+    Lease.withLease(root, "publishSegments") {
+      val n = spark.sparkContext.defaultParallelism
+      val prior = if (carry) currentVersion().map(historyFiles).getOrElse(Nil)
+                  else Nil
+      val fold = if (prior.size < 2 * n) Nil
+                 else prior.sortBy(Files.size(_)).take(prior.size + 1 - n)
+      val hist = if (fold.isEmpty) closed
+                 else closed.unionByName(spark.read.schema(closed.schema)
+                   .parquet(fold.map(_.toString): _*))
+      publishVersionDir { dir =>
+        // ONE write job, no shuffle on the carry path: the current rows
+        // coalesce into at most n tasks and the new history rows into
+        // one task of their own, so no file mixes the two, and the
+        // footers tell them apart afterwards
+        current.coalesce(n)
+          .unionByName(if (carry) hist.coalesce(1) else hist.repartition(n))
+          .write.mode("overwrite").parquet(dir)
+        val d = Paths.get(dir)
+        dataFiles(d).filter(onlyClosedRows).foreach { f =>
+          val name = f.getFileName.toString
+          val crc = d.resolve(s".$name.crc")
+          if (Files.exists(crc))
+            Files.move(crc, d.resolve(s".$HistoryPrefix$name.crc"))
+          Files.move(f, d.resolve(HistoryPrefix + name))
+        }
+        prior.filterNot(fold.contains).foreach { p =>
+          linkFile(p, d.resolve(p.getFileName.toString))
+        }
+      }
+    }
+
+  /** Does parquet file `f` hold rows, all of them closed
+    * (`is_current = false`)? Read from the footer's statistics, never
+    * the data; a file without the statistic counts as current, which is
+    * always safe (its closed rows move to history at the next merge). */
+  private def onlyClosedRows(f: java.nio.file.Path): Boolean = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString),
+        spark.sparkContext.hadoopConfiguration))
+    try r.getRecordCount > 0 && r.getFooter.getBlocks.asScala.forall { b =>
+      b.getRowCount == 0 || b.getColumns.asScala.exists { c =>
+        val st: org.apache.parquet.column.statistics.Statistics[_] =
+          c.getStatistics
+        c.getPath.toDotString == "is_current" && st != null &&
+          st.hasNonNullValue && st.genericGetMax == java.lang.Boolean.FALSE
+      }
+    } finally r.close()
+  }
+
   /** The hive partition columns of the CURRENT version dir (empty when
     * unpartitioned or no version) — a filesystem probe, NOT a schema
     * read: callers deciding between the incremental and full publish
@@ -300,16 +432,26 @@ class SnapshotStore(spark: SparkSession, root: String) {
       while (it.hasNext) {
         val p = it.next()
         val d = dst.resolve(p.getFileName.toString)
-        if (Files.isDirectory(p)) linkTree(p, d)
-        else
-          try Files.createLink(d, p)
-          catch {
-            case _: UnsupportedOperationException =>
-              Files.copy(p, d, StandardCopyOption.COPY_ATTRIBUTES); ()
-          }
+        if (Files.isDirectory(p)) linkTree(p, d) else link(p, d)
       }
     } finally stream.close()
   }
+
+  /** Hard-link one data file plus its `.crc` sidecar, when it has one —
+    * the history-segment carry-over of [[publishSegments]]. */
+  private def linkFile(src: java.nio.file.Path,
+                       dst: java.nio.file.Path): Unit = {
+    link(src, dst)
+    val crc = src.resolveSibling(s".${src.getFileName}.crc")
+    if (Files.exists(crc)) link(crc, dst.resolveSibling(s".${dst.getFileName}.crc"))
+  }
+
+  private def link(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
+    try { Files.createLink(dst, src); () }
+    catch {
+      case _: UnsupportedOperationException =>
+        Files.copy(src, dst, StandardCopyOption.COPY_ATTRIBUTES); ()
+    }
 
   /** Write the next version via `write` (handed the version dir path)
     * and atomically publish it — the shared pointer protocol behind
@@ -714,22 +856,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
   /** The queue's parquet data files (committer sidecars like `_SUCCESS`
     * excluded) — the sweep's consumption snapshot. */
   private def queueFiles(): Seq[java.nio.file.Path] =
-    if (!Files.exists(queueDir)) Seq.empty
-    else {
-      val stream = Files.list(queueDir)
-      try {
-        val it = stream.iterator()
-        val buf =
-          scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (n.endsWith(".parquet") && !n.startsWith("_") &&
-              !n.startsWith(".") && Files.isRegularFile(p)) buf += p
-        }
-        buf.toSeq
-      } finally stream.close()
-    }
+    if (!Files.exists(queueDir)) Seq.empty else dataFiles(queueDir)
 
   /** The hive partition columns a version dir was written with, in
     * nesting order — detected from the `col=value` directory levels, so

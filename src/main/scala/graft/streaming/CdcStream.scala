@@ -127,10 +127,15 @@ object CdcStream {
     * body of [[start]], public so both publish modes are directly
     * testable.
     *
-    * `dimBuckets <= 0` is the original whole-dim formulation: merge
-    * against the full snapshot, republish the full snapshot — simple,
-    * but per-batch cost is O(dim) (measured in bench/STREAM_r18.md),
-    * the wrong shape for a 100-TB dimension fed by hot-key trickle.
+    * `dimBuckets <= 0` is the whole-dim formulation: one flat snapshot
+    * dir, kept by [[SnapshotStore.publishSegments]] as a history segment
+    * (closed versions, hard-linked forward, never rewritten) plus the
+    * current rows. A batch reads its keys' metadata from both segments,
+    * rewrites only the current rows and appends the versions it closes
+    * as one new history file, so per-batch write work is O(current rows)
+    * rather than O(every version ever written); the metadata scan still
+    * reads the whole dim's key columns (bench/STREAM_r23.md). A batch
+    * that widens the schema rewrites both segments whole.
     *
     * `dimBuckets > 0` is the copy-on-write formulation: the snapshot
     * is hive-partitioned by [[BucketCol]] and a micro-batch touches
@@ -170,14 +175,21 @@ object CdcStream {
       // explicit whole-dim dial: a snapshot previously run bucketed is
       // MIGRATED BACK (bucket column dropped, next version unbucketed)
       // rather than crashing the merge on the unexpected column
-      val dim = store.read().map(_.drop(BucketCol))
-        .getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie))
-      val merged = Scd2.mergeBatch(Scd2.evolveSchema(dim, payload),
-        batch, key, ts, tie, opCol)
+      val (history, live) = store.readSegments()
+        .map { case (h, l) => (h, l.drop(BucketCol)) }
+        .getOrElse((None, Scd2.rebuild(payload.limit(0), key, ts, tie)))
+      val dim = history.fold(live)(_.unionByName(live))
+      val evolved = Scd2.evolveSchema(dim, payload)
+      // a widened schema carries nothing: both segments are rewritten
+      // whole, so no carried file lacks the new column
+      val widened = evolved.columns.length != dim.columns.length
+      val merged =
+        if (widened) Scd2.mergeSegments(None, evolved, batch, key, ts, tie, opCol)
+        else Scd2.mergeSegments(history, live, batch, key, ts, tie, opCol)
       // cleanup in finally: a throwing publish replays the batch, and
       // each failed attempt must not leave the routed-batch cache
       // resident (a crash-looping stream accumulates one per attempt)
-      try store.publish(merged.dim)
+      try store.publishSegments(merged.closed, merged.current, carry = !widened)
       finally merged.cleanup()
       return
     }

@@ -97,4 +97,72 @@ class Scd2PropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  /** A random change history cut into micro-batches: rows are
+    * (event_id, key, ts offset, op, value), batches are in arrival order,
+    * which is not event-time order, so later batches carry stale rows; ts
+    * offsets span a narrow range, so same-timestamp ties are common; and
+    * some rows are re-delivered verbatim in the same or a later batch. */
+  private val splitHistoryGen = for {
+    nBatches <- Gen.choose(1, 4)
+    n <- Gen.choose(1, 24)
+    rows <- Gen.listOfN(n, for {
+      key <- Gen.choose(1L, 6L)
+      tsOff <- Gen.choose(0L, 20L)
+      op <- Gen.oneOf("INSERT", "UPDATE", "UPDATE", "DELETE")
+      v <- Gen.choose(0, 99)
+      b <- Gen.choose(0, nBatches - 1)
+    } yield (key, tsOff, op, v.toDouble, b))
+    nRedeliver <- Gen.choose(0, 3)
+    redeliver <- Gen.listOfN(nRedeliver,
+      Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, nBatches - 1)))
+  } yield {
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val ids = rows.zipWithIndex.map { case ((k, t, o, v, b), i) =>
+      ((i.toLong, k, t0 + t * 1000, o, v), b)
+    }
+    val again = redeliver.map { case (i, b) =>
+      (ids(i)._1, math.max(b, ids(i)._2)) }
+    (0 until nBatches).map(b => (ids ++ again).filter(_._2 == b).map(_._1))
+  }
+
+  test("whole-dim store path equals the in-memory fold of Scd2.merge over " +
+    "random micro-batch splits; history files carry forward by inode") {
+    import graft.engine.SnapshotStore
+    import graft.streaming.CdcStream
+    import java.nio.file.Files
+    def ino(p: java.nio.file.Path) = Files.getAttribute(p, "unix:ino")
+    val (key, ts, tie, op) = ("user_id", "ts", "event_id", Some("operation_type"))
+    forAllSeeded(splitHistoryGen, 100) { batches =>
+      val store = new SnapshotStore(spark,
+        Files.createTempDirectory("prop_store").toString)
+      val empty = Scd2.rebuild(toDf(Nil).drop("operation_type"), key, ts, tie)
+      val expected = batches.map(toDf).foldLeft(empty) { (dim, b) =>
+        if (b.isEmpty) dim
+        else {
+          val prior = store.currentVersion().map(v => store.historyFiles(v)
+            .map(p => p.getFileName.toString -> ino(p))).getOrElse(Nil)
+          CdcStream.applyChangeBatch(store, b, key, ts, tie, op)
+          // at most 3 prior history files here, far below the fold bound,
+          // and the schema never widens: every file must carry by inode
+          val now = store.historyFiles(store.currentVersion().get)
+            .map(p => p.getFileName.toString -> ino(p)).toMap
+          prior.foreach { case (n, i) => assert(now.get(n).contains(i),
+            s"history file $n was rewritten instead of carried") }
+          Scd2.merge(dim, b, key, ts, tie, op).localCheckpoint()
+        }
+      }
+      store.currentVersion().foreach { v =>
+        val hist = store.historyFiles(v)
+        if (hist.nonEmpty)
+          assert(spark.read.parquet(hist.map(_.toString): _*)
+            .filter($"is_current").count() === 0L,
+            "the history segment holds closed rows only")
+        val cols = expected.columns.sorted.map(col).toIndexedSeq
+        assert(store.read().get.select(cols: _*)
+          .orderBy(key, "version_no").collect().toSeq ===
+          expected.select(cols: _*).orderBy(key, "version_no").collect().toSeq)
+      }
+    }
+  }
 }

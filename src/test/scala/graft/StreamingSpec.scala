@@ -1264,6 +1264,41 @@ class StreamingSpec extends AnyFunSuite {
       "order_key", "cdc_timestamp", "change_id", None)
     assert(!store2.read().get.columns.contains(CdcStream.BucketCol))
     assert(store2.read().get.count() === 5L)
+    // the migration back split key 1's closed version into the history
+    // segment; the next whole-dim batch carries that file by inode, a
+    // bucketed batch reads it like any other file, and a second
+    // migration back agrees with the in-memory fold of every batch
+    def ino(p: java.nio.file.Path) = Files.getAttribute(p, "unix:ino")
+    val migrated = store2.historyFiles(store2.currentVersion().get)
+    assert(migrated.nonEmpty,
+      "the migration back must send its closed rows to the history segment")
+    CdcStream.applyChangeBatch(store2, b1((6L, 2L, "2024-05-01 00:00:00")),
+      "order_key", "cdc_timestamp", "change_id", None)
+    val carried = store2.historyFiles(store2.currentVersion().get)
+      .map(p => p.getFileName -> ino(p)).toMap
+    migrated.foreach(p => assert(carried.get(p.getFileName).contains(ino(p)),
+      s"history file ${p.getFileName} must be carried by hard link"))
+    CdcStream.applyChangeBatch(store2, b1((7L, 3L, "2024-06-01 00:00:00")),
+      "order_key", "cdc_timestamp", "change_id", None, dimBuckets = 4)
+    CdcStream.applyChangeBatch(store2, b1((8L, 1L, "2024-07-01 00:00:00")),
+      "order_key", "cdc_timestamp", "change_id", None)
+    val folded = Seq(
+      b1((1L, 1L, "2024-01-01 00:00:00"), (2L, 2L, "2024-01-01 00:00:00")),
+      b1((3L, 3L, "2024-02-01 00:00:00")), b1((4L, 1L, "2024-03-01 00:00:00")),
+      b1((5L, 5L, "2024-04-01 00:00:00")), b1((6L, 2L, "2024-05-01 00:00:00")),
+      b1((7L, 3L, "2024-06-01 00:00:00")), b1((8L, 1L, "2024-07-01 00:00:00")))
+      .tail.foldLeft(Scd2.rebuild(
+        b1((1L, 1L, "2024-01-01 00:00:00"), (2L, 2L, "2024-01-01 00:00:00")),
+        "order_key", "cdc_timestamp", "change_id")) { (d, b) =>
+        Scd2.merge(d, b, "order_key", "cdc_timestamp", "change_id")
+          .localCheckpoint()
+      }
+    val got = store2.read().get
+    assert(!got.columns.contains(CdcStream.BucketCol))
+    val fc = folded.columns.sorted.map(col).toIndexedSeq
+    assert(got.select(fc: _*).orderBy("order_key", "version_no").collect().toSeq ===
+      folded.select(fc: _*).orderBy("order_key", "version_no").collect().toSeq,
+      "whole-dim → bucketed → whole-dim must agree with the in-memory fold")
     // and publishIncremental itself refuses a layout it cannot carry from
     assertThrows[IllegalArgumentException] {
       val s3 = new SnapshotStore(spark,
@@ -2215,6 +2250,199 @@ class StreamingSpec extends AnyFunSuite {
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$idx/tombstones")))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+  }
+
+  // ── whole-dim history segment: carry, widening, bound, lifecycle ──
+
+  private def histBatch(rows: (Long, Long, String, String)*) =
+    rows.toDF("change_id", "order_key", "cdc_timestamp", "status")
+      .withColumn("cdc_timestamp", $"cdc_timestamp".cast("timestamp"))
+
+  private def applyWhole(store: SnapshotStore,
+                         b: org.apache.spark.sql.DataFrame): Unit =
+    CdcStream.applyChangeBatch(store, b, "order_key", "cdc_timestamp",
+      "change_id", None)
+
+  /** The current version's history files, name → inode. */
+  private def histInodes(store: SnapshotStore): Map[String, AnyRef] =
+    store.historyFiles(store.currentVersion().get).map { p =>
+      p.getFileName.toString -> Files.getAttribute(p, "unix:ino")
+    }.toMap
+
+  /** The in-memory fold of `Scd2.merge` over `batches`, from an empty dim. */
+  private def mergeFold(batches: Seq[org.apache.spark.sql.DataFrame]) =
+    batches.foldLeft(Scd2.rebuild(batches.head.limit(0), "order_key",
+      "cdc_timestamp", "change_id")) { (d, b) =>
+      Scd2.merge(d, b, "order_key", "cdc_timestamp", "change_id")
+        .localCheckpoint()
+    }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+                       b: org.apache.spark.sql.DataFrame): Unit = {
+    val cs = b.columns.sorted.map(col).toIndexedSeq
+    assert(a.select(cs: _*).orderBy("order_key", "version_no").collect().toSeq ===
+      b.select(cs: _*).orderBy("order_key", "version_no").collect().toSeq)
+  }
+
+  /** Seed 8 keys, then close keys 1-4 and 5-8 in two batches. */
+  private def carriedBatches = Seq(
+    histBatch((1L to 8L).map(k => (k, k, "2024-01-01 00:00:00", "new")): _*),
+    histBatch((1L to 4L).map(k => (10 + k, k, "2024-02-01 00:00:00", "paid")): _*),
+    histBatch((5L to 8L).map(k => (20 + k, k, "2024-03-01 00:00:00", "paid")): _*))
+
+  private def carriedStore(name: String) = {
+    val store = new SnapshotStore(spark,
+      Files.createTempDirectory(name).toString)
+    val batches = carriedBatches
+    batches.foreach(applyWhole(store, _))
+    (store, batches)
+  }
+
+  test("whole-dim publish carries closed history by hard link and rewrites " +
+    "only the current rows; vacuum keeps carried links readable") {
+    val store = new SnapshotStore(spark,
+      Files.createTempDirectory("hs_carry").toString)
+    val Seq(b0, b1, b2) = carriedBatches
+    applyWhole(store, b0)
+    assert(store.historyFiles(store.currentVersion().get).isEmpty,
+      "an insert-only batch closes nothing, so it writes no history file")
+    applyWhole(store, b1)
+    val v1 = store.currentVersion().get
+    val h1 = histInodes(store)
+    assert(h1.size === 1)
+    assert(spark.read.parquet(store.historyFiles(v1).map(_.toString): _*)
+      .filter($"is_current").count() === 0L, "history holds closed rows only")
+    applyWhole(store, b2)
+    val v2 = store.currentVersion().get
+    val h2 = histInodes(store)
+    assert(h2.size === 2)
+    h1.foreach { case (n, i) => assert(h2.get(n).contains(i),
+      s"history file $n must reappear with the same inode") }
+    sameRows(store.read().get, mergeFold(Seq(b0, b1, b2)))
+    // vacuum drops v0 and v1, whose dir held the first history file's
+    // original name; v2's link to the same inode keeps it readable
+    assert(store.vacuum(keepLast = 1).toSet === Set(0L, v1))
+    assert(histInodes(store) === h2)
+    sameRows(store.readVersion(v2), mergeFold(Seq(b0, b1, b2)))
+  }
+
+  test("a widening batch on a carried store rewrites both segments, then " +
+    "carrying resumes") {
+    val (store, batches) = carriedStore("hs_widen")
+    val before = histInodes(store)
+    val wide = histBatch((30L, 1L, "2024-04-01 00:00:00", "shipped"))
+      .withColumn("region", lit("eu"))
+    applyWhole(store, wide)
+    val after = histInodes(store)
+    assert(after.values.toSet.intersect(before.values.toSet).isEmpty,
+      "a widened publish must not carry a file without the new column")
+    val v = store.currentVersion().get
+    val dir = java.nio.file.Paths.get(
+      store.historyFiles(v).head.getParent.toString)
+    val ls = Files.list(dir)
+    try ls.iterator().forEachRemaining { p =>
+      if (p.getFileName.toString.endsWith(".parquet"))
+        assert(spark.read.parquet(p.toString).columns.contains("region"),
+          s"widened publish left a file without the new column: $p")
+    } finally ls.close()
+    val dim = store.read().get
+    assert(dim.filter($"order_key" === 1L && $"is_current")
+      .select("region").head().getString(0) === "eu",
+      "the new version carries the new column")
+    assert(dim.filter(!$"is_current").filter($"region".isNotNull).count() === 0L,
+      "history reads null for the new column")
+    val next = histBatch((31L, 2L, "2024-05-01 00:00:00", "shipped"))
+      .withColumn("region", lit("us"))
+    applyWhole(store, next)
+    after.foreach { case (n, i) => assert(histInodes(store).get(n).contains(i),
+      "carrying resumes after the widening batch") }
+    val expected = mergeFold(batches.map(_.withColumn("region",
+      lit(null).cast("string"))) ++ Seq(wide, next))
+    sameRows(store.read().get, expected)
+  }
+
+  test("history file count stays within 2 × defaultParallelism by folding " +
+    "the smallest files; the dim equals the merge fold") {
+    val dp = spark.sparkContext.defaultParallelism
+    val store = new SnapshotStore(spark,
+      Files.createTempDirectory("hs_bound").toString)
+    val seed = histBatch((1L to 4L).map(k => (k, k, "2024-01-01 00:00:00", "s0")): _*)
+    // every batch closes one version, so every batch adds a history file
+    val batches = seed +: (1 to 6 * dp).map { i =>
+      histBatch((100L + i, 1L + i % 4, f"2024-02-01 00:${i / 60}%02d:${i % 60}%02d",
+        s"s$i"))
+    }
+    var folds = 0
+    batches.foreach { b =>
+      val prior = store.currentVersion().map(_ => histInodes(store))
+        .getOrElse(Map.empty)
+      val sizes = store.currentVersion().map(v => store.historyFiles(v)
+        .map(p => p.getFileName.toString -> Files.size(p)).toMap)
+        .getOrElse(Map.empty[String, Long])
+      applyWhole(store, b)
+      val now = histInodes(store)
+      assert(now.size <= 2 * dp, s"history files ${now.size} > ${2 * dp}")
+      val dropped = prior.keySet -- now.keySet
+      if (dropped.nonEmpty) {
+        folds += 1
+        assert(prior.size === 2 * dp && now.size === dp,
+          "a fold happens only at the bound and folds down to dp files")
+        val largestFolded = dropped.map(sizes).max
+        assert((prior.keySet -- dropped).forall(sizes(_) >= largestFolded),
+          "a fold takes the smallest history files")
+      }
+      (prior.keySet -- dropped).foreach(n => assert(now.get(n) === prior.get(n)))
+    }
+    assert(folds >= 2, s"6 × dp batches must fold at least twice, got $folds")
+    sameRows(store.read().get, mergeFold(batches))
+  }
+
+  test("purgeKeys over a carried store leaves no residual in any version; " +
+    "the next batch re-splits") {
+    val (store, batches) = carriedStore("hs_purge")
+    val rewritten = store.purgeKeys(Seq(3L, 6L).toDF("order_key"), "order_key")
+    assert(rewritten.nonEmpty)
+    store.versions().foreach { v =>
+      assert(store.readVersion(v).filter($"order_key".isin(3L, 6L))
+        .count() === 0L, s"v$v still serves a purged key")
+    }
+    assert(store.historyFiles(store.currentVersion().get).isEmpty,
+      "a purge rewrite is a plain publish, without a history segment")
+    val next = histBatch((40L, 1L, "2024-04-01 00:00:00", "shipped"))
+    applyWhole(store, next)
+    assert(store.historyFiles(store.currentVersion().get).size === 1,
+      "the next whole-dim batch re-splits the purged version")
+    sameRows(store.read().get, mergeFold(batches :+ next)
+      .filter(!$"order_key".isin(3L, 6L)))
+  }
+
+  test("a torn whole-dim publish (files and links written, pointer not " +
+    "moved) retried gives no duplicates and leaves no temp dir") {
+    val (store, batches) = carriedStore("hs_torn")
+    val root = store.historyFiles(store.currentVersion().get).head
+      .getParent.getParent
+    val cur = store.currentVersion().get
+    // a directory where the pointer's temp file goes makes the publish
+    // fail after the version dir is fully written
+    val blocker = root.resolve(s"_CURRENT.tmp${cur + 1}")
+    Files.createDirectories(blocker.resolve("x"))
+    val next = histBatch((50L, 2L, "2024-04-01 00:00:00", "shipped"))
+    intercept[java.io.IOException](applyWhole(store, next))
+    assert(store.currentVersion().contains(cur), "the pointer must not move")
+    assert(store.historyFiles(cur + 1).size === 3,
+      "the torn version dir holds its links and its new history file")
+    Files.delete(blocker.resolve("x")); Files.delete(blocker)
+    applyWhole(store, next)
+    assert(store.currentVersion().contains(cur + 1))
+    val dim = store.read().get
+    assert(Scd2.duplicateCurrentKeys(dim, "order_key").count() === 0L)
+    sameRows(dim, mergeFold(batches :+ next))
+    val walk = Files.walk(root)
+    try walk.iterator().forEachRemaining { p =>
+      val n = p.getFileName.toString
+      assert(n != "_hist" && !n.startsWith("_CURRENT.tmp"),
+        s"a temp was left behind: $p")
+    } finally walk.close()
   }
 }
 
