@@ -80,7 +80,7 @@ object ScaleDeletion {
             lit(null).cast("string").as("text"), lit("DELETE").as("op"))
         val (tAbsorb, _) = time {
           graft.streaming.CdcStream.screenAndAbsorb(spark, purge, 0L, idx,
-            ckpt, (_, _) => ())
+            ckpt, graft.streaming.CdcStream.Screen.fingerprint, (_, _) => ())
         }
         val probe = docs.filter(col("doc_id") % 3 === 1)
           .limit(50).select(col("doc_id") + 900000000L as "doc_id", col("text"))

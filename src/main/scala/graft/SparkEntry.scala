@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Caches, Cdc, Scd2, SnapshotStore, Stats, Tables, ZOrder}
+import graft.engine.{Bounded, Caches, Cdc, Scd2, SnapshotStore, Stats, Tables, ZOrder}
 import graft.ops.{Curation, DedupOps, Multimodal, PurgeAudit, SamplingOps, SimilarityOps, TextOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (★ inventory) and §7.
@@ -1881,12 +1881,11 @@ object SparkEntry {
     // thunks is already thread-safe (per-key StoredIndexes build locks,
     // TrieMap memos, CacheManager plan lookup).
     def concurrently(thunks: (() => Any)*): Unit = {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
       // bounded await: a hung build fails the warm phase with the stage
-      // named in the stack, instead of wedging its chain forever
-      thunks.map(t => Future(t())).foreach(Await.result(_, 30.minutes))
+      // named in the stack (and is cancelled), instead of wedging its
+      // chain forever
+      Bounded.awaitAll(s, thunks)
+      ()
     }
     val docs = Tables.documents(s, dir)
     val chains = Seq[(String, () => Unit)](

@@ -40,6 +40,15 @@ object PurgeAudit {
       s"stack(${ms.length}, $pairs) AS (metric, value)")
   }
 
+  /** An index key column, unchanged where non-null; a null raises.
+    * Keys are non-null by index construction, and an index writer that
+    * ever emits a null must fail the audit loudly: a struct with a null
+    * field is a distinct value that the two-column countDistinct would
+    * skip, so a null would silently move the counts off the oracle's. */
+  private def key(name: String): Column =
+    coalesce(col(name), raise_error(lit(s"purge audit: null index key $name")))
+      .as(name)
+
   /** Audit the stored-index families against their deletion
     * predicates. Each `*Deleted` column is the membership test of the
     * purged id set, evaluated against the family's own key column
@@ -60,16 +69,16 @@ object PurgeAudit {
     // Tag-union the family's two screened scans into ONE aggregate pass
     // (guide §2.6 — the r21 shape ran sizes-agg ⨯ postings-agg as two
     // jobs plus a crossJoin): conditional distincts over the tagged
-    // union compute the identical values — countDistinct skips nulls,
-    // and the keys are non-null by index construction — in a single
-    // exchange. The struct-valued distinct equals the two-column
-    // distinct for non-null fields (oracle-pinned).
+    // union compute the identical values in a single exchange. The
+    // struct-valued distinct equals the two-column distinct only for
+    // non-null fields (oracle-pinned), so the union's keys go through
+    // [[key]], which raises on a null.
     val fp = () => melt("fingerprint",
       DedupOps.liveFingerprintSizes(spark, fingerprintPath)
-        .select(lit("s").as("_t"), col("doc_id"), lit(null).cast("long").as("fp"),
-          fingerprintDeleted.as("_del"))
+        .select(lit("s").as("_t"), key("doc_id"),
+          lit(null).cast("long").as("fp"), fingerprintDeleted.as("_del"))
         .unionByName(DedupOps.liveFingerprintPostings(spark, fingerprintPath)
-          .select(lit("p").as("_t"), col("doc_id"), col("fp"),
+          .select(lit("p").as("_t"), key("doc_id"), key("fp"),
             fingerprintDeleted.as("_del")))
         .agg(
           countDistinct(when(col("_t") === "s", col("doc_id"))).as("live_docs"),
@@ -94,7 +103,7 @@ object PurgeAudit {
         .select(col("n_docs"), col("sum_dl")).head()
       melt("bm25",
       TextOps.liveBm25Postings(spark, bm25Path)
-        .select(lit("p").as("_t"), col("term"), col("doc_id"),
+        .select(lit("p").as("_t"), key("term"), key("doc_id"),
           bm25Deleted.as("_del"), lit(null).cast("long").as("df"))
         .unionByName(TextOps.bm25Lexicon(spark, bm25Path)
           .select(lit("l").as("_t"), lit(null).cast("string").as("term"),
@@ -151,14 +160,10 @@ object PurgeAudit {
     // materialized rows; everything is recomputed from the index roots
     // on every invocation — no cross-run memo.
     val fams = Seq(fp, ah, ivf, bm, voc) ++ pq ++ ivfpq ++ dv
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration._
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // BOUNDED await (was Inf through r21): one hung family job must
-    // fail the audit loudly, not wedge the compliance tick forever
-    // (r21 verdict #4)
-    fams.map(f => Future(f().localCheckpoint()))
-      .map(Await.result(_, 30.minutes))
+    // BOUNDED await: one hung family job must fail the audit loudly and
+    // be cancelled, not wedge the compliance tick forever
+    graft.engine.Bounded
+      .awaitAll(spark, fams.map(f => () => f().localCheckpoint()))
       .reduce(_ unionByName _)
       .orderBy("family", "metric")
   }

@@ -781,13 +781,18 @@ object SimilarityOps {
 
   /** Per-key in-flight training locks: concurrent IDENTICAL trainings
     * (same memo keys) serialize so the second caller memo-hits instead
-    * of duplicating the jobs; distinct trainings never contend. The map
-    * is bounded by the number of distinct trainings a session requests
-    * (a handful per corpus). */
-  private val trainingLocks =
+    * of duplicating the jobs; distinct trainings never contend. An entry
+    * lives only while its training is in flight: the holder removes it
+    * when done (only if it is still its own lock), and a caller arriving
+    * after that finds the memo filled — so a long-lived service session
+    * does not grow the map with every training it ever ran. */
+  private[graft] val trainingLocks =
     new java.util.concurrent.ConcurrentHashMap[AnyRef, AnyRef]()
-  private def trainingLock[T](key: AnyRef)(body: => T): T =
-    trainingLocks.computeIfAbsent(key, _ => new AnyRef).synchronized(body)
+  private[graft] def trainingLock[T](key: AnyRef)(body: => T): T = {
+    val lock = trainingLocks.computeIfAbsent(key, _ => new AnyRef)
+    try lock.synchronized(body)
+    finally trainingLocks.remove(key, lock)
+  }
 
   /** The m per-subspace slice frames of a (vec_id, v) table, each
     * `ensureCached` on the CALLING thread — the ONE definition shared

@@ -317,102 +317,93 @@ object CdcStream {
       }
   }
 
-  /** Streaming incremental dedup — the screen-and-absorb loop a
-    * continuous ingestion pipeline runs: each micro-batch of documents is
-    * (1) screened against the stored fingerprint index
-    * ([[graft.ops.DedupOps.queryFingerprintIndex]] — broadcast probe,
-    * the index never shuffles), with the near-dup audit table handed to
-    * `onHits` (route to a quarantine sink, a metrics log, or a filter),
-    * then (2) absorbed into the index
-    * ([[graft.ops.DedupOps.mergeFingerprintIndex]] — append-only), so
-    * LATER batches are screened against this one too. One file ≙ one
-    * micro-batch; the checkpoint makes file delivery exactly-once.
-    * Crash between screen and absorb replays the whole batch on restart:
-    * re-screen is idempotent, and the re-merge is guarded by the
-    * [[graft.engine.Ledger]]'s (stream, batch-id) check — the same
-    * protocol the SCD2 loader uses
-    * (/root/reference/src/warehouse/scd2_loader.py:501-538) — so a
-    * replayed batch is re-absorbed only in the residual window between
-    * merge start and ledger append (see [[screenAndAbsorb]] for its
-    * width and why replays inside it are tolerated).
+  /** The one file-stream launcher every streamed index family shares:
+    * one JSON file ≙ one micro-batch (`maxFilesPerTrigger = 1`, the
+    * replay granularity the ledger protocol keys on), the checkpoint
+    * making file delivery exactly-once, drained with `AvailableNow`.
+    * `step` is the family's absorb followed by its own ticks; a tick
+    * runs AFTER the batch is fully applied and ledgered, so a crash
+    * inside it re-runs only the (idempotent) tick, never the merge.
     *
-    * Long-running streams accumulate append debt in the index (one
-    * postings file per batch per partition). `maintainEvery` = N > 0
-    * runs [[maintainFingerprintIndex]] every N batches INSIDE the
-    * trigger loop — between batches, never concurrent with a merge,
-    * which is the single-writer discipline Compaction requires (merge /
-    * compact / vacuum are scheduled, never concurrent; an external
-    * compactor racing this stream's merges would lose appended rows to
-    * the next vacuum, which the merge-side pointer guard turns into a
-    * loud replayable failure rather than silent loss). Periodic, not
-    * per batch: compaction rewrites the whole table, so inlining it
-    * every batch would make total write work quadratic in stream
-    * lifetime; every N batches it amortizes to linear. 0 disables the
-    * tick — then schedule [[maintainFingerprintIndex]] yourself at
-    * moments the stream is quiesced (stopped, or drained between
-    * AvailableNow runs). */
-  def dedupScreenStream(spark: SparkSession, inGlob: String,
-                        checkpointDir: String, schema: StructType,
-                        indexPath: String,
-                        onHits: (DataFrame, Long) => Unit,
-                        maintainEvery: Int = 0,
-                        maintainMaxFiles: Int = 8): StreamingQuery = {
-    // re-seed the replay memo from the ledger at stream start: a prior
-    // stream in this JVM may have run against an index since rebuilt at
-    // the same path (ledger wiped, batch ids restarted) — a stale
-    // high-water would silently skip absorbing the new batches
-    absorbedHighWater.remove((indexPath, checkpointDir))
+    * The replay memo is re-seeded from the ledger at stream start: a
+    * prior stream in this JVM may have run against an index since
+    * rebuilt at the same `root` (ledger wiped, batch ids restarted) — a
+    * stale high-water would silently skip absorbing the new batches. */
+  private def launch(spark: SparkSession, inGlob: String,
+                     checkpointDir: String, schema: StructType,
+                     root: String)(
+                     step: (DataFrame, Long) => Unit): StreamingQuery = {
+    absorbedHighWater.remove((root, checkpointDir))
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
       .json(inGlob)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        screenAndAbsorb(spark, batch, id, indexPath, checkpointDir, onHits)
-        // the maintenance tick runs AFTER the batch is fully applied
-        // and ledgered, so a crash inside maintenance re-runs only
-        // maintenance (idempotent: triggers re-evaluate debt), never
-        // the merge
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainFingerprintIndex(spark, indexPath, maintainMaxFiles)
-      }
+      .foreachBatch(step)
       .trigger(Trigger.AvailableNow())
       .start()
   }
 
-  /** One scheduled-maintenance tick for a streamed-into fingerprint
-    * index — the glue the lifecycle verbs need to actually run beside a
-    * live stream (the reference runs its GC inline on a cadence the
-    * same way, /root/reference/src/cdc/log_extractor.py:212-227,266-267):
+  /** The between-batches tick cadence: every `n`-th micro-batch after
+    * the first; `n <= 0` disables the tick. Periodic, not per batch:
+    * compaction rewrites the whole table, so inlining it every batch
+    * would make total write work quadratic in stream lifetime; every N
+    * batches it amortizes to linear. */
+  private def due(n: Int, id: Long): Boolean = n > 0 && id > 0 && id % n == 0
+
+  /** Streaming incremental dedup — the screen-and-absorb loop a
+    * continuous ingestion pipeline runs ([[screenAndAbsorb]] with
+    * [[Screen.fingerprint]]): each micro-batch of documents is screened
+    * against the stored fingerprint index, the near-dup audit table
+    * handed to `onHits` (route to a quarantine sink, a metrics log, or a
+    * filter), then absorbed into the index so LATER batches are screened
+    * against this one too.
     *
-    *  1. vacuum — reclaims versions superseded by the PREVIOUS tick's
-    *     compaction, i.e. at least one full maintenance window old, so
-    *     any reader planned against them has long finished its scan
-    *     (the compact-now / vacuum-next-tick split is the same
-    *     publish/vacuum posture as SnapshotStore);
-    *  2. compact — rewrites tables whose per-partition append debt
-    *     exceeds the threshold, behind the atomic pointer swap (no-op
-    *     below it — calling this tick too often costs two file listings,
-    *     not a rewrite);
-    *  3. the idempotency ledger gets the same treatment (it appends one
+    * Long-running streams accumulate append debt in the index (one
+    * postings file per batch per partition). `maintainEvery` = N > 0
+    * runs [[maintainStreamedIndex]] every N batches INSIDE the trigger
+    * loop — between batches, never concurrent with a merge, which is the
+    * single-writer discipline Compaction requires (merge / compact /
+    * vacuum are scheduled, never concurrent; an external compactor
+    * racing this stream's merges would lose appended rows to the next
+    * vacuum, which the merge-side pointer guard turns into a loud
+    * replayable failure rather than silent loss). 0 disables the tick —
+    * then schedule the maintenance yourself at moments the stream is
+    * quiesced (stopped, or drained between AvailableNow runs). */
+  def dedupScreenStream(spark: SparkSession, inGlob: String,
+                        checkpointDir: String, schema: StructType,
+                        indexPath: String,
+                        onHits: (DataFrame, Long) => Unit,
+                        maintainEvery: Int = 0,
+                        maintainMaxFiles: Int = 8): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, indexPath) { (batch, id) =>
+      screenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
+        Screen.fingerprint, onHits)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "fingerprint", maintainMaxFiles)
+    }
+
+  /** One scheduled-maintenance tick for ANY streamed index family — the
+    * glue the lifecycle verbs need to actually run beside a live stream
+    * (the reference runs its GC inline on a cadence the same way,
+    * `log_extractor.py:212-227,266-267`):
+    *
+    *  1. the Compaction verb for `kind`: vacuum (reclaims versions
+    *     superseded by the PREVIOUS tick's compaction, i.e. at least one
+    *     full maintenance window old, so any reader planned against them
+    *     has long finished its scan), sidecar collapse, then a
+    *     debt-triggered compact behind the atomic pointer swap (no-op
+    *     below the threshold — calling this tick too often costs two
+    *     file listings, not a rewrite);
+    *  2. the idempotency ledger gets the same treatment (it appends one
     *     tiny file per batch forever).
     *
+    * Every stream's `maintainEvery` wiring lands here, so a fix to the
+    * tick's ordering or error handling reaches every family at once.
     * MUST run while no merge is in flight on `indexPath` — from the
-    * stream's own foreachBatch (between batches, as `maintainEvery`
-    * wires it), or with the stream stopped/drained. */
-  def maintainFingerprintIndex(spark: SparkSession, indexPath: String,
-                               maxFilesPerPartition: Int = 8): Unit =
-    maintainStreamedIndex(spark, indexPath, "fingerprint",
-      maxFilesPerPartition)
-
-  /** The kind-generic form of [[maintainFingerprintIndex]] — one
-    * maintenance tick for ANY streamed index family: the Compaction
-    * verb (vacuum → sidecar collapse → debt-triggered compact) plus the
-    * stream's own idempotency-ledger vacuum + compact. Both screening
-    * streams' `maintainEvery` wiring lands here, so a fix to the tick's
-    * ordering or error handling reaches every family at once. Same
-    * single-writer requirement as the Compaction verbs. */
+    * stream's own foreachBatch (between batches), or with the stream
+    * stopped/drained. */
   def maintainStreamedIndex(spark: SparkSession, indexPath: String,
                             kind: String,
                             maxFilesPerPartition: Int = 8,
@@ -425,74 +416,128 @@ object CdcStream {
     ()
   }
 
-  /** One screen-and-absorb micro-batch — the foreachBatch body of
-    * [[dedupScreenStream]], public so the replay protocol is directly
-    * testable. `streamId` scopes the idempotency ledger rows (two
-    * streams feeding one index must not collide on micro-batch ids);
-    * [[dedupScreenStream]] passes its checkpoint dir.
+  /** What [[screenAndAbsorb]] needs to know about one screened index
+    * family: its maintenance `kind`, the `key` column a batch row (and a
+    * key-only DELETE row) carries, the `hitCol` naming the indexed key in
+    * the screen's hits, and the family's verbs — `prepare` (turns the
+    * batch's upserts into what the index stores), `query` (spark, index,
+    * prepared upserts → hits), `tombstone` and `merge`. */
+  final case class Screen(kind: String, key: String, hitCol: String,
+                          prepare: DataFrame => DataFrame,
+                          query: (SparkSession, String, DataFrame) => DataFrame,
+                          tombstone: (DataFrame, String) => Unit,
+                          merge: (DataFrame, String) => Unit)
+
+  object Screen {
+    import graft.ops.{DedupOps, Multimodal, SimilarityOps}
+
+    /** Text near-dups: the batch broadcast-probes the stored fingerprint
+      * index ([[DedupOps.queryFingerprintIndex]] — the index never
+      * shuffles); hits are (doc_new, doc_old, n_shared, containment). */
+    val fingerprint: Screen = Screen("fingerprint", "doc_id", "doc_old",
+      identity, (s, p, adds) => DedupOps.queryFingerprintIndex(s, p, adds),
+      DedupOps.tombstoneFingerprintIndex, DedupOps.mergeFingerprintIndex(_, _))
+
+    /** Embedding near-dups against the stored IVF index with the BATCH
+      * probe ([[SimilarityOps.queryIvfIndexBatch]] — the whole batch
+      * shares ONE dynamically-partition-pruned cell scan): hits are rows
+      * pairing with an indexed vector at `cosine ≥ minCosine`. Absorbed
+      * against frozen centroids ([[SimilarityOps.mergeIvfIndex]]). */
+    def ivf(topK: Int, minCosine: Double, nprobe: Int): Screen =
+      Screen("ivf", "vec_id", "vec_id", identity,
+        (s, p, adds) => SimilarityOps.queryIvfIndexBatch(s, p, adds, topK,
+          nprobe).filter(col("cosine") >= minCosine),
+        SimilarityOps.tombstoneAnnIndex, SimilarityOps.mergeIvfIndex)
+
+    /** [[ivf]]'s quantized sibling: pruned ADC over the stored IVF-PQ
+      * index (nprobe cells + byte codes — the screen never reads a float
+      * vector), absorbed against both frozen control planes. ADC is a
+      * DISTANCE, so hits are rows with `adc_dist <= maxAdc` (an exact
+      * copy of an indexed vector screens at its quantization distortion,
+      * not 0 — size the threshold from the index's meta distortion). */
+    def ivfPq(topK: Int, maxAdc: Double, nprobe: Int): Screen =
+      Screen("ivfpq", "vec_id", "vec_id", identity,
+        (s, p, adds) => SimilarityOps.queryIvfPqIndexBatch(s, p, adds, topK,
+          nprobe).filter(col("adc_dist") <= maxAdc),
+        SimilarityOps.tombstoneAnnIndex, SimilarityOps.mergeIvfPqIndex)
+
+    /** Image near-dups: the batch's (doc_id, payload) rows — payload
+      * base64 text (the JSON file transport) or binary — are decoded and
+      * signature-hashed ONCE ([[Multimodal.imageAHash]], cached for the
+      * batch's scope so screen and absorb share it), screened against
+      * the stored banded hash index at Hamming ≤ `maxDist`
+      * ([[DedupOps.queryHashIndex]]) and absorbed as band-row appends. */
+    def image(maxDist: Int): Screen =
+      Screen("ahash", "doc_id", "doc_old",
+        adds => graft.engine.Caches.ensureCached(Multimodal.imageAHash(
+          if (adds.schema("payload").dataType ==
+              org.apache.spark.sql.types.StringType)
+            adds.select(col("doc_id"), unbase64(col("payload")).as("payload"))
+          else adds.select(col("doc_id"), col("payload")))),
+        (s, p, sk) => DedupOps.queryHashIndex(s, sk, p, maxDist),
+        DedupOps.tombstoneHashIndex, DedupOps.mergeHashIndex)
+  }
+
+  /** One screen-and-absorb micro-batch for the `screen` family — the
+    * foreachBatch body of the four screening streams, public so the
+    * replay protocol is directly testable. `streamId` scopes the
+    * idempotency ledger rows (two streams feeding one index must not
+    * collide on micro-batch ids); the streams pass their checkpoint dir.
+    *
+    * Op-aware: op='DELETE' rows (key only) route to the family's
+    * tombstone verb — the CDC deletion path, end-to-end in the stream —
+    * under the SAME ledger entry as the batch's merge. Hits against
+    * keys this very batch deletes are not real matches (the indexed row
+    * is gone the moment the batch commits), so they are screened out
+    * before `onHits` sees them. The delete→re-insert UPDATE (same batch
+    * or a later one) is handled by serving pending deletions inline:
+    * when the batch's merge collides with a tombstone, the maintenance
+    * tick runs first (between batches — the single-writer-safe moment),
+    * physically removing the old rows and clearing the tombstones, and
+    * only then does the merge land. Raising instead would crash-loop the
+    * stream: the checkpointed batch replays identically forever and the
+    * scheduled tick can never run behind a failing batch.
     *
     * Replay safety: foreachBatch re-delivers a batch with the SAME id
     * after a crash before checkpoint commit. The screen is read-only
     * (always re-run — `onHits` sinks must themselves be idempotent or
     * keyed by batch id, the standard foreachBatch contract), but the
-    * merge appends postings, so it is applied once per (streamId, id):
-    * ledger check before, ledger append after. The residual window —
-    * crash after the merge STARTS but before the ledger append — spans
-    * the whole multi-write merge (mergeFingerprintIndex is three
-    * separate writes, see its doc), analogous to the reference's window
-    * between DB commit and `.processed_files` append
-    * (scd2_loader.py:523-538). A crash inside it replays the full merge
-    * on restart; the duplicates that can leave behind are exact-row
-    * duplicates that queryFingerprintIndex drops at candidate level, so
-    * screening answers survive the replay unchanged (only the advisory
-    * hotListDrift signal can overstate).
+    * merge appends, so it is applied once per (streamId, id) by
+    * [[absorbOnce]]. The residual window — crash after the merge STARTS
+    * but before the ledger append — spans the whole multi-write merge
+    * (mergeFingerprintIndex is three separate writes, see its doc),
+    * analogous to the reference's window between DB commit and
+    * `.processed_files` append (scd2_loader.py:523-538). A crash inside
+    * it replays the full merge on restart; the duplicates that can leave
+    * behind are exact-row duplicates every family's query drops at
+    * candidate level (and its compaction removes), so screening answers
+    * survive the replay unchanged.
     *
-    * The ledger is CONSULTED (a Spark job over the whole ledger table)
-    * only on this process's first batch per (index, stream) — micro-
-    * batch ids are monotonic per checkpoint, so after seeding the memo
-    * with the ledger's high-water id, replay detection is an in-memory
-    * compare. Without the memo, the hot path paid a full ledger scan
-    * per trigger, growing with stream lifetime. */
+    * Per-batch cache scope: the screen/merge ops register the batch's
+    * derived tables; they are released at batch end so a long-running
+    * stream stays flat. `onHits` must therefore consume its DataFrame
+    * eagerly. */
   def screenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
-                      indexPath: String, streamId: String,
+                      indexPath: String, streamId: String, screen: Screen,
                       onHits: (DataFrame, Long) => Unit): Unit = {
-    // per-batch cache scope: the screen/merge ops register the
-    // batch's fingerprint table; release it at batch end so a
-    // long-running stream stays flat (one batch's caches at a time).
-    // `onHits` must therefore consume its DataFrame eagerly.
     if (!batch.isEmpty) graft.engine.Caches.withCached {
-      // op-aware: op='DELETE' rows (key only) route to the tombstone
-      // verb — the CDC deletion path, end-to-end in the stream. The
-      // delete→re-insert UPDATE (same batch or a later one) is handled
-      // by serving pending deletions inline: when the batch's merge
-      // collides with a tombstone, the maintenance tick runs first
-      // (between batches — the single-writer-safe moment), physically
-      // removing the old rows and clearing the tombstones, and only
-      // then does the merge land. Raising instead would crash-loop the
-      // stream: the checkpointed batch replays identically forever and
-      // the scheduled tick can never run behind a failing batch.
-      val (adds, dels) = splitOps(batch)
-      val hasAdds = !adds.isEmpty
-      if (hasAdds) {
-        val raw = graft.ops.DedupOps.queryFingerprintIndex(
-          spark, indexPath, adds)
-        // hits against docs this very batch deletes are not real
-        // duplicates — the pair's doc_old is gone the moment the batch
-        // commits; screen them out before the sink sees them
-        val hits = dels match {
-          case Some(d) => raw.join(
-            d.withColumnRenamed("doc_id", "doc_old"),
-            Seq("doc_old"), "left_anti")
-          case None => raw
-        }
-        onHits(hits, id)
+      val (adds, deletes) = splitOps(batch)
+      val dels = deletes.map(_.select(screen.key)).filterNot(_.isEmpty)
+      val prepared =
+        if (deletes.isEmpty || !adds.isEmpty) Some(screen.prepare(adds))
+        else None
+      prepared.foreach { p =>
+        val raw = screen.query(spark, indexPath, p)
+        onHits(dels.fold(raw)(d => raw.join(
+          d.withColumnRenamed(screen.key, screen.hitCol),
+          Seq(screen.hitCol), "left_anti")), id)
       }
       absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.DedupOps.tombstoneFingerprintIndex(d, indexPath))
-        if (hasAdds) {
-          serveTombstonesIfClashing(spark, indexPath, "fingerprint", adds)
-          graft.ops.DedupOps.mergeFingerprintIndex(adds, indexPath)
+        dels.foreach(screen.tombstone(_, indexPath))
+        prepared.foreach { p =>
+          serveTombstonesIfClashing(spark, indexPath, screen.kind, p,
+            screen.key)
+          screen.merge(p, indexPath)
         }
       }
     }
@@ -518,26 +563,29 @@ object CdcStream {
       retainApplied = retainApplied)
   }
 
-  /** Split an op-aware batch into (upserts-without-op, Some(delete-key
-    * table)) — or (batch, None) when no `op` column rides along. `key`
-    * names the family's id column (`doc_id` / `vec_id`); a DELETE row
-    * carries the key only. */
-  private def splitOps(batch: DataFrame,
-                       key: String = "doc_id"): (DataFrame, Option[DataFrame]) =
-    if (batch.columns.contains("op")) {
-      val dels = batch.filter(col("op") === "DELETE").select(key)
+  /** Split an op-aware batch into (upserts, Some(deletes)), both without
+    * the `op` column — or (batch, None) when no `op` column rides along.
+    * Lazy: no Spark job runs here, so a family probes emptiness only
+    * where it needs to. With no `op` column the upserts ARE the batch,
+    * which every caller has already found non-empty — hence the
+    * `dels.isEmpty || !adds.isEmpty` test the callers use. Key-only
+    * families select their key from the deletes; the retracting families
+    * (vocab, BM25, distinct) need the full row image the CDC delete
+    * record carries. */
+  private def splitOps(batch: DataFrame): (DataFrame, Option[DataFrame]) =
+    if (batch.columns.contains("op"))
       (batch.filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op"),
-        if (dels.isEmpty) None else Some(dels))
-    } else (batch, None)
+        Some(batch.filter(col("op") === "DELETE").drop("op")))
+    else (batch, None)
 
   /** Apply `merge` exactly once per (index, stream, micro-batch id) —
-    * the ledger replay protocol [[screenAndAbsorb]] established,
-    * factored out so every screen-and-absorb stream family (fingerprint
-    * text dedup, ANN embedding dedup) shares one implementation: check
-    * the per-process high-water memo (seeded from one ledger scan per
-    * (index, stream) per process — micro-batch ids are monotonic per
-    * checkpoint, so after seeding, replay detection is an in-memory
-    * compare), run the merge, append the ledger row, advance the memo.
+    * the reference's processed-batch ledger protocol
+    * (`scd2_loader.py:501-538`), shared by
+    * every absorb family: check the per-process high-water memo (seeded
+    * from one ledger scan per (index, stream) per process — micro-batch
+    * ids are monotonic per checkpoint, so after seeding, replay
+    * detection is an in-memory compare instead of a full ledger scan per
+    * trigger), run the merge, append the ledger row, advance the memo.
     * A merge that throws (e.g. the Compaction pointer guard) leaves no
     * ledger row, so the batch replays on restart. */
   private def absorbOnce(spark: SparkSession, indexPath: String,
@@ -567,22 +615,10 @@ object CdcStream {
 
   /** Streaming embedding dedup — [[dedupScreenStream]]'s ANN twin and
     * the CDC×ANN composition this platform exists for: each micro-batch
-    * of (vec_id, embedding) rows is
-    *  1. SCREENED against the stored IVF index with the BATCH probe
-    *     ([[graft.ops.SimilarityOps.queryIvfIndexBatch]] — the whole
-    *     batch shares ONE dynamically-partition-pruned cell scan, not
-    *     one scan per vector); rows pairing with an indexed vector at
-    *     `cosine ≥ minCosine` go to `onHits` (quarantine sink, metrics,
-    *     filter);
-    *  2. ABSORBED via [[graft.ops.SimilarityOps.mergeIvfIndex]] (frozen
-    *     centroids, append-only cells) under the same (stream,
-    *     batch-id) ledger protocol as the text path ([[absorbOnce]]),
-    *     so later batches screen against this one and replays are
-    *     exactly-once.
-    * `maintainEvery` = N > 0 runs the IVF maintenance tick
-    * ([[graft.engine.Compaction.maintainIndex]] + ledger compaction)
-    * every N batches inside the trigger loop — single-writer by
-    * construction, like the fingerprint stream's tick.
+    * of (vec_id, embedding) rows is screened and absorbed through
+    * [[screenAndAbsorb]] with [[Screen.ivf]]. `maintainEvery` = N > 0
+    * runs the `ivf` maintenance tick every N batches inside the trigger
+    * loop.
     *
     * `retrainEvery` = N > 0 additionally CHECKS the centroid-drift
     * signal every N batches and, when it trips, RETRAINS the index
@@ -595,7 +631,7 @@ object CdcStream {
     * gated on [[graft.ops.SimilarityOps.shouldRetrain]], so a stream
     * whose feed matches the indexed distribution never pays the
     * O(corpus) rebuild. 0 (default) keeps drift a scheduled-rebuild
-    * decision outside the stream, the prior posture. */
+    * decision outside the stream. */
   def annScreenStream(spark: SparkSession, inGlob: String,
                       checkpointDir: String, schema: StructType,
                       indexPath: String, topK: Int, minCosine: Double,
@@ -605,84 +641,21 @@ object CdcStream {
                       maintainMaxFiles: Int = 8,
                       retrainEvery: Int = 0,
                       retrainThreshold: Double = 2.0,
-                      retrainIters: Int = 2): StreamingQuery = {
-    // re-seed the replay memo at stream start (same reason as
-    // dedupScreenStream: the index may have been rebuilt at this path)
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        annScreenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
-          topK, minCosine, nprobe, onHits)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "ivf", maintainMaxFiles)
-        if (retrainEvery > 0 && id > 0 && id % retrainEvery == 0 &&
-            graft.ops.SimilarityOps.shouldRetrain(spark, indexPath,
-              retrainThreshold))
-          graft.ops.SimilarityOps.retrainIvfIndex(spark, indexPath,
-            iters = retrainIters)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** One ANN screen-and-absorb micro-batch — public for direct replay
-    * testing, like [[screenAndAbsorb]]. The screen is read-only and
-    * always re-run; the merge is applied once per (streamId, id).
-    *
-    * Op-aware like the text family: op='DELETE' rows (vec_id only)
-    * route to [[graft.ops.SimilarityOps.tombstoneAnnIndex]] — the
-    * right-to-be-forgotten path for vectors, under the SAME ledger
-    * entry as the batch's merge, with the same inline deletion-serve
-    * for the delete→re-insert update (the tick runs between batches
-    * when the merge collides with a pending tombstone; raising would
-    * crash-loop the checkpointed batch). */
-  def annScreenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
-                         indexPath: String, streamId: String,
-                         topK: Int, minCosine: Double, nprobe: Int,
-                         onHits: (DataFrame, Long) => Unit): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      val (adds, dels) = splitOps(batch, "vec_id")
-      val hasAdds = !adds.isEmpty
-      if (hasAdds) {
-        val raw = graft.ops.SimilarityOps.queryIvfIndexBatch(spark,
-          indexPath, adds, topK, nprobe)
-          .filter(org.apache.spark.sql.functions.col("cosine") >= minCosine)
-        // hits against vectors this very batch deletes are not real
-        // matches — the indexed vector is gone the moment the batch
-        // commits; screen them out before the sink sees them
-        val hits = dels match {
-          case Some(d) => raw.join(d, Seq("vec_id"), "left_anti")
-          case None    => raw
-        }
-        onHits(hits, id)
-      }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.SimilarityOps.tombstoneAnnIndex(d, indexPath))
-        if (hasAdds) {
-          serveTombstonesIfClashing(spark, indexPath, "ivf", adds, "vec_id")
-          graft.ops.SimilarityOps.mergeIvfIndex(adds, indexPath)
-        }
-      }
+                      retrainIters: Int = 2): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, indexPath) { (batch, id) =>
+      import graft.ops.SimilarityOps
+      screenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
+        Screen.ivf(topK, minCosine, nprobe), onHits)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "ivf", maintainMaxFiles)
+      if (due(retrainEvery, id) &&
+          SimilarityOps.shouldRetrain(spark, indexPath, retrainThreshold))
+        SimilarityOps.retrainIvfIndex(spark, indexPath, iters = retrainIters)
     }
-    ()
-  }
 
   /** Streaming IVF-PQ screen-and-absorb — [[annScreenStream]]'s
-    * quantized sibling: each vector micro-batch is screened against the
-    * stored composite index by pruned ADC (nprobe cells + byte codes —
-    * the screen never reads a float vector), then absorbed against both
-    * frozen control planes ([[graft.ops.SimilarityOps.mergeIvfPqIndex]]).
-    * Same (stream, batch-id) ledger protocol; the maintenance tick runs
-    * the `ivfpq` compaction kind. ADC is a DISTANCE, so hits are rows
-    * with `adc_dist <= maxAdc` (note an exact copy of an indexed vector
-    * screens at its quantization distortion, not 0 — size the threshold
-    * from the index's meta distortion).
+    * quantized sibling ([[Screen.ivfPq]]); the maintenance tick runs
+    * the `ivfpq` compaction kind.
     *
     * Codebook drift: this stream CANNOT self-retrain the way
     * [[annScreenStream]] does — PQ codes are lossy (byte codes, no
@@ -695,17 +668,16 @@ object CdcStream {
     * [[graft.ops.SimilarityOps.shouldRetrainIvfPq]] — BOTH drift
     * ratios, ADC distortion AND coarse assigned-cell d² (a
     * cluster-structure shift with flat distortion degrades cell
-    * pruning silently — the r16 gap) — and, when one trips, rebuilds
-    * between batches via
-    * [[graft.ops.SimilarityOps.rebuildIvfPqIndex]] (atomic republish of
-    * centroids + codebooks + codes under one version swap, tombstones
-    * served, drift log reset). 0 (default) keeps drift a
-    * scheduled-rebuild decision outside the stream, the prior posture.
+    * pruning silently) — and, when one trips, rebuilds between batches
+    * via [[graft.ops.SimilarityOps.rebuildIvfPqIndex]] (atomic
+    * republish of centroids + codebooks + codes under one version swap,
+    * tombstones served, drift log reset). 0 (default) keeps drift a
+    * scheduled-rebuild decision outside the stream.
     * `rebuildIters`/`rebuildPqIters` thread the coarse-quantizer and
-    * codebook training iteration counts into that rebuild (mirroring
-    * [[annScreenStream]]'s `retrainIters`) — pass the counts the index
-    * was originally built with, or the rebuilt index trains to a
-    * different state than the fresh-build parity the oracle assumes. */
+    * codebook training iteration counts into that rebuild — pass the
+    * counts the index was originally built with, or the rebuilt index
+    * trains to a different state than the fresh-build parity the
+    * oracle assumes. */
   def ivfPqScreenStream(spark: SparkSession, inGlob: String,
                         checkpointDir: String, schema: StructType,
                         indexPath: String, topK: Int, maxAdc: Double,
@@ -721,149 +693,40 @@ object CdcStream {
     require(rebuildEvery <= 0 || rebuildFrom != null,
       "ivfPqScreenStream: rebuildEvery > 0 needs rebuildFrom — PQ codes " +
         "are lossy, the rebuild must read the caller's source corpus")
-    // re-seed the replay memo at stream start (same reason as
-    // dedupScreenStream: the index may have been rebuilt at this path)
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ivfPqScreenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
-          topK, maxAdc, nprobe, onHits)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "ivfpq", maintainMaxFiles)
-        if (rebuildEvery > 0 && id > 0 && id % rebuildEvery == 0 &&
-            graft.ops.SimilarityOps.shouldRetrainIvfPq(spark, indexPath,
-              rebuildThreshold))
-          graft.ops.SimilarityOps.rebuildIvfPqIndex(rebuildFrom(spark),
-            indexPath, iters = rebuildIters, pqIters = rebuildPqIters)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** One IVF-PQ screen-and-absorb micro-batch — public for direct
-    * replay testing, like [[annScreenAndAbsorb]]. The screen is
-    * read-only and always re-run; the merge applies once per
-    * (streamId, id). */
-  def ivfPqScreenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
-                           indexPath: String, streamId: String,
-                           topK: Int, maxAdc: Double, nprobe: Int,
-                           onHits: (DataFrame, Long) => Unit): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      // op-aware like [[annScreenAndAbsorb]], same inline deletion-serve
-      val (adds, dels) = splitOps(batch, "vec_id")
-      val hasAdds = !adds.isEmpty
-      if (hasAdds) {
-        val raw = graft.ops.SimilarityOps.queryIvfPqIndexBatch(spark,
-          indexPath, adds, topK, nprobe)
-          .filter(org.apache.spark.sql.functions.col("adc_dist") <= maxAdc)
-        val hits = dels match {
-          case Some(d) => raw.join(d, Seq("vec_id"), "left_anti")
-          case None    => raw
-        }
-        onHits(hits, id)
-      }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.SimilarityOps.tombstoneAnnIndex(d, indexPath))
-        if (hasAdds) {
-          serveTombstonesIfClashing(spark, indexPath, "ivfpq", adds,
-            "vec_id")
-          graft.ops.SimilarityOps.mergeIvfPqIndex(adds, indexPath)
-        }
-      }
+    launch(spark, inGlob, checkpointDir, schema, indexPath) { (batch, id) =>
+      import graft.ops.SimilarityOps
+      screenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
+        Screen.ivfPq(topK, maxAdc, nprobe), onHits)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "ivfpq", maintainMaxFiles)
+      if (due(rebuildEvery, id) &&
+          SimilarityOps.shouldRetrainIvfPq(spark, indexPath, rebuildThreshold))
+        SimilarityOps.rebuildIvfPqIndex(rebuildFrom(spark), indexPath,
+          iters = rebuildIters, pqIters = rebuildPqIters)
     }
-    ()
   }
 
-  /** Streaming IMAGE dedup — [[dedupScreenStream]]'s multimodal twin:
-    * each micro-batch of (doc_id, payload) rows carrying REAL image
-    * bytes is (1) decoded and signature-hashed
-    * ([[graft.ops.Multimodal.imageAHash]] — the narrow per-partition
-    * codec pass), (2) SCREENED against the stored banded hash index
-    * ([[graft.ops.DedupOps.queryHashIndex]] — the batch broadcast-probes
-    * the index's (band, bv) buckets; the index never shuffles), hits to
-    * `onHits`, then (3) ABSORBED ([[graft.ops.DedupOps.mergeHashIndex]]
-    * — O(|batch|·bands) band-row appends) under the same (stream,
-    * batch-id) ledger protocol as every absorb family, so later batches
-    * screen against this one and replays are exactly-once. The
-    * maintenance tick runs the `ahash` compaction (drops replay-
-    * duplicated band rows, re-clusters buckets). Payloads arrive
-    * base64-coded in the JSON batch files (the file-stream transport;
-    * a production feed reads a binary-file source instead — only the
-    * payload column's provenance changes). */
+  /** Streaming IMAGE dedup — [[dedupScreenStream]]'s multimodal twin
+    * ([[Screen.image]]): each micro-batch of (doc_id, payload) rows
+    * carrying REAL image bytes is decoded, signature-hashed, screened
+    * against the stored banded hash index and absorbed. The maintenance
+    * tick runs the `ahash` compaction (drops replay-duplicated band
+    * rows, re-clusters buckets). Payloads arrive base64-coded in the
+    * JSON batch files (the file-stream transport; a production feed
+    * reads a binary-file source instead — only the payload column's
+    * provenance changes). */
   def imageScreenStream(spark: SparkSession, inGlob: String,
                         checkpointDir: String, schema: StructType,
                         indexPath: String, maxDist: Int,
                         onHits: (DataFrame, Long) => Unit,
                         maintainEvery: Int = 0,
-                        maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        imageScreenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
-          maxDist, onHits)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "ahash", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** One image screen-and-absorb micro-batch — public for direct replay
-    * testing. `batch` carries (doc_id, payload base64-string-or-binary);
-    * the aHash is computed ONCE per batch and cached for the batch's
-    * scope (screen + absorb share it), released at batch end. */
-  def imageScreenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
-                           indexPath: String, streamId: String,
-                           maxDist: Int,
-                           onHits: (DataFrame, Long) => Unit): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      // op-aware like [[screenAndAbsorb]], same inline deletion-serve:
-      // DELETE rows carry the key only (no payload to decode)
-      val (adds, dels) = splitOps(batch)
-      val sk =
-        if (adds.isEmpty) None
-        else {
-          val payload =
-            if (adds.schema("payload").dataType ==
-                org.apache.spark.sql.types.StringType)
-              adds.select(col("doc_id"), unbase64(col("payload")).as("payload"))
-            else adds.select(col("doc_id"), col("payload"))
-          Some(graft.engine.Caches.ensureCached(
-            graft.ops.Multimodal.imageAHash(payload)))
-        }
-      sk.foreach { k =>
-        val raw = graft.ops.DedupOps.queryHashIndex(spark, k, indexPath,
-          maxDist)
-        val hits = dels match {
-          case Some(d) => raw.join(
-            d.withColumnRenamed("doc_id", "doc_old"),
-            Seq("doc_old"), "left_anti")
-          case None => raw
-        }
-        onHits(hits, id)
-      }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.DedupOps.tombstoneHashIndex(d, indexPath))
-        sk.foreach { k =>
-          serveTombstonesIfClashing(spark, indexPath, "ahash", k)
-          graft.ops.DedupOps.mergeHashIndex(k, indexPath)
-        }
-      }
+                        maintainMaxFiles: Int = 8): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, indexPath) { (batch, id) =>
+      screenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
+        Screen.image(maxDist), onHits)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "ahash", maintainMaxFiles)
     }
-    ()
-  }
 
   /** Streaming incremental-view maintenance for the vocabulary
     * aggregate: each document micro-batch's per-word partial counts are
@@ -878,22 +741,12 @@ object CdcStream {
                         checkpointDir: String, schema: StructType,
                         viewPath: String,
                         maintainEvery: Int = 0,
-                        maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((viewPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        vocabAbsorb(spark, batch, id, viewPath, checkpointDir)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        maintainMaxFiles: Int = 8): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, viewPath) { (batch, id) =>
+      vocabAbsorb(spark, batch, id, viewPath, checkpointDir)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
+    }
 
   /** [[vocabAbsorbStream]] plus the TOKENIZER lifecycle — the complete
     * streaming loop a production corpus runs: each batch's word counts
@@ -916,25 +769,16 @@ object CdcStream {
                            retrainEvery: Int = 1,
                            unkThreshold: Double = 0.01,
                            maintainEvery: Int = 0,
-                           maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((viewPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        vocabAbsorb(spark, batch, id, viewPath, checkpointDir)
-        if (retrainEvery > 0 && id % retrainEvery == 0)
-          maintainTokenizer(spark, viewPath, tokPath, batch, rules,
-            unkThreshold)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                           maintainMaxFiles: Int = 8): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, viewPath) { (batch, id) =>
+      vocabAbsorb(spark, batch, id, viewPath, checkpointDir)
+      // batch 0 included on purpose: the first batch seeds the artifact
+      if (retrainEvery > 0 && id % retrainEvery == 0)
+        maintainTokenizer(spark, viewPath, tokPath, batch, rules,
+          unkThreshold)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
+    }
 
   /** One tokenizer-maintenance tick: retrain from the view if no
     * artifact exists yet or `sample`'s UNK mass under the stored
@@ -959,92 +803,70 @@ object CdcStream {
     * CDC delete-capture contract) and the rest through the additive
     * merge — both under ONE ledger entry, so a replayed mixed batch
     * re-applies neither half. Without an `op` column the batch is
-    * purely additive, as before. */
+    * purely additive. Stable (stream, batch-id) tags: a crashed-ledger
+    * replay lays down byte-identical partial rows that the view's
+    * batch-tagged dedup collapses (TextOps.vocabPartials). */
   def vocabAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                   viewPath: String, streamId: String): Unit = {
+    import graft.ops.TextOps
     if (!batch.isEmpty) graft.engine.Caches.withCached {
       absorbOnce(spark, viewPath, streamId, id) {
-        // stable (stream, batch-id) tags: a crashed-ledger replay lays
-        // down byte-identical partial rows that the view's batch-tagged
-        // dedup collapses (TextOps.vocabPartials)
         val tag = s"$streamId#$id"
-        if (batch.columns.contains("op")) {
-          val adds = batch.filter(coalesce(col("op") =!= "DELETE", lit(true)))
-          val dels = batch.filter(col("op") === "DELETE")
-          if (!adds.isEmpty)
-            graft.ops.TextOps.mergeVocabIndex(adds, viewPath, s"$tag:merge")
-          if (!dels.isEmpty)
-            graft.ops.TextOps.retractVocabIndex(dels, viewPath,
-              s"$tag:retract")
-        } else graft.ops.TextOps.mergeVocabIndex(batch, viewPath, s"$tag:merge")
+        val (adds, dels) = splitOps(batch)
+        if (dels.isEmpty || !adds.isEmpty)
+          TextOps.mergeVocabIndex(adds, viewPath, s"$tag:merge")
+        dels.filterNot(_.isEmpty).foreach(
+          TextOps.retractVocabIndex(_, viewPath, s"$tag:retract"))
       }
     }
     ()
   }
 
   /** Streaming incremental maintenance for the stored BM25 inverted
-    * index — the keyword-retrieval absorb loop: each document
-    * micro-batch's postings are merged
-    * ([[graft.ops.TextOps.mergeBm25Index]]) exactly once under the
-    * (stream, batch-id) ledger protocol, and `op='DELETE'` rows (which
-    * carry the full row image, the CDC delete-capture contract) route
-    * through [[graft.ops.TextOps.retractBm25Index]] — tombstoned
-    * postings stop scoring immediately, lexicon/stats adjust exactly,
-    * and the `bm25` maintenance tick makes deletions physical. The
-    * delete→re-insert update is served inline like every absorb family
-    * ([[serveTombstonesIfClashing]]). */
+    * index — the keyword-retrieval absorb loop ([[bm25Absorb]] per
+    * micro-batch): postings merge exactly once under the (stream,
+    * batch-id) ledger protocol, `op='DELETE'` rows retract (tombstoned
+    * postings stop scoring immediately, lexicon/stats adjust exactly),
+    * and the `bm25` maintenance tick makes deletions physical. */
   def bm25AbsorbStream(spark: SparkSession, inGlob: String,
                        checkpointDir: String, schema: StructType,
                        indexPath: String,
                        maintainEvery: Int = 0,
-                       maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        bm25Absorb(spark, batch, id, indexPath, checkpointDir)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "bm25", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       maintainMaxFiles: Int = 8): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, indexPath) { (batch, id) =>
+      bm25Absorb(spark, batch, id, indexPath, checkpointDir)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "bm25", maintainMaxFiles)
+    }
 
   /** One BM25 absorb micro-batch — public for direct replay testing.
+    * `op='DELETE'` rows carry the full row image (the CDC delete-capture
+    * contract) and route through [[graft.ops.TextOps.retractBm25Index]].
     * Retraction runs BEFORE the merge (tombstone first, then serve the
-    * clash if this very batch re-inserts a deleted doc), both halves
-    * under ONE ledger entry so a replayed mixed batch re-applies
-    * neither. The inline clash-serve's `_applied` reset RETAINS this
-    * batch's just-committed retract signature (it rides the reset's own
-    * version swap — Compaction.resetBm25AppliedLog): the ledger entry
-    * is still uncommitted at that point, so a crash between the tick
-    * and the ledger append replays the batch, and the retraction must
-    * still find its signature or it would subtract lexicon df and
-    * stats a second time. */
+    * clash if this very batch re-inserts a deleted doc —
+    * [[serveTombstonesIfClashing]]), both halves under ONE ledger entry
+    * so a replayed mixed batch re-applies neither. The inline
+    * clash-serve's `_applied` reset RETAINS this batch's just-committed
+    * retract signature (it rides the reset's own version swap —
+    * Compaction.resetBm25AppliedLog): the ledger entry is still
+    * uncommitted at that point, so a crash between the tick and the
+    * ledger append replays the batch, and the retraction must still find
+    * its signature or it would subtract lexicon df and stats a second
+    * time. A batch without an `op` column merges directly. */
   def bm25Absorb(spark: SparkSession, batch: DataFrame, id: Long,
                  indexPath: String, streamId: String): Unit = {
+    import graft.ops.TextOps
     if (!batch.isEmpty) graft.engine.Caches.withCached {
       absorbOnce(spark, indexPath, streamId, id) {
-        if (batch.columns.contains("op")) {
-          // the retract needs the full row image, so DELETE rows keep
-          // every column (unlike the key-only splitOps families)
-          val adds = batch
-            .filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op")
-          val dels = batch.filter(col("op") === "DELETE").drop("op")
-          val retractSig =
-            if (!dels.isEmpty)
-              Some(graft.ops.TextOps.retractBm25Index(dels, indexPath))
-            else None
-          if (!adds.isEmpty) {
-            serveTombstonesIfClashing(spark, indexPath, "bm25", adds,
-              retainApplied = retractSig.toSeq)
-            graft.ops.TextOps.mergeBm25Index(adds, indexPath)
-          }
-        } else graft.ops.TextOps.mergeBm25Index(batch, indexPath)
+        val (adds, dels) = splitOps(batch)
+        val retractSig = dels.filterNot(_.isEmpty)
+          .map(TextOps.retractBm25Index(_, indexPath))
+        if (dels.isEmpty) TextOps.mergeBm25Index(adds, indexPath)
+        else if (!adds.isEmpty) {
+          serveTombstonesIfClashing(spark, indexPath, "bm25", adds,
+            retainApplied = retractSig.toSeq)
+          TextOps.mergeBm25Index(adds, indexPath)
+        }
       }
     }
     ()
@@ -1057,7 +879,7 @@ object CdcStream {
     * replayed union would be VALUE-harmless (register-max is
     * idempotent), but the ledger still guards it so the view's row
     * count — and therefore its compaction debt and file lineage — stays
-    * deterministic under re-delivery. Op-aware (r17): op='DELETE' rows
+    * deterministic under re-delivery. Op-aware: op='DELETE' rows
     * retract through the view's exact companion (deletion-exact reads
     * immediately; the HLL side rebuilds on the `hll` maintenance tick —
     * see [[distinctAbsorb]]). */
@@ -1065,31 +887,20 @@ object CdcStream {
                            checkpointDir: String, schema: StructType,
                            viewPath: String, group: String, key: String,
                            maintainEvery: Int = 0,
-                           maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((viewPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        distinctAbsorb(spark, batch, id, viewPath, group, key, checkpointDir)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, viewPath, "hll", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                           maintainMaxFiles: Int = 8): StreamingQuery =
+    launch(spark, inGlob, checkpointDir, schema, viewPath) { (batch, id) =>
+      distinctAbsorb(spark, batch, id, viewPath, group, key, checkpointDir)
+      if (due(maintainEvery, id))
+        maintainStreamedIndex(spark, viewPath, "hll", maintainMaxFiles)
+    }
 
   /** One distinct-view absorb micro-batch — public for replay testing.
-    * Op-aware (r17): op='DELETE' rows (full row image — the CDC
-    * delete-capture contract) route through
-    * [[graft.engine.Stats.retractDistinctView]] into the view's exact
-    * companion, the rest through the sketch+exact merge — both under
-    * ONE ledger entry with stable (stream, batch-id) tags, so a
-    * replayed mixed batch re-applies neither half (the vocab absorb's
-    * protocol verbatim). The exact read reflects the deletion
+    * Op-aware: op='DELETE' rows (full row image — the CDC delete-capture
+    * contract) route through [[graft.engine.Stats.retractDistinctView]]
+    * into the view's exact companion, the rest through the sketch+exact
+    * merge — both under ONE ledger entry with stable (stream, batch-id)
+    * tags, so a replayed mixed batch re-applies neither half (the vocab
+    * absorb's protocol verbatim). The exact read reflects the deletion
     * IMMEDIATELY; the HLL read over-counts until the scheduled `hll`
     * tick rebuilds the sketches from the netted pairs — bounded
     * staleness of one maintenance interval on the APPROXIMATE path
@@ -1100,21 +911,15 @@ object CdcStream {
   def distinctAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                      viewPath: String, group: String, key: String,
                      streamId: String): Unit = {
+    import graft.engine.Stats
     if (!batch.isEmpty) graft.engine.Caches.withCached {
       absorbOnce(spark, viewPath, streamId, id) {
         val tag = s"$streamId#$id"
-        if (batch.columns.contains("op")) {
-          val adds = batch
-            .filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op")
-          val dels = batch.filter(col("op") === "DELETE").drop("op")
-          if (!dels.isEmpty)
-            graft.engine.Stats.retractDistinctView(dels, group, key,
-              viewPath, s"$tag:retract")
-          if (!adds.isEmpty)
-            graft.engine.Stats.mergeDistinctView(adds, group, key,
-              viewPath, s"$tag:merge")
-        } else graft.engine.Stats.mergeDistinctView(batch, group, key,
-          viewPath, s"$tag:merge")
+        val (adds, dels) = splitOps(batch)
+        dels.filterNot(_.isEmpty).foreach(
+          Stats.retractDistinctView(_, group, key, viewPath, s"$tag:retract"))
+        if (dels.isEmpty || !adds.isEmpty)
+          Stats.mergeDistinctView(adds, group, key, viewPath, s"$tag:merge")
       }
     }
     ()
@@ -1172,21 +977,12 @@ object CdcStream {
                            key: String = "doc_id"): StreamingQuery = {
     require(exportPath.isEmpty || tokensPerShard > 0L,
       "snapshotAbsorbStream: an export path needs tokensPerShard > 0")
-    absorbedHighWater.remove((storeRoot, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        snapshotAbsorb(spark, batch, id, storeRoot, checkpointDir, key)
-        if (optimizeEvery > 0 && id > 0 && id % optimizeEvery == 0)
-          optimizeSnapshotTick(spark, storeRoot, a, b, tie, numFiles,
-            keepVersions, exportPath, tokensPerShard)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    launch(spark, inGlob, checkpointDir, schema, storeRoot) { (batch, id) =>
+      snapshotAbsorb(spark, batch, id, storeRoot, checkpointDir, key)
+      if (due(optimizeEvery, id))
+        optimizeSnapshotTick(spark, storeRoot, a, b, tie, numFiles,
+          keepVersions, exportPath, tokensPerShard)
+    }
   }
 
   /** One snapshot-absorb micro-batch — public for replay testing.
@@ -1215,12 +1011,7 @@ object CdcStream {
       // versions retained for time travel still carry the key until
       // the compliance sweep (SnapshotStore.purgeKeys) rewrites the
       // whole retained window.
-      val (rawUpserts, deleteKeys) =
-        if (batch.columns.contains("op"))
-          (batch.filter(coalesce(col("op") =!= "DELETE", lit(true)))
-             .drop("op"),
-           Some(batch.filter(col("op") === "DELETE").select(key)))
-        else (batch, None)
+      val (rawUpserts, dels) = splitOps(batch)
       // intra-batch key discipline: exact duplicate ROWS fold (a file
       // re-delivering the same record twice), but two DIFFERENT rows
       // for one key in one batch are refused loudly — this verb's
@@ -1237,10 +1028,8 @@ object CdcStream {
           "upstream")
       val next = store.read() match {
         case Some(cur) =>
-          val victims = deleteKeys match {
-            case Some(d) => upserts.select(key).unionByName(d)
-            case None    => upserts.select(key)
-          }
+          val victims = dels.fold(upserts.select(key))(d =>
+            upserts.select(key).unionByName(d.select(key)))
           cur.join(victims, Seq(key), "left_anti").unionByName(upserts)
         case None => upserts
       }

@@ -2305,4 +2305,34 @@ class OpsSpec extends AnyFunSuite {
     assert(batch === perSlice) // exact — doubles compared bit-for-bit
   }
 
+  test("training locks are evicted once their training ends; identical " +
+    "concurrent trainings still run once") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // the lock protocol kmeansCentroids uses, over a counting memo: the
+    // second identical caller blocks on the first, then memo-hits
+    val memo = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val runs = Map("a" -> new AtomicInteger, "b" -> new AtomicInteger)
+    def train(key: String): Int = memo.getOrElse(key,
+      SimilarityOps.trainingLock(key) {
+        memo.getOrElseUpdate(key, {
+          runs(key).incrementAndGet(); Thread.sleep(500); key.length })
+      })
+    Seq("a", "a", "b").map(k => Future(train(k)))
+      .foreach(Await.result(_, 1.minute))
+    assert(runs.view.mapValues(_.get).toMap === Map("a" -> 1, "b" -> 1),
+      "each memo must be trained once")
+    assert(SimilarityOps.trainingLocks.isEmpty)
+    // and the real training path leaves no entry behind either
+    val vecs = Seq.tabulate(24)(i =>
+      (i.toLong, Seq(math.sin(i * 1.3), math.cos(i * 0.7)))).toDF("vec_id", "v")
+    val got = Seq(2, 2, 3).map(k =>
+      Future(SimilarityOps.kmeansCentroids(vecs, k, 2)))
+      .map(Await.result(_, 5.minutes))
+    assert(got(0) === got(1))
+    assert(SimilarityOps.trainingLocks.isEmpty)
+  }
+
 }

@@ -205,4 +205,35 @@ class PurgeAuditSpec extends AnyFunSuite {
       e.getMessage.contains("fingerprint"),
       s"under-deletion must be named: ${e.getMessage}")
   }
+
+  test("a null index key fails the audit loudly instead of shifting its " +
+    "counts") {
+    import graft.engine.Compaction
+    val r = buildAll(del = false)
+    // one postings row with a null fingerprint — no index writer emits
+    // one; the struct-valued distinct would count it as a pair
+    val live = Compaction.resolve(s"${r.fp}/postings")
+    val row = spark.read.parquet(live).limit(1).localCheckpoint()
+    row.withColumn("fp", lit(null).cast(row.schema("fp").dataType))
+      .write.mode("append").parquet(live)
+    val e = intercept[Exception](audit(r))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("null index key fp")),
+      s"the audit must name the null key: $e")
+  }
+
+  test("a timed-out bounded await cancels its jobs instead of leaving " +
+    "them running") {
+    import scala.concurrent.duration._
+    val sleeper = () =>
+      spark.range(1).map { x => Thread.sleep(120000L); x }.count()
+    intercept[java.util.concurrent.TimeoutException](
+      graft.engine.Bounded.awaitAll(spark, Seq(sleeper), 5.seconds))
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.currentTimeMillis + 30000L
+    while (tracker.getActiveJobIds.nonEmpty &&
+        System.currentTimeMillis < deadline) Thread.sleep(100)
+    assert(tracker.getActiveJobIds.isEmpty,
+      "the job the await gave up on must be cancelled")
+  }
 }

@@ -97,7 +97,8 @@ class StreamingSpec extends AnyFunSuite {
     // checkpoint commit: foreachBatch re-delivers the same batch id; the
     // ledger check must make the re-merge a no-op
     val replayed = spark.read.json(s"$in/docs_000.json")
-    CdcStream.screenAndAbsorb(spark, replayed, 0L, idx, ckpt, (df, _) => { df.count(); () })
+    CdcStream.screenAndAbsorb(spark, replayed, 0L, idx, ckpt,
+      CdcStream.Screen.fingerprint, (df, _) => { df.count(); () })
     assert(spark.read.parquet(s"$idx/postings").count() === afterRestart,
       "replaying an absorbed batch id must not duplicate postings")
     val ledgerRows = spark.read.parquet(s"$idx/_ledger").count()
@@ -153,8 +154,8 @@ class StreamingSpec extends AnyFunSuite {
       .count() === 2L, "one ledger row per absorbed batch")
     // re-delivery of an already-absorbed batch id is a no-op merge
     val replayed = spark.read.schema(schema).json(s"$in/vecs_001.json")
-    CdcStream.annScreenAndAbsorb(spark, replayed, 1L, idx, ckpt,
-      3, 0.999, 1, (df, _) => { df.count(); () })
+    CdcStream.screenAndAbsorb(spark, replayed, 1L, idx, ckpt,
+      CdcStream.Screen.ivf(3, 0.999, 1), (df, _) => { df.count(); () })
     assert(spark.read.parquet(Compaction.resolve(s"$idx/assignments"))
       .count() === 13L, "replaying an absorbed batch must not duplicate")
   }
@@ -219,8 +220,8 @@ class StreamingSpec extends AnyFunSuite {
     // a no-op (the ledger survives the republish)
     val n = spark.read.parquet(Compaction.resolve(s"$idx/assignments")).count()
     val replayed = spark.read.schema(schema).json(s"$in/vecs_001.json")
-    CdcStream.annScreenAndAbsorb(spark, replayed, 1L, idx, ckpt,
-      3, 0.999, 1, (df, _) => { df.count(); () })
+    CdcStream.screenAndAbsorb(spark, replayed, 1L, idx, ckpt,
+      CdcStream.Screen.ivf(3, 0.999, 1), (df, _) => { df.count(); () })
     assert(spark.read.parquet(Compaction.resolve(s"$idx/assignments"))
       .count() === n, "replay after retrain must not duplicate")
   }
@@ -431,8 +432,8 @@ class StreamingSpec extends AnyFunSuite {
     val bandRowsNow = spark.read
       .parquet(Compaction.resolve(s"$idx/bands")).count()
     val replayed = spark.read.schema(schema).json(s"$in/img_001.json")
-    CdcStream.imageScreenAndAbsorb(spark, replayed, 1L, idx, ckpt, 0,
-      (df, _) => { df.count(); () })
+    CdcStream.screenAndAbsorb(spark, replayed, 1L, idx, ckpt,
+      CdcStream.Screen.image(0), (df, _) => { df.count(); () })
     assert(spark.read.parquet(Compaction.resolve(s"$idx/bands")).count()
       === bandRowsNow, "replay must not duplicate band rows")
     // the maintenance tick collapsed the per-merge appends
@@ -722,8 +723,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(codes.count() === 13L, "no duplicate code rows")
     // re-delivery of an already-absorbed batch id is a no-op merge
     val replayed = spark.read.schema(schema).json(s"$in/vecs_001.json")
-    CdcStream.ivfPqScreenAndAbsorb(spark, replayed, 1L, idx, ckpt,
-      3, 1e-6, 2, (df, _) => { df.count(); () })
+    CdcStream.screenAndAbsorb(spark, replayed, 1L, idx, ckpt,
+      CdcStream.Screen.ivfPq(3, 1e-6, 2), (df, _) => { df.count(); () })
     assert(spark.read.parquet(Compaction.resolve(s"$idx/codes"))
       .count() === 13L, "replaying an absorbed batch must not duplicate")
   }
@@ -791,8 +792,8 @@ class StreamingSpec extends AnyFunSuite {
     // no-op (the ledger survives the republish)
     val n = spark.read.parquet(Compaction.resolve(s"$idx/codes")).count()
     val replayed = spark.read.schema(schema).json(s"$in/vecs_001.json")
-    CdcStream.ivfPqScreenAndAbsorb(spark, replayed, 1L, idx, ckpt,
-      3, 1e-6, 2, (df, _) => { df.count(); () })
+    CdcStream.screenAndAbsorb(spark, replayed, 1L, idx, ckpt,
+      CdcStream.Screen.ivfPq(3, 1e-6, 2), (df, _) => { df.count(); () })
     assert(spark.read.parquet(Compaction.resolve(s"$idx/codes"))
       .count() === n, "replay after rebuild must not duplicate")
   }
@@ -1723,49 +1724,118 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.currentVersion().get === 2L)
   }
 
-  test("ANN stream CDC DELETE: tombstone routes under the batch ledger, " +
-    "delete+reinsert update serves inline") {
-    import graft.ops.SimilarityOps
+  /** One screened index family in the delete→re-insert scenario below.
+    * `frame` turns (key, source key, op) rows into a batch whose content
+    * copies the indexed source key's (None for a key-only DELETE row);
+    * `newCol` names the batch key in the screen's hits; `probe` lists the
+    * keys a stored probe with a key's content returns; `stored` holds one
+    * row per indexed key. */
+  private case class ScreenCase(
+      label: String, newCol: String,
+      build: String => Unit,
+      frame: Seq[(Long, Option[Long], String)] => org.apache.spark.sql.DataFrame,
+      screen: CdcStream.Screen,
+      probe: (String, Long) => Set[Long],
+      stored: String => org.apache.spark.sql.DataFrame)
+
+  private val screenCases: Seq[ScreenCase] = {
+    import graft.ops.{DedupOps, Multimodal, SimilarityOps}
     import graft.engine.Compaction
-    val idx = Files.createTempDirectory("annd_idx").toString
-    val ckpt = Files.createTempDirectory("annd_ckpt").toString
-    def baseVec(i: Int): Seq[Double] =
+    def read(p: String) = spark.read.parquet(Compaction.resolve(p))
+    def keys(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).collect().map(_.getLong(0)).toSet
+    def vec(i: Long): Seq[Double] =
       Seq.tabulate(4)(j => if (j == i % 4) 1.0 + i else 0.01 * (j + 1))
-    val base = (0 until 10).map(i => (i.toLong, baseVec(i)))
-      .toDF("vec_id", "embedding")
-    SimilarityOps.buildIvfIndex(base, idx)
-    // batch 0 (op-aware): DELETE indexed vec 2 + INSERT an exact copy of
-    // it — the hit against the just-deleted vector must be screened out
-    val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val b0 = Seq((100L, baseVec(2), "I"),
-      (2L, null.asInstanceOf[Seq[Double]], "DELETE"))
-      .toDF("vec_id", "embedding", "op")
-    CdcStream.annScreenAndAbsorb(spark, b0, 0L, idx, ckpt, 3, 0.999, 1,
-      (df, _) => hits ++= df.select("q_id", "vec_id").as[(Long, Long)].collect())
-    assert(!hits.exists(_._2 == 2L),
-      "a hit against a vector this very batch deletes is not a real match")
-    // the deletion is live immediately: the stored probe skips vec 2
-    assert(!SimilarityOps.queryIvfIndex(spark, idx, baseVec(2), 3)
-      .select("vec_id").collect().map(_.getLong(0)).contains(2L))
-    // batch 1: the CDC UPDATE shape — vec 2 returns. The merge collides
-    // with its pending tombstone, so the inline serve runs the tick
-    // (physical delete + clear) and the merge lands cleanly.
-    val b1 = Seq((2L, baseVec(2), "I")).toDF("vec_id", "embedding", "op")
-    CdcStream.annScreenAndAbsorb(spark, b1, 1L, idx, ckpt, 3, 0.999, 1,
-      (_, _) => ())
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$idx/tombstones")))
-    val asg = spark.read.parquet(Compaction.resolve(s"$idx/assignments"))
-    assert(asg.filter($"vec_id" === 2L).count() === 1L,
-      "exactly one assignment row for the re-inserted id")
-    assert(SimilarityOps.queryIvfIndex(spark, idx, baseVec(2), 3)
-      .select("vec_id").collect().map(_.getLong(0)).contains(2L))
-    // replaying an absorbed batch id is a no-op (ledger protocol)
-    val n = asg.count()
-    CdcStream.annScreenAndAbsorb(spark, b1, 1L, idx, ckpt, 3, 0.999, 1,
-      (_, _) => ())
-    assert(spark.read.parquet(Compaction.resolve(s"$idx/assignments"))
-      .count() === n)
+    def vecFrame(rs: Seq[(Long, Option[Long], String)]) =
+      rs.map { case (k, src, op) => (k, src.map(vec).orNull, op) }
+        .toDF("vec_id", "embedding", "op")
+    def text(i: Long) = (1 to 50).map(j => s"f${i}w$j").mkString(" ")
+    // rasters known not to collide at Hamming 0
+    def png(i: Long): Array[Byte] = i match {
+      case 1L => Multimodal.syntheticPng(1L, 8, 8)
+      case 2L => Multimodal.syntheticPng(300L, 12, 12)
+      case _  => Multimodal.syntheticPng(9L, 16, 12)
+    }
+    def hashOf(i: Long) =
+      Multimodal.imageAHash(Seq((900L, png(i))).toDF("doc_id", "payload"))
+    Seq(
+      ScreenCase("ANN", "q_id",
+        idx => SimilarityOps.buildIvfIndex(
+          (0L until 10L).map(i => (i, vec(i))).toDF("vec_id", "embedding"), idx),
+        vecFrame,
+        CdcStream.Screen.ivf(3, 0.999, 1),
+        (idx, i) => keys(SimilarityOps.queryIvfIndex(spark, idx, vec(i), 3),
+          "vec_id"),
+        idx => read(s"$idx/assignments")),
+      ScreenCase("IVF-PQ", "q_id",
+        idx => SimilarityOps.buildIvfPqIndex(
+          (0L until 10L).map(i => (i, vec(i))).toDF("vec_id", "embedding"),
+          idx, m = 2, ksub = 16),
+        vecFrame,
+        CdcStream.Screen.ivfPq(3, 1e-6, 2),
+        (idx, i) => keys(SimilarityOps.queryIvfPqIndex(spark, idx, vec(i), 3),
+          "vec_id"),
+        idx => read(s"$idx/codes")),
+      ScreenCase("fingerprint", "doc_new",
+        idx => DedupOps.buildFingerprintIndex(
+          (0L until 10L).map(i => (i, text(i))).toDF("doc_id", "text"), idx),
+        rs => rs.map { case (k, src, op) => (k, src.map(text).orNull, op) }
+          .toDF("doc_id", "text", "op"),
+        CdcStream.Screen.fingerprint,
+        (idx, i) => keys(DedupOps.queryFingerprintIndex(spark, idx,
+          Seq((900L, text(i))).toDF("doc_id", "text")), "doc_old"),
+        idx => read(s"$idx/sizes")),
+      ScreenCase("image", "doc_new",
+        idx => DedupOps.buildHashIndex(Multimodal.imageAHash(
+          Seq(1L, 2L, 9L).map(i => (i, png(i))).toDF("doc_id", "payload")), idx),
+        rs => rs.map { case (k, src, op) => (k, src.map(png).orNull, op) }
+          .toDF("doc_id", "payload", "op"),
+        CdcStream.Screen.image(0),
+        (idx, i) => keys(DedupOps.queryHashIndex(spark, hashOf(i), idx, 0),
+          "doc_old"),
+        // one band row per (doc, band): band 0 stands for the doc
+        idx => read(s"$idx/bands").filter($"band" === 0)))
+  }
+
+  screenCases.foreach { f =>
+    test(s"${f.label} stream CDC DELETE: tombstone routes under the batch " +
+      "ledger, delete+reinsert update serves inline") {
+      import graft.engine.Compaction
+      val idx = Files.createTempDirectory("scrd_idx").toString
+      val ckpt = Files.createTempDirectory("scrd_ckpt").toString
+      f.build(idx)
+      // batch 0 (op-aware): DELETE indexed key 2 + INSERT an exact copy of
+      // it — the hit against the just-deleted key must be screened out
+      val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def step(b: org.apache.spark.sql.DataFrame, id: Long,
+               onHits: (org.apache.spark.sql.DataFrame, Long) => Unit) =
+        CdcStream.screenAndAbsorb(spark, b, id, idx, ckpt, f.screen, onHits)
+      step(f.frame(Seq((100L, Some(2L), "I"), (2L, None, "DELETE"))), 0L,
+        (df, _) =>
+          hits ++= df.select(f.newCol, f.screen.hitCol).as[(Long, Long)]
+            .collect())
+      assert(!hits.exists(_._2 == 2L),
+        "a hit against a key this very batch deletes is not a real match")
+      // the deletion is live immediately: the stored probe skips key 2
+      assert(!f.probe(idx, 2L).contains(2L))
+      // batch 1: the CDC UPDATE shape — key 2 returns. The merge collides
+      // with its pending tombstone, so the inline serve runs the tick
+      // (physical delete + clear) and the merge lands cleanly.
+      val b1 = f.frame(Seq((2L, Some(2L), "I")))
+      step(b1, 1L, (_, _) => ())
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$idx/tombstones")))
+      val stored = f.stored(idx)
+      assert(stored.filter(col(f.screen.key) === 2L).count() === 1L,
+        "exactly one stored row for the re-inserted key")
+      assert(f.probe(idx, 2L).contains(2L))
+      // replaying an absorbed batch id is a no-op (ledger protocol)
+      val n = stored.count()
+      step(b1, 1L, (_, _) => ())
+      assert(f.stored(idx).count() === n)
+      assert(spark.read.parquet(Compaction.resolve(s"$idx/_ledger"))
+        .count() === 2L, "one ledger row per absorbed batch")
+    }
   }
 
   test("streaming BM25 absorb: merge + retract under one ledger entry, " +
@@ -1897,6 +1967,69 @@ class StreamingSpec extends AnyFunSuite {
       Compaction.resolve(s"$idx/lexicon"), "_applied")
     assert(spark.read.parquet(appliedDir.toString).isEmpty,
       "a between-batches tick (ledger committed) resets the log fully")
+  }
+
+  test("BM25 absorb stream: mixed insert/DELETE files with a maintenance " +
+    "tick, restart re-applies nothing, scores equal a rebuild") {
+    import graft.ops.TextOps
+    import graft.engine.Compaction
+    import org.apache.spark.sql.types.StructType
+    val in = Files.createTempDirectory("bms_in").toString
+    val ckpt = Files.createTempDirectory("bms_ckpt").toString
+    val idx = Files.createTempDirectory("bms_idx").toString
+    def text(i: Long) =
+      Seq("spark join", "window join", "spark window", "join merge")(
+        (i % 4).toInt) + " " + (1 to 12 + i.toInt).map(j => s"t${i}x$j").mkString(" ")
+    val newText1 = "spark refresh window " + (1 to 9).map("r" + _).mkString(" ")
+    TextOps.buildBm25Index(
+      (1L to 3L).map(i => (i, text(i))).toDF("doc_id", "text"), idx)
+    def jline(id: Long, t: String, op: String) =
+      s"""{"doc_id":$id,"text":"$t","op":"$op"}"""
+    def file(i: Int, lines: String*): Unit = {
+      val f = java.nio.file.Paths.get(in, f"docs_$i%03d.json")
+      Files.writeString(f, lines.mkString("\n") + "\n")
+      // strictly increasing mtimes → deterministic batch order
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - (600 - i * 60) * 1000L))
+    }
+    // batch 0 inserts; batch 1 DELETEs doc 2 (full row image) beside an
+    // insert; batch 2 DELETEs a doc batch 0 absorbed, then the tick runs;
+    // batch 3 is the CDC UPDATE shape — doc 1 deleted and re-inserted
+    file(0, jline(4, text(4), "I"), jline(5, text(5), "I"))
+    file(1, jline(2, text(2), "DELETE"), jline(6, text(6), "I"))
+    file(2, jline(4, text(4), "DELETE"))
+    file(3, jline(1, text(1), "DELETE"), jline(1, newText1, "I"))
+    val schema = new StructType().add("doc_id", "long").add("text", "string")
+      .add("op", "string")
+    def drain(): Unit = CdcStream.bm25AbsorbStream(spark, s"$in/docs_*.json",
+      ckpt, schema, idx, maintainEvery = 2, maintainMaxFiles = 1)
+      .awaitTermination()
+    val terms = Seq("spark", "join", "window", "merge", "refresh")
+    def scores(p: String) = TextOps.queryBm25Index(spark, p, terms, 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def rebuilt(docs: Seq[(Long, String)]) = {
+      val p = Files.createTempDirectory("bms_rebuild").toString
+      TextOps.buildBm25Index(docs.toDF("doc_id", "text"), p)
+      scores(p)
+    }
+    def ledger() = spark.read.parquet(Compaction.resolve(s"$idx/_ledger"))
+      .select("batch_id").as[String].collect().sorted.toSeq
+    drain()
+    val surviving = Seq((1L, newText1), (3L, text(3)), (5L, text(5)),
+      (6L, text(6)))
+    assert(scores(idx) === rebuilt(surviving),
+      "the streamed merges + retractions must equal a rebuild on {1', 3, 5, 6}")
+    assert(ledger() === Seq("0", "1", "2", "3"))
+    // the tick after batch 2 made its deletions physical
+    assert(spark.read.parquet(Compaction.resolve(s"$idx/postings"))
+      .filter($"doc_id".isin(2L, 4L)).count() === 0L)
+    // restart on the same checkpoint with one new file: only the new
+    // batch is absorbed, no earlier batch is re-applied
+    file(4, jline(7, text(7), "I"))
+    drain()
+    assert(ledger() === Seq("0", "1", "2", "3", "4"))
+    assert(scores(idx) === rebuilt(surviving :+ ((7L, text(7)))),
+      "after the restart the index must equal a rebuild on {1', 3, 5, 6, 7}")
   }
 
   test("vocab tick between a crashed partial append and its replay: the " +
@@ -2233,7 +2366,8 @@ class StreamingSpec extends AnyFunSuite {
       val purge = (0L until 30L by 3L)
         .map(i => (i, null.asInstanceOf[String], "DELETE"))
         .toDF("doc_id", "text", "op")
-      CdcStream.screenAndAbsorb(spark, purge, 0L, idx, ckpt, (_, _) => ())
+      CdcStream.screenAndAbsorb(spark, purge, 0L, idx, ckpt,
+        CdcStream.Screen.fingerprint, (_, _) => ())
       // deletion live immediately: a near-dup of a purged doc is silent
       val probeDel = Seq((900L, body(0L) + " tail")).toDF("doc_id", "text")
       assert(DedupOps.queryFingerprintIndex(spark, idx, probeDel)
