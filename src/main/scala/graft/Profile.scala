@@ -16,46 +16,6 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (name == "debug_jaccard") {
-      import graft.engine.Tables
-      import graft.ops.DedupOps
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(spark, sfDir)
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
-      }
-      import graft.ops.TextOps
-      val words = docs.select(col("doc_id"), TextOps.normWords(col("text")).as("w"))
-      time("words_only")(words.agg(sum(size(col("w")))).count())
-      val noDistinct = words.filter(size(col("w")) >= 5)
-        .select(col("doc_id"),
-          expr("transform(sequence(1, size(w) - 4), i -> concat_ws(' ', slice(w, i, 5)))").as("shs"))
-      time("shingles_no_distinct")(noDistinct.agg(sum(size(col("shs")))).count())
-      val withDistinct = words.filter(size(col("w")) >= 5)
-        .select(col("doc_id"),
-          expr("array_distinct(transform(sequence(1, size(w) - 4), i -> concat_ws(' ', slice(w, i, 5))))").as("shs"))
-      time("shingles_with_distinct")(withDistinct.agg(sum(size(col("shs")))).count())
-      val shl = DedupOps.shingleArrays(docs, 5).persist()
-      time("shingle_arrays_build")(shl.count())
-      val sig = DedupOps.minhashSignatures(shl, 8)
-      time("minhash_sig")(sig.count())
-      time("minhash_sig_2")(sig.count())
-      val bandExpr =
-        "transform(sequence(0, 3), b -> md5(concat_ws('_', cast(sig[b * 2] as string), cast(sig[b * 2 + 1] as string))))"
-      val banded = sig.select(col("doc_id"),
-        posexplode(expr(bandExpr)).as(Seq("band", "bh")))
-      val cand = banded.as("a")
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      time("candidates")(cand.count())
-      time("candidates_2")(cand.count())
-      spark.stop(); return
-    }
     if (name == "adaptive_caps") {
       // print the data-derived skew constants for this corpus (PLANS.md
       // records them per round)

@@ -80,13 +80,6 @@ object ScalePoint {
     Files.exists(tgt) && !Files.isSymbolicLink(tgt) &&
       Files.exists(tgt.resolve("_SUCCESS"))
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(Files.delete(_))
-    finally walk.close()
-  }
-
   /** The replica shift is i·10⁷ — sound ONLY while every base id stays
     * below 10⁷ (the sf0.1 generator tops out ~10⁵–10⁶). A larger base
     * dir would silently ALIAS ids across replicas — two replicas of
@@ -117,7 +110,7 @@ object ScalePoint {
     buildScaledEvents(spark, baseDir, outDir)
     val docsTgt = Paths.get(s"$outDir/documents.parquet")
     if (builtComplete(docsTgt)) return
-    if (Files.exists(docsTgt)) deleteTree(docsTgt) // incomplete: rebuild
+    engine.VersionPointer.deleteTree(docsTgt) // incomplete: rebuild
     Files.createDirectories(Paths.get(outDir))
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
     requireIdsBelowShift(base, "documents", "doc_id")
@@ -172,7 +165,7 @@ object ScalePoint {
     if (builtComplete(tgt)) return
     Files.createDirectories(Paths.get(outDir))
     if (Files.isSymbolicLink(tgt)) Files.delete(tgt)
-    else if (Files.exists(tgt)) deleteTree(tgt) // incomplete: rebuild
+    else engine.VersionPointer.deleteTree(tgt) // incomplete: rebuild
     val base = spark.read.parquet(s"$baseDir/embeddings.parquet")
     requireIdsBelowShift(base, "embeddings", "vec_id")
     val dim = 64
@@ -217,7 +210,7 @@ object ScalePoint {
     if (builtComplete(tgt)) return
     Files.createDirectories(Paths.get(outDir))
     if (Files.isSymbolicLink(tgt)) Files.delete(tgt)
-    else if (Files.exists(tgt)) deleteTree(tgt) // incomplete: rebuild
+    else engine.VersionPointer.deleteTree(tgt) // incomplete: rebuild
     val baseEv = graft.engine.Tables.events(spark, baseDir)
     requireIdsBelowShift(baseEv, "events", "event_id", "user_id")
     baseEv

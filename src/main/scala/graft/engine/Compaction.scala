@@ -4,36 +4,44 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Small-file compaction for the four stored-index families (IVF
-  * assignments, PQ codes, BM25 postings, fingerprint postings/sizes).
+/** The engine's one versioned-table commit protocol: every table the
+  * engine rewrites in place goes through here, except the
+  * [[SnapshotStore]], which shares the same pointer ([[VersionPointer]])
+  * but keeps visible `v{N}` names for time travel.
   *
-  * Why this exists: every merge path is deliberately append-only — old
-  * files are never rewritten, so concurrent readers stay consistent and
-  * merge cost is O(|batch|) — but a steady CDC feed then appends one
-  * small parquet file per batch per partition FOREVER. At 100 TB the
-  * probe scans degrade to small-file soup (per-file open/footer costs
-  * dominate, row-group pruning stops paying). Compaction is the
-  * missing third verb of the lifecycle: build / merge×N / compact,
-  * exactly like log-structured stores (LSM levels, Delta/Iceberg
-  * OPTIMIZE) pair appends with periodic rewrites.
-  *
-  * Commit protocol — the same pointer swap as [[SnapshotStore]]
-  * (SnapshotStore.scala:41), applied per table dir:
-  * a table path `t` is either PLAIN (parquet files directly under `t`,
-  * how builds write it) or VERSIONED (`t/_v{N}` dirs plus a `t/_CURRENT`
-  * pointer naming the live one). [[resolve]] picks the live data dir;
-  * every merge/query path goes through it. Compaction writes the fully
-  * rewritten next version dir, then atomically moves the pointer —
-  * readers never observe a half-compacted table, and a crash mid-write
-  * leaves only an orphan `_v{N}` dir — invisible to readers in BOTH
-  * layouts (`_`-prefixed children are skipped by Spark's listing, and
-  * the pointer, when present, still names the last good version). Superseded data stays on disk until [[vacuum]] (in-flight
+  * A table path `t` is either PLAIN (parquet files directly under `t`,
+  * how builds and first appends write it) or VERSIONED (`t/_v{N}` dirs
+  * plus a `t/_CURRENT` pointer naming the live one — [[VersionPointer]]
+  * owns the pointer). [[resolve]] picks the live data dir; every
+  * append ([[guardedAppend]]) and every read goes through it.
+  * [[compactTable]] and [[publishVersion]] write the complete next
+  * version dir and then swap the pointer atomically: readers never see
+  * a half-written version, and a crash before the swap leaves only an
+  * orphan `_v{N}` — invisible to readers in BOTH layouts (`_`-prefixed
+  * children are skipped by Spark's listing, and the pointer, when
+  * present, still names the last good version) and cleared by the next
+  * publish. Superseded data stays on disk until [[vacuum]] (in-flight
   * readers planned against it must finish their scans), mirroring the
   * snapshot store's publish/vacuum split.
   *
+  * The tables on this protocol: the stored-index families' scan tables
+  * (IVF assignments, PQ/IVF-PQ codes, BM25 postings and lexicon,
+  * fingerprint postings/sizes/dfs, vocab counts, distinct-view sketches
+  * and exact companion, hash-index bands), their tombstone sets, the
+  * IVF/PQ/IVF-PQ drift logs (`merge_log`, `cell_log`), the stored
+  * tokenizer, the [[Ledger]] and the [[MetadataLog]].
+  *
+  * Why compaction exists: every merge path is deliberately append-only
+  * — old files are never rewritten, so concurrent readers stay
+  * consistent and merge cost is O(|batch|) — but a steady CDC feed then
+  * appends one small parquet file per batch per partition FOREVER.
+  * Compaction is the missing third verb of the lifecycle: build /
+  * merge×N / compact, exactly like log-structured stores (LSM levels,
+  * Delta/Iceberg OPTIMIZE) pair appends with periodic rewrites.
+  *
   * Single-writer discipline (same as [[StoredIndexes]] and the
   * reference's loader): compaction must not run concurrently with
-  * merges on the same index — a merge that resolved the live dir just
+  * merges on the same table — a merge that resolved the live dir just
   * before the pointer swap would append into the superseded version
   * and its rows would become unreachable. Readers need no coordination;
   * writers (merge, compact, vacuum) are scheduled, not concurrent.
@@ -56,15 +64,6 @@ object Compaction {
     else df.withColumn("bsig",
       concat(lit("legacy-"), monotonically_increasing_id()))
 
-  private def pointer(table: String): Path = Paths.get(table, "_CURRENT")
-
-  private def currentVersion(table: String): Option[Long] = {
-    val p = pointer(table)
-    // first line only: the format may grow trailing metadata lines
-    if (Files.exists(p)) Some(Files.readString(p).split('\n').head.trim.toLong)
-    else None
-  }
-
   /** The live data dir for `table`: `table/_v{N}` once compacted, the
     * plain dir before. All merge appends and query scans resolve
     * through here.
@@ -80,7 +79,7 @@ object Compaction {
     * (A `v{N}` dir named by the pointer is still honored — legacy
     * layout tolerance — but new versions are always `_v{N}`.) */
   def resolve(table: String): String =
-    currentVersion(table).map { v =>
+    VersionPointer.read(table).map { v =>
       val hidden = s"$table/_v$v"
       if (!Files.exists(Paths.get(hidden)) &&
         Files.exists(Paths.get(s"$table/v$v"))) s"$table/v$v"
@@ -174,7 +173,7 @@ object Compaction {
         case _: org.apache.spark.sql.AnalysisException => Nil
       }
     val tmp = Paths.get(table, "_committed.tmp")
-    if (Files.exists(tmp)) deleteRec(tmp)
+    VersionPointer.deleteTree(tmp)
     Files.createDirectories(tmp)
     legacy.foreach(t => Files.createFile(tmp.resolve(tagMarkerName(t))))
     try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
@@ -196,7 +195,7 @@ object Compaction {
             }
           }
         } finally stream.close()
-        deleteRec(tmp)
+        VersionPointer.deleteTree(tmp)
     }
   }
 
@@ -342,25 +341,19 @@ object Compaction {
     // not a reason to defer a deletion
     if ((!force && !inDebt) || counts.isEmpty) false
     else {
-    val live = resolve(table)
-    val next = currentVersion(table).getOrElse(-1L) + 1L
-    val nextDir = s"$table/_v$next"
-    val w = layout(spark.read.parquet(live)).write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(nextDir)
-    // `beforePublish` runs with the complete-but-unpublished version
-    // dir: the hook a family uses to carry version-scoped sidecars
-    // (IVF's `_centroids`) into the new version BEFORE the swap makes
-    // it live — a reader must never see a version missing its sidecar
-    beforePublish(nextDir)
-    // record the fresh layout's per-partition counts BEFORE publishing:
-    // they become the next trigger's debt baseline
-    writeBase(nextDir, countParquet(Paths.get(nextDir)))
-    val tmp = Paths.get(table, s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    true
+      val live = resolve(table)
+      publishVersion(table) { nextDir =>
+        val w = layout(spark.read.parquet(live)).write.mode("overwrite")
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+          .parquet(nextDir)
+        // `beforePublish` runs with the complete-but-unpublished version
+        // dir: the hook a family uses to carry version-scoped sidecars
+        // (IVF's `_centroids`) into the new version BEFORE the swap
+        // makes it live — a reader must never see a version missing its
+        // sidecar
+        beforePublish(nextDir)
+      }
+      true
     }
   }
 
@@ -374,20 +367,19 @@ object Compaction {
     * (an ANN retrain's centroids + the assignments computed against
     * them) rides one version dir and can never be observed torn. A
     * crash before the swap leaves the old version fully live; the
-    * orphan dir is reclaimed by the next [[vacuum]]. Single-writer,
-    * like every Compaction verb. */
+    * next publish clears the orphan dir before writing its own
+    * ([[VersionPointer.publish]]). Single-writer, like every Compaction
+    * verb. */
   def publishVersion(table: String)(write: String => Unit): Unit =
     Lease.withLease(table, "publishVersion") {
-    val next = currentVersion(table).getOrElse(-1L) + 1L
-    val nextDir = s"$table/_v$next"
-    write(nextDir)
-    writeBase(nextDir, countParquet(Paths.get(nextDir)))
-    val tmp = Paths.get(table, s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+      VersionPointer.publish(table, "_v") { dir =>
+        write(dir)
+        // the fresh layout's per-partition counts become the next
+        // trigger's debt baseline
+        writeBase(dir, countParquet(Paths.get(dir)))
+      }
+      ()
+    }
 
   /** Remove superseded data: version dirs older than the published one
     * (and, after the first compaction, the original plain-layout files
@@ -395,7 +387,7 @@ object Compaction {
     * window after [[compactTable]] — never inline with it. Returns the
     * paths removed. No-op on a never-compacted (plain) table. */
   def vacuum(table: String): Seq[String] =
-    Lease.withLease(table, "vacuum") { currentVersion(table) match {
+    Lease.withLease(table, "vacuum") { VersionPointer.read(table) match {
     case None => Seq.empty
     case Some(cur) =>
       val root = Paths.get(table)
@@ -411,22 +403,15 @@ object Compaction {
             // `_committed` is the table-lifetime batch-commit marker
             // store ([[commitTag]]) — version-independent by design;
             // `_LEASE` is THIS verb's own held writer lease
-            if (n != s"_v$cur" && n != s"v$cur" && n != "_CURRENT" &&
+            if (n != s"_v$cur" && n != s"v$cur" && n != VersionPointer.Name &&
                 n != "_committed" && n != "_LEASE") buf += p
           }
           buf.toSeq
         } finally stream.close()
       }
-      victims.foreach(deleteRec)
+      victims.foreach(VersionPointer.deleteTree)
       victims.map(_.toString)
   } }
-
-  private def deleteRec(p: Path): Unit = {
-    val stream = Files.walk(p)
-    try stream.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => { Files.deleteIfExists(f); () })
-    finally stream.close()
-  }
 
   private def copyRec(src: Path, dst: Path): Unit = {
     val stream = Files.walk(src)
@@ -450,23 +435,16 @@ object Compaction {
     * set). Single-writer, like [[appendTombstones]]: safe only because
     * no concurrent deleter can append between the rewrite's screen and
     * this clear. */
-  def clearTombstones(path: String): Unit = {
-    val t = Paths.get(s"$path/tombstones")
-    if (Files.exists(t)) deleteRec(t)
-  }
+  def clearTombstones(path: String): Unit = dropTable(s"$path/tombstones")
 
-  /** Reset an advisory sidecar (the IVF/PQ `merge_log`) to empty — the
-    * drift ledger restarts from zero after a retrain republishes the
-    * index (accumulated drift was measured against centroids that no
-    * longer exist). Removes the live dir AND any `._collapse` tmp so a
-    * crashed collapse can't resurrect pre-retrain rows. Single-writer,
-    * like every sidecar verb. */
-  def sidecarReset(dir: String): Unit = {
-    val tmp = Paths.get(dir + "._collapse")
-    if (Files.exists(tmp)) deleteRec(tmp)
-    val live = Paths.get(dir)
-    if (Files.exists(live)) deleteRec(live)
-  }
+  /** Delete `table` whole: pointer, every version and any plain files.
+    * Besides clearing tombstone sets, this resets a drift log
+    * (`merge_log`, `cell_log`) after a retrain or rebuild republishes
+    * its index — the accumulated drift was measured against control
+    * planes that no longer exist. Single-writer, like every Compaction
+    * verb. */
+  def dropTable(table: String): Unit =
+    VersionPointer.deleteTree(Paths.get(table))
 
   /** Republish the live BM25 lexicon version with its `_applied`
     * replay-signature log wiped down to `retainApplied` (data and
@@ -955,8 +933,7 @@ object Compaction {
     * lands between the rewrite and the clear. */
   private def clearServedTombstones(path: String, tomb: Option[DataFrame],
                                     served: Boolean): Unit =
-    if (tomb.isDefined && served)
-      deleteRec(Paths.get(s"$path/tombstones"))
+    if (tomb.isDefined && served) clearTombstones(path)
 
   /** One scheduled-maintenance tick for any stored-index family:
     * vacuum first (reclaims versions superseded by the PREVIOUS tick —
@@ -981,17 +958,18 @@ object Compaction {
         // partial instead of only coalescing files: the log stays O(1)
         // rows on a long-running stream, and shouldRetrain recovers the
         // identical weighted mean from the single partial
-        def collapseDriftLog(dir: String): Boolean =
-          collapseSidecar(spark, dir, maxFilesPerPartition,
+        def collapseDriftLog(log: String): Boolean =
+          compactTable(spark, log,
             df => df.agg(
               sum("n").cast("long").as("n"),
               (sum(col("mean_d2") * col("n").cast("double")) /
                 sum(col("n").cast("double"))).as("mean_d2"))
-              .filter(col("n").isNotNull))
+              .filter(col("n").isNotNull).coalesce(1),
+            maxFilesPerPartition = maxFilesPerPartition)
         val mergeLog = collapseDriftLog(s"$path/merge_log")
-        // the composite's coarse-cell drift ledger (same shape, own
-        // dir — shouldRetrainIvfPq's second signal); absent on ivf/pq
-        // and pre-r17 ivfpq indexes, where the collapse no-ops
+        // the composite's coarse-cell drift log (same shape, own table
+        // — shouldRetrainIvfPq's second signal); absent on ivf/pq and
+        // pre-r17 ivfpq indexes, where the collapse no-ops
         val cellLog = kind == "ivfpq" && collapseDriftLog(s"$path/cell_log")
         mergeLog || cellLog
       case _ => false
@@ -1000,124 +978,15 @@ object Compaction {
       retainApplied) || logCollapsed
   }
 
-  /** Collapse a tiny append-per-merge sidecar (the IVF/PQ `merge_log`:
-    * one ~1-row file per absorbed batch) back to a single file once it
-    * holds more than `maxFiles` data files. The sidecar is UNVERSIONED
-    * (advisory drift rows — the same posture as the fingerprint
-    * family's dfs table), so this must only run under the tick's
-    * single-writer discipline. The rewrite lands in a sibling temp dir
-    * first (so it never reads the path it replaces), then the live dir
-    * is deleted and the temp renamed into place. `tmp/_SUCCESS` marks a
-    * complete rewrite: from that point the temp dir is authoritative,
-    * so recovery replaces whatever remains of the live dir with it —
-    * including a PARTIALLY deleted live dir, which must never win over
-    * the full copy. A temp dir without `_SUCCESS` is an interrupted
-    * write and is discarded — UNLESS the live dir is already gone, in
-    * which case the temp dir is the only copy left and is adopted
-    * (that state is unreachable under this writer, which verifies the
-    * marker before touching live, but must not be answered by deleting
-    * the sole survivor). The writer fails loudly after the rewrite if
-    * the committer was configured to skip `_SUCCESS`
-    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`) —
-    * proceeding to delete live would open exactly that unrecoverable
-    * window. In the crash window `shouldRetrain`/`shouldRetrainPq` may
-    * see a missing log and report "no drift" — an advisory signal
-    * outage of one maintenance interval, not data loss.
-    *
-    * Fresh-rows window, CLOSED at the writer: the r14 shape lost drift
-    * rows a restarted stream appended to the live dir between a crash
-    * mid-collapse and the next tick's recovery (recovery replaces live
-    * with the pre-crash snapshot; a union could not distinguish "fresh
-    * append" from "pre-crash row also in tmp" in a PARTIALLY deleted
-    * live dir, so it would double-count). The fix is ordering, not
-    * unioning: every sidecar writer appends through [[sidecarAppend]],
-    * which COMPLETES any pending recovery first — fresh rows therefore
-    * always land in a recovered live dir, and by the time the tick's
-    * recovery runs, anything it finds in live beside a marked tmp is by
-    * construction pre-crash residue, safe to replace. */
-  private def collapseSidecar(spark: SparkSession, dir: String,
-                              maxFiles: Int,
-                              collapse: DataFrame => DataFrame =
-                                identity): Boolean = {
-    val live = Paths.get(dir)
-    recoverSidecar(dir)
-    if (!Files.exists(live)) return false
-    if (filesPerPartition(dir).values.sum <= maxFiles) return false
-    val tmp = Paths.get(dir + "._collapse")
-    collapse(spark.read.parquet(dir)).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // the recovery protocol keys off tmp/_SUCCESS: if the committer was
-    // configured to skip the marker, deleting live now would leave a
-    // crash window with NO authoritative copy — refuse instead
-    if (!Files.exists(tmp.resolve("_SUCCESS"))) {
-      deleteRec(tmp)
-      throw new IllegalStateException(
-        s"collapseSidecar: rewrite of $dir produced no _SUCCESS marker " +
-          "(committer configured with marksuccessfuljobs=false?) — " +
-          "aborting before deleting the live sidecar")
-    }
-    deleteRec(live)
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    true
-  }
-
-  /** Complete any pending sidecar-collapse recovery on `dir` — the
-    * crash-recovery head of [[collapseSidecar]], factored out so every
-    * sidecar TOUCH (the tick's collapse, a stream's drift append, an
-    * advisory read) runs it first. A completed rewrite
-    * (`tmp/_SUCCESS` present) is the one full copy — live may be whole,
-    * partial, or gone, and is replaced; a marker-less tmp is adopted
-    * only when live is gone (sole survivor), discarded otherwise.
-    * Idempotent and cheap (two existence probes) when there is nothing
-    * to recover. Same single-writer discipline as every Compaction
-    * verb. */
-  def recoverSidecar(dir: String): Unit = {
-    val live = Paths.get(dir)
-    val tmp = Paths.get(dir + "._collapse")
-    if (Files.exists(tmp.resolve("_SUCCESS"))) {
-      if (Files.exists(live)) deleteRec(live)
-      Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    } else if (Files.exists(tmp) && !Files.exists(live)) {
-      // no marker but live is gone: tmp is the only copy — adopt it
-      Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    } else if (Files.exists(tmp)) {
-      deleteRec(tmp) // orphan of an interrupted write; live is complete
-    }
-  }
-
-  /** The authoritative data dir of a sidecar WITHOUT mutating anything:
-    * a marked-complete `._collapse` tmp is authoritative (the crash
-    * window's one full copy), else the live dir if present. Pure — the
-    * read-side companion to [[recoverSidecar]] for advisory readers
-    * (retrain signals, monitors) that must NOT join the single-writer
-    * protocol: a reader that ran recovery could delete a collapse's
-    * in-flight tmp dir out from under the maintenance tick. Returns
-    * None when neither copy exists. */
-  def sidecarReadPath(dir: String): Option[String] = {
-    val tmp = dir + "._collapse"
-    if (Files.exists(Paths.get(tmp, "_SUCCESS"))) Some(tmp)
-    else if (Files.exists(Paths.get(dir))) Some(dir)
-    else None
-  }
-
-  /** Append to an UNVERSIONED advisory sidecar (the IVF/PQ `merge_log`),
-    * recovery-first: completing any pending collapse recovery BEFORE
-    * the append is what closes the fresh-rows loss window
-    * ([[collapseSidecar]]'s doc) — a row appended here can never land
-    * in a live dir that a later recovery will discard, because the
-    * recovery that would have discarded it has already run. `body`
-    * receives the recovered dir path. */
-  def sidecarAppend[T](dir: String)(body: String => T): T = {
-    recoverSidecar(dir)
-    body(dir)
-  }
-
   /** [[vacuum]] over every table [[compactIndex]] maintains for `kind` —
     * the second half of the maintenance schedule, run one reader window
     * after the compaction that superseded the data. */
   def vacuumIndex(path: String, kind: String): Seq[String] = (kind match {
-    case "ivf"         => Seq(s"$path/assignments")
-    case "pq" | "ivfpq" => Seq(s"$path/codes")
+    // the drift logs' superseded versions too (collapsed by the tick)
+    case "ivf"         => Seq(s"$path/assignments", s"$path/merge_log")
+    case "pq"          => Seq(s"$path/codes", s"$path/merge_log")
+    case "ivfpq"       =>
+      Seq(s"$path/codes", s"$path/merge_log", s"$path/cell_log")
     case "vocab"       => Seq(s"$path/counts")
     // the lexicon versions too: every merge/retraction republishes the
     // side tables as a new lexicon version (publishBm25Side), so a

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * append-only parquet log. A run is recorded as status events
   * (running → completed/failed); the "current state" of each run is the
   * latest event — the same last-write-wins window pattern (W4) the rest
-  * of the engine uses, instead of in-place UPDATEs.
+  * of the engine uses, instead of in-place UPDATEs. The log is a
+  * [[Compaction]] versioned table: appends go to the live version,
+  * compaction publishes a new one.
   */
 class MetadataLog(spark: SparkSession, path: String) {
   import spark.implicits._
@@ -51,92 +53,46 @@ class MetadataLog(spark: SparkSession, path: String) {
     }
 
   /** Write all queued events as ONE parquet append (one file, not one
-    * per event). */
+    * per event) into the log's live version. */
   def flush(): Unit = synchronized {
     if (pending.nonEmpty) {
-      // adopt a torn compaction first: appending into a freshly
-      // re-created dir while the compacted events sit in _compacting
-      // would strand them
-      recoverCompaction()
-      pending.toSeq.toDF(cols: _*)
-        .coalesce(1).write.mode("append").parquet(path)
+      Compaction.guardedAppend(path) { live =>
+        pending.toSeq.toDF(cols: _*)
+          .coalesce(1).write.mode("append").parquet(live)
+      }
       pending.clear()
     }
   }
 
   /** Rewrite the accumulated log into `targetFiles` files — the
-    * compaction any small-event parquet log needs to stay listable.
-    * Local-FS swap (write aside, then replace); a production deployment
-    * would keep the log in a versioned/table format where compaction is
-    * native. Returns (files before, files after).
+    * compaction any small-event parquet log needs to stay listable —
+    * as the next version of a [[Compaction]] versioned table: the
+    * rewrite lands in its own version dir and the pointer swap
+    * publishes it, so a crash at any point leaves the previous version
+    * live and whole. The version superseded by the PREVIOUS compaction
+    * is vacuumed first (one compaction interval of reader window).
+    * Returns (files before, files after) of the live version.
     *
-    * Holds the same monitor as [[flush]]: an unsynchronized compaction
-    * racing a concurrent flush could append a part file between the
-    * rewrite's listing and the delete walk — that status event would be
-    * deleted unrecorded. The swap window itself is covered by
-    * [[recoverCompaction]]: a crash after the delete but before the
-    * move leaves the data only in the `_compacting` dir, which every
-    * read/flush entry point adopts before touching the log. */
+    * Holds the same monitor as [[flush]] and [[read]]: an append
+    * landing between the rewrite's read and the swap would be left in
+    * the superseded version. */
   def compact(targetFiles: Int = 1): (Int, Int) = synchronized {
-    import java.nio.file.{Files, Paths}
-    recoverCompaction()
-    def partFiles() = {
-      val s = Files.list(Paths.get(path))
-      try s.filter(p => p.getFileName.toString.startsWith("part-")).count().toInt
-      finally s.close()
-    }
-    val before = partFiles()
-    val tmp = path + "_compacting"
-    read().coalesce(targetFiles).write.mode("overwrite").parquet(tmp)
-    val dir = Paths.get(path)
-    val del = Files.walk(dir)
-    try del.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
-    finally del.close()
-    Files.move(Paths.get(tmp), dir)
-    (before, partFiles())
-  }
-
-  /** Adopt a torn compaction swap. The monitor is held from the tmp
-    * write through the move, so a `_compacting` dir carrying _SUCCESS
-    * is ALWAYS the authoritative full rewrite — no append can have
-    * landed in the live dir after the tmp materialized. It is adopted
-    * unconditionally: any live remnant (including a live dir left
-    * PARTIALLY deleted by a crash mid-delete-walk — the walk is not
-    * atomic) is discarded and the tmp moved into place. A tmp without
-    * _SUCCESS is a torn write and is discarded instead. */
-  private def recoverCompaction(): Unit = {
-    import java.nio.file.{Files, Paths}
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val del = Files.walk(p)
-      try del.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally del.close()
-    }
-    val tmp = Paths.get(path + "_compacting")
-    if (Files.exists(tmp)) {
-      if (Files.exists(tmp.resolve("_SUCCESS"))) {
-        val live = Paths.get(path)
-        if (Files.exists(live)) rmTree(live)
-        Files.move(tmp, live)
-        ()
-      } else {
-        // no _SUCCESS: the rewrite itself tore — the live dir (which a
-        // not-yet-started delete walk left intact) remains authoritative
-        rmTree(tmp)
-      }
-    }
+    def liveFiles() = Compaction.filesPerPartition(path).values.sum
+    Compaction.vacuum(path)
+    val before = liveFiles()
+    Compaction.compactTable(spark, path, _.coalesce(targetFiles),
+      force = true)
+    (before, liveFiles())
   }
 
   /** The returned frame is MATERIALIZED inside the monitor
     * (`localCheckpoint`): the scan cannot race a concurrent [[compact]]
-    * deleting part files under it — the same listing/delete window the
-    * monitor closes for [[flush]]. The log is a control-plane table
-    * (status events), so eager materialization is a few KB of blocks;
-    * the checkpoint is a pure cache and is dropped with its RDD. */
+    * vacuuming the files under it — the same window the monitor closes
+    * for [[flush]]. The log is a control-plane table (status events),
+    * so eager materialization is a few KB of blocks; the checkpoint is
+    * a pure cache and is dropped with its RDD. */
   def read(): DataFrame = synchronized {
-    recoverCompaction()
-    spark.read.parquet(path).localCheckpoint(true)
+    spark.read.parquet(Compaction.resolve(path)).localCheckpoint(true)
   }
 
   /** Latest state per run (pipeline_metadata.py:267-275 generalized from

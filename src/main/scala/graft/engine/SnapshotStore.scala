@@ -10,12 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * protocol is ours: SURVEY §7.3).
   *
   * Layout: `root/v{N}/` parquet dirs plus a `root/_CURRENT` pointer file
-  * whose content is the published version number. Writers write the new
+  * whose first line is the published version number — the engine's one
+  * pointer protocol ([[VersionPointer]]), shared with [[Compaction]]'s
+  * versioned tables. Writers write the new
   * version dir fully, then atomically move a temp pointer over `_CURRENT`;
   * readers resolve the pointer first, so they never observe a
   * half-written snapshot. Old versions remain for time travel until
   * vacuumed. A crash between dir write and pointer publish leaves an
-  * orphan dir — harmless, the pointer still names the last good version
+  * orphan dir — harmless, the pointer still names the last good version,
+  * and the retry clears it before writing its own
   * (same replay-safety window the reference has between commit and ledger
   * append, solved the same way: re-publishing version N+1 is idempotent).
   *
@@ -31,10 +34,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class SnapshotStore(spark: SparkSession, root: String) {
   private val rootPath = Paths.get(root)
-  private val pointer = rootPath.resolve("_CURRENT")
 
-  def currentVersion(): Option[Long] =
-    if (Files.exists(pointer)) Some(Files.readString(pointer).trim.toLong) else None
+  def currentVersion(): Option[Long] = VersionPointer.read(root)
 
   def read(): Option[DataFrame] = currentVersion().map(readVersion)
 
@@ -454,20 +455,13 @@ class SnapshotStore(spark: SparkSession, root: String) {
     }
 
   /** Write the next version via `write` (handed the version dir path)
-    * and atomically publish it — the shared pointer protocol behind
-    * [[publish]] and [[publishZOrdered]]. `write` may drop `_`-prefixed
-    * sidecars (layout metadata) into the dir; they ride the same
-    * all-or-nothing publication as the data. */
-  private def publishVersionDir(write: String => Unit): Long = {
-    Files.createDirectories(rootPath)
-    val next = currentVersion().getOrElse(-1L) + 1L
-    write(s"$root/v$next")
-    val tmp = rootPath.resolve(s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    next
-  }
+    * and atomically publish it — the engine's one pointer protocol
+    * ([[VersionPointer]], which also clears a torn attempt's orphan
+    * dir) behind every publish verb here. `write` may drop
+    * `_`-prefixed sidecars (layout metadata) into the dir; they ride
+    * the same all-or-nothing publication as the data. */
+  private def publishVersionDir(write: String => Unit): Long =
+    VersionPointer.publish(root, "v")(write)
 
   /** OPTIMIZE-style clustered publish: the next version written in
     * z-order of (`a`, `b`) — [[ZOrder.clustered]]'s range-partition +
@@ -578,11 +572,10 @@ class SnapshotStore(spark: SparkSession, root: String) {
     }
     val drop = all.filterNot(keep)
     drop.foreach { v =>
-      val tmp = rootPath.resolve(s"v$v._purge")
-      if (Files.exists(tmp)) deleteTree(tmp)
-      deleteTree(rootPath.resolve(s"v$v"))
+      VersionPointer.deleteTree(rootPath.resolve(s"v$v._purge"))
+      VersionPointer.deleteTree(rootPath.resolve(s"v$v"))
     }
-    purgeTemps().filterNot(adoptablePurgeTemp).foreach(deleteTree)
+    purgeTemps().filterNot(adoptablePurgeTemp).foreach(VersionPointer.deleteTree)
     drop
   }
 
@@ -688,7 +681,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
             (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
               .parquet(tmp.toString)
             if (!Files.exists(tmp.resolve("_SUCCESS"))) {
-              deleteTree(tmp)
+              VersionPointer.deleteTree(tmp)
               throw new IllegalStateException(
                 s"purgeKeys: committer wrote no _SUCCESS marker under " +
                   s"$tmp — refusing to replace the live version dir")
@@ -709,7 +702,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
             // _SUCCESS alone cannot gate the sidecars). A crash before
             // the marker discards the temp and the re-run rewrites it.
             Files.createFile(tmp.resolve("_PURGED"))
-            deleteTree(dir)
+            VersionPointer.deleteTree(dir)
             Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
           }
           fresh.toSeq ++ hist
@@ -967,9 +960,9 @@ class SnapshotStore(spark: SparkSession, root: String) {
       // of the version, so adopting (possibly without a layout sidecar)
       // beats losing the version outright
       if (adoptablePurgeTemp(tmp)) {
-        if (Files.exists(live)) deleteTree(live)
+        VersionPointer.deleteTree(live)
         Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-      } else deleteTree(tmp)
+      } else VersionPointer.deleteTree(tmp)
     }
   }
 
@@ -989,14 +982,6 @@ class SnapshotStore(spark: SparkSession, root: String) {
         buf.toSeq
       } finally stream.close()
     }
-
-  private def deleteTree(dir: java.nio.file.Path): Unit = {
-    val stream = Files.walk(dir)
-    try {
-      stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    } finally stream.close()
-  }
 
   /** Versions currently on disk (published or orphaned), ascending.
     * Strictly `v{digits}` names: a purge's `v{N}._purge` staging temp

@@ -23,13 +23,9 @@ private[graft] object StoredIndexes {
 
   private lazy val root: java.nio.file.Path = {
     val r = java.nio.file.Files.createTempDirectory("graft_indexes_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(r.toFile)))
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => VersionPointer.deleteTree(r)))
     r
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteRec))
-    f.delete(); ()
   }
 
   private val built =

@@ -44,15 +44,21 @@ object Tables {
     // RDD lineage AQE never sees. Ignoring openCostInBytes UNDER-counts
     // splits for many-small-file inputs; the only consequence is
     // spreading when the scan already had enough splits, and adjacent
-    // repartitions collapse (CollapseRepartition), so the conservative
-    // estimate is safe in both directions.
+    // repartitions collapse (CollapseRepartition). The estimate can
+    // also OVER-count (filters and joins, see splitEstimate); then the
+    // spread is skipped and the kernel runs under-parallelized — slower,
+    // never a different answer.
     if (splitEstimate(df) >= target) df
     else df.repartition(target, df.col(key))
   }
 
   /** Estimated scan split count of `df`'s plan: optimizer-stats bytes
-    * over `spark.sql.files.maxPartitionBytes`. Filters shrink the
-    * estimate (selectivity), which only errs toward spreading. */
+    * over `spark.sql.files.maxPartitionBytes`. With CBO off (the
+    * default) the size-only stats visitor passes a child's
+    * `sizeInBytes` through `Filter` unchanged (and multiplies it across
+    * joins), so a filter does NOT shrink the estimate: a filtered or
+    * joined input can be over-estimated, and an over-estimate can skip
+    * the spread a genuinely narrow input needed. */
   private def splitEstimate(df: DataFrame): Long = {
     val maxSplit = math.max(1L,
       df.sparkSession.sessionState.conf.filesMaxPartitionBytes)

@@ -1019,13 +1019,11 @@ object SimilarityOps {
       avg(pqDistortion(subDim, codebooks)).as("mean_d2"),
       avg(assignedDist2(col("v"), cents)).as("cell_d2")).head()
     if (md.getLong(0) > 0L) {
-      // recovery-first append: closes the crash-window fresh-row loss
-      // (Compaction.sidecarAppend doc)
-      graft.engine.Compaction.sidecarAppend(s"$path/merge_log") { log =>
+      Compaction.guardedAppend(s"$path/merge_log") { log =>
         Seq((md.getLong(0), md.getDouble(1))).toDF("n", "mean_d2")
           .coalesce(1).write.mode("append").parquet(log)
       }
-      // the coarse-cell drift row rides its OWN sidecar (same (n,
+      // the coarse-cell drift row rides its OWN log (same (n,
       // mean_d2) shape → same collapse recipe), never the merge_log —
       // mixing schemas in one dir would torn-read on old indexes.
       // Gated on the baseline's existence: a pre-r17 index has no
@@ -1033,7 +1031,7 @@ object SimilarityOps {
       // rebuild resets the log anyway — appending there is dead I/O.
       if (java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$path/cell_meta")))
-        graft.engine.Compaction.sidecarAppend(s"$path/cell_log") { log =>
+        Compaction.guardedAppend(s"$path/cell_log") { log =>
           Seq((md.getLong(0), md.getDouble(2))).toDF("n", "mean_d2")
             .coalesce(1).write.mode("append").parquet(log)
         }
@@ -1119,8 +1117,8 @@ object SimilarityOps {
     Compaction.clearTombstones(path)
     // drift restarts from zero: both logs measured against dead control
     // planes
-    Compaction.sidecarReset(s"$path/merge_log")
-    Compaction.sidecarReset(s"$path/cell_log")
+    Compaction.dropTable(s"$path/merge_log")
+    Compaction.dropTable(s"$path/cell_log")
     // the new regime's quality yardsticks for the NEXT drift cycle —
     // ADC distortion AND the coarse assigned-cell d² (shouldRetrainIvfPq)
     val md = e.agg(count(lit(1)).as("n"),
@@ -1315,8 +1313,7 @@ object SimilarityOps {
     val m = nv.agg(count(lit(1)).as("n"),
       avg(assignedDist2(col("v"), cents)).as("mean_d2")).head()
     if (m.getLong(0) > 0L)
-      // recovery-first append (Compaction.sidecarAppend doc)
-      graft.engine.Compaction.sidecarAppend(s"$path/merge_log") { log =>
+      Compaction.guardedAppend(s"$path/merge_log") { log =>
         Seq((m.getLong(0), m.getDouble(1))).toDF("n", "mean_d2")
           .coalesce(1).write.mode("append").parquet(log)
       }
@@ -1384,7 +1381,7 @@ object SimilarityOps {
     // tombstones were served physically by the republish
     Compaction.clearTombstones(path)
     // drift restarts from zero: the log measured against dead centroids
-    Compaction.sidecarReset(s"$path/merge_log")
+    Compaction.dropTable(s"$path/merge_log")
     // the new regime's quality yardstick for the NEXT drift cycle
     val m = vecs.agg(count(lit(1)).as("n"),
       avg(assignedDist2(col("v"), cents)).as("mean_d2")).head()
@@ -1411,26 +1408,22 @@ object SimilarityOps {
                     threshold: Double = 2.0): Boolean =
     driftExceeds(spark, s"$path/merge_log", s"$path/meta", threshold)
 
-  /** One drift-ratio evaluation: the sidecar log's n-weighted mean
+  /** One drift-ratio evaluation: the drift log's n-weighted mean
     * against the one-row baseline's, true past `threshold`. Advisory
-    * read, crash-window-aware but PURE: a marked-complete collapse tmp
-    * is authoritative, else the live dir. A reader must never run
-    * recovery itself — that would delete an in-flight tmp out from
-    * under the maintenance tick (readers are outside the single-writer
-    * protocol by design). The resolve→read pair is inherently racy
-    * against a concurrent tick (the resolved dir can move mid-scan), so
-    * the read re-resolves once on a path failure and otherwise answers
-    * "no signal" — an advisory reader returns an answer, it never
-    * crashes the caller over a maintenance race. */
+    * read of the log's live version ([[Compaction.resolve]]), outside
+    * the single-writer protocol by design. The resolve→read pair is
+    * inherently racy against a concurrent tick (the live version can be
+    * vacuumed mid-scan), so the read re-resolves once on a path failure
+    * and otherwise answers "no signal" — an advisory reader returns an
+    * answer, it never crashes the caller over a maintenance race. */
   private def driftExceeds(spark: org.apache.spark.sql.SparkSession,
                            logDir: String, metaDir: String,
                            threshold: Double): Boolean = {
     def readLog(): Option[org.apache.spark.sql.Row] =
-      graft.engine.Compaction.sidecarReadPath(logDir).map { d =>
-        spark.read.parquet(d)
-          .agg(sum("n").cast("long").as("n"),
-            sum(col("mean_d2") * col("n").cast("double")).as("w")).head()
-      }
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(logDir))) None
+      else Some(spark.read.parquet(Compaction.resolve(logDir))
+        .agg(sum("n").cast("long").as("n"),
+          sum(col("mean_d2") * col("n").cast("double")).as("w")).head())
     val merged = (try readLog() catch {
       case _: org.apache.spark.sql.AnalysisException | _: java.io.IOException |
           _: org.apache.spark.SparkException =>
@@ -1787,8 +1780,7 @@ object SimilarityOps {
       avg(pqDistortion(subDim, codebooks)).as("mean_d2")).head()
     if (md.getLong(0) > 0L) {
       import spark.implicits._
-      // recovery-first append (Compaction.sidecarAppend doc)
-      graft.engine.Compaction.sidecarAppend(s"$path/merge_log") { log =>
+      Compaction.guardedAppend(s"$path/merge_log") { log =>
         Seq((md.getLong(0), md.getDouble(1))).toDF("n", "mean_d2")
           .coalesce(1).write.mode("append").parquet(log)
       }
@@ -1871,7 +1863,7 @@ object SimilarityOps {
     }
     // ---- published; everything below is advisory and self-healing ----
     Compaction.clearTombstones(path)
-    Compaction.sidecarReset(s"$path/merge_log")
+    Compaction.dropTable(s"$path/merge_log")
     val md = e.agg(count(lit(1)).as("n"),
       avg(pqDistortion(subDim, codebooks)).as("mean_d2")).head()
     Seq((md.getLong(0), md.getDouble(1))).toDF("n", "mean_d2")

@@ -360,7 +360,7 @@ object TextOps {
                              viewPath: String, rules: Int,
                              tokPath: String): Unit = {
     val trained = bpeTrainFromVocab(spark, viewPath, rules)
-    publishTokenizer(tokPath) { dir =>
+    publishArtifact(tokPath) { dir =>
       trained.coalesce(1).write.parquet(s"$dir/rules")
       bpeIdTableOf(storedVocab(spark, viewPath), collectRules(trained))
         .coalesce(1).write.parquet(s"$dir/ids")
@@ -628,7 +628,7 @@ object TextOps {
     * no training pass at all, the same build-once/read-many posture as
     * every other stored family here. Both tables are control-plane
     * tiny (|alphabet| + k rows), written single-file into one `_v{N}`
-    * dir behind an atomic `_CURRENT` pointer ([[publishTokenizer]]) —
+    * dir behind an atomic `_CURRENT` pointer ([[publishArtifact]]) —
     * rules and ids switch TOGETHER, never a new rule table against an
     * old id table. Frozen means frozen: documents arriving after the
     * build may carry symbols the build corpus never produced — the
@@ -637,7 +637,7 @@ object TextOps {
     * the retrain decision, mirroring the IVF family's drift signal. */
   def buildTokenizer(docs: DataFrame, rules: Int, path: String): Unit = {
     val trained = bpeTrain(docs, rules)
-    publishTokenizer(path) { dir =>
+    publishArtifact(path) { dir =>
       trained.coalesce(1).write.parquet(s"$dir/rules")
       bpeIdTable(docs, collectRules(trained))
         .coalesce(1).write.parquet(s"$dir/ids")
@@ -648,66 +648,28 @@ object TextOps {
     * that must switch together: an in-place overwrite would expose a
     * reader to a new rule table against an old id table (silently wrong
     * token ids) or a mid-delete missing path. Both tables are written
-    * fully into a fresh `_v{N}` dir, then one `_CURRENT` pointer moves
-    * atomically — the [[graft.engine.SnapshotStore]] protocol at
-    * artifact granularity. Versions older than the previous one are
-    * dropped after the publish (readers planned against the prior
-    * version finish their scans; the keep-2 posture of the snapshot
-    * vacuum). */
-  private def publishTokenizer(path: String)(write: String => Unit): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    def deleteRec(d: java.nio.file.Path): Unit = {
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
-    Files.createDirectories(Paths.get(path))
-    val next = tokenizerVersion(path).getOrElse(-1L) + 1L
-    // self-heal: a `_v$next` dir can only be the orphan of a publish
-    // that crashed before its pointer move (the pointer never named
-    // it) — remove it so the retry isn't wedged by ErrorIfExists
-    val target = Paths.get(path, s"_v$next")
-    if (Files.exists(target)) deleteRec(target)
-    write(s"$path/_v$next")
-    val tmp = Paths.get(path, s"_CURRENT.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, Paths.get(path, "_CURRENT"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    val s0 = Files.list(Paths.get(path))
-    try s0.forEach { d =>
-      val name = d.getFileName.toString
-      // retention: versions older than the previous one, plus pointer
-      // tmp files a crash between write and move left behind
-      if (name.startsWith("_v") &&
-          name.drop(2).toLongOption.exists(_ < next - 1L)) deleteRec(d)
-      else if (name.startsWith("_CURRENT.tmp")) Files.deleteIfExists(d)
-    } finally s0.close()
-  }
-
-  private def tokenizerVersion(path: String): Option[Long] = {
-    val p = java.nio.file.Paths.get(path, "_CURRENT")
-    if (java.nio.file.Files.exists(p))
-      Some(java.nio.file.Files.readString(p).trim.toLong)
-    else None
+    * fully into the next version of a [[Compaction]] versioned table,
+    * whose pointer swap publishes them at once. The vacuum just before
+    * the publish keeps the previous version beside the new one (readers
+    * planned against it finish their scans; the keep-2 posture of the
+    * snapshot vacuum). */
+  private def publishArtifact(path: String)(write: String => Unit): Unit = {
+    Compaction.vacuum(path)
+    Compaction.publishVersion(path)(write)
   }
 
   /** True once [[buildTokenizer]]/[[buildTokenizerFromView]] has
-    * published an artifact at `path`. */
+    * published an artifact at `path`. The live version resolves through
+    * the pointer; an artifact written by the pre-pointer builds (plain
+    * `rules/` + `ids/` dirs, no pointer) still reads from the root. */
   def tokenizerExists(path: String): Boolean =
-    tokenizerVersion(path).isDefined ||
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, "rules"))
+    java.nio.file.Files.exists(
+      java.nio.file.Paths.get(Compaction.resolve(path), "rules"))
 
   private def tokenizerLiveDir(path: String): String =
-    tokenizerVersion(path).map(v => s"$path/_v$v").getOrElse {
-      // legacy layout tolerance: an artifact written by the pre-pointer
-      // builds (plain rules/ + ids/ dirs) still reads — the next
-      // publish switches it to the versioned layout
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path, "rules")))
-        path
-      else throw new IllegalStateException(
-        s"no tokenizer artifact published at $path — build one first")
-    }
+    if (tokenizerExists(path)) Compaction.resolve(path)
+    else throw new IllegalStateException(
+      s"no tokenizer artifact published at $path — build one first")
 
   /** ENCODE against a stored tokenizer — [[bpeEncodeIds]]'s production
     * twin: rules and vocabulary come from the frozen artifact (no

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ChangeGen, Ledger, MetadataLog, SnapshotStore}
+import graft.engine.{ChangeGen, Compaction, Ledger, MetadataLog, SnapshotStore}
 
 class PipelineSpec extends AnyFunSuite {
   import TestSpark._
@@ -345,29 +345,47 @@ class PipelineSpec extends AnyFunSuite {
   test("metadata log: buffered flush writes one file, compaction preserves events") {
     import java.nio.file.{Files, Paths}
     def partFiles(p: String): Int = {
-      val s = Files.list(Paths.get(p))
+      val s = Files.list(Paths.get(Compaction.resolve(p)))
       try s.filter(f => f.getFileName.toString.startsWith("part-")).count().toInt
       finally s.close()
     }
-    val path = tmp("meta_c") + "/runs"
-    val log = new MetadataLog(spark, path)
-    val t = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
-    // immediate mode: one file per event (the tiny-files failure mode)
-    (1 to 6).foreach(i => log.record("p", s"run$i", "completed", i.toLong, at = t))
-    assert(partFiles(path) === 6)
+    // the second input tears one compaction after it wrote its version
+    // and before the pointer swap, then carries on
+    Seq(false, true).foreach { crashBeforeSwap =>
+      val path = tmp("meta_c") + "/runs"
+      val log = new MetadataLog(spark, path)
+      val t = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+      def runs() = log.currentRuns().orderBy("run_id").collect().toSeq
+      // immediate mode: one file per event (the tiny-files failure mode)
+      (1 to 5).foreach(i => log.record("p", s"run$i", "completed", i.toLong, at = t))
+      if (crashBeforeSwap) {
+        val atCrash = runs()
+        intercept[IllegalStateException] {
+          Compaction.compactTable(spark, path, _.coalesce(1), force = true,
+            beforePublish = _ => throw new IllegalStateException("crash"))
+        }
+        assert(Files.exists(Paths.get(path, "_v0")),
+          "the torn compaction wrote its version")
+        assert(runs() === atCrash,
+          "a compaction torn before its swap must leave currentRuns unchanged")
+      }
+      log.record("p", "run6", "completed", 6L, at = t)
+      assert(partFiles(path) === 6)
 
-    // compaction rewrites the log without losing or reordering state
-    val before = log.currentRuns().orderBy("run_id").collect().toSeq
-    val (was, now) = log.compact(targetFiles = 1)
-    assert(was === 6 && now === 1)
-    assert(log.currentRuns().orderBy("run_id").collect().toSeq === before)
+      // compaction rewrites the log without losing or reordering state
+      val before = runs()
+      val (was, now) = log.compact(targetFiles = 1)
+      assert(was === 6 && now === 1)
+      assert(runs() === before)
+      assert(log.read().count() === 6L, "no event may be lost or doubled")
 
-    // buffered mode: a whole batch of events lands as ONE appended file
-    (7 to 9).foreach(i => log.recordBuffered("p", s"run$i", "running", 0, at = t))
-    assert(partFiles(path) === 1) // nothing written yet
-    log.flush()
-    assert(partFiles(path) === 2)
-    assert(log.currentRuns().count() === 9)
+      // buffered mode: a whole batch of events lands as ONE appended file
+      (7 to 9).foreach(i => log.recordBuffered("p", s"run$i", "running", 0, at = t))
+      assert(partFiles(path) === 1) // nothing written yet
+      log.flush()
+      assert(partFiles(path) === 2)
+      assert(log.currentRuns().count() === 9)
+    }
   }
 
   test("salted join equals the plain join on skewed data") {

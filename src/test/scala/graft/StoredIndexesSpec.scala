@@ -13,6 +13,21 @@ class StoredIndexesSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
+  /** The rows of a drift log's live version, as sorted (n, mean_d2). */
+  private def driftRows(log: String): Seq[(Long, Double)] =
+    spark.read.parquet(Compaction.resolve(log))
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+
+  /** The one partial a drift-log collapse must produce from `rows`:
+    * Σn and the n-weighted mean. */
+  private def assertCollapsedFrom(collapsed: Seq[(Long, Double)],
+                                  rows: Seq[(Long, Double)], clue: String): Unit = {
+    val n = rows.map(_._1).sum
+    val wm = rows.map { case (ni, mi) => mi * ni }.sum / n.toDouble
+    assert(collapsed.length === 1 && collapsed.head._1 === n &&
+      math.abs(collapsed.head._2 - wm) < 1e-12, clue)
+  }
+
   private def parquetFiles(dir: String): Int = {
     val p = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(p)) return 0
@@ -137,18 +152,19 @@ class StoredIndexesSpec extends AnyFunSuite {
     (1L to 6L).foreach { r =>
       SimilarityOps.mergeIvfIndex(e.filter($"vec_id" % 8 === r), path)
     }
-    assert(parquetFiles(s"$path/merge_log") === 6,
+    def mlog = Compaction.resolve(s"$path/merge_log")
+    assert(parquetFiles(mlog) === 6,
       "each merge must have appended one drift file")
-    val rowsBefore = spark.read.parquet(s"$path/merge_log")
+    val rowsBefore = spark.read.parquet(mlog)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val retrainBefore = SimilarityOps.shouldRetrain(spark, path)
     Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
-    assert(parquetFiles(s"$path/merge_log") === 1,
+    assert(parquetFiles(mlog) === 1,
       "the tick must collapse the drift log to one file")
     // the collapse AGGREGATES (the signal is distributive): one partial
     // row carrying Σn and the n-weighted mean — O(1) rows on a
     // long-running stream instead of one per merge forever
-    val collapsed = spark.read.parquet(s"$path/merge_log")
+    val collapsed = spark.read.parquet(mlog)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(collapsed.length === 1,
       "collapse must reduce the per-merge rows to one partial")
@@ -160,7 +176,7 @@ class StoredIndexesSpec extends AnyFunSuite {
     assert(SimilarityOps.shouldRetrain(spark, path) === retrainBefore)
     // below the threshold the next tick leaves it alone
     Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
-    assert(parquetFiles(s"$path/merge_log") === 1)
+    assert(parquetFiles(mlog) === 1)
   }
 
   test("fingerprint tombstones: immediate screen, forced physical " +
@@ -207,22 +223,30 @@ class StoredIndexesSpec extends AnyFunSuite {
       SimilarityOps.mergeIvfIndex(e.filter($"vec_id" % 8 === r), path)
     }
     val log = s"$path/merge_log"
-    val rows = spark.read.parquet(log)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    // simulate the crash window: the rewrite committed (tmp/_SUCCESS) but
-    // deleteRec(live) died midway, leaving a PARTIAL live dir behind
-    val tmp = log + "._collapse"
-    spark.read.parquet(log).coalesce(1).write.parquet(tmp)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/_SUCCESS")))
-    val liveFiles = new java.io.File(log).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(liveFiles.length > 2)
-    liveFiles.take(liveFiles.length / 2).foreach(f => assert(f.delete()))
+    val merged = driftRows(log)
+    // the tick swaps the pointer to the collapsed version; the plain
+    // per-merge files at the log root are now the superseded version
     Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
-    assert(spark.read.parquet(log)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq === rows,
-      "recovery must restore the full drift history from the completed tmp copy")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp)))
+    val history = driftRows(log)
+    assertCollapsedFrom(history, merged,
+      "the collapsed version must carry the exact sum and weighted mean")
+    val retrain = SimilarityOps.shouldRetrain(spark, path)
+    // crash window: the next tick's vacuum died midway, leaving the
+    // superseded version PARTIALLY deleted
+    val superseded = new java.io.File(log).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(superseded.length > 2)
+    superseded.take(superseded.length / 2).foreach(f => assert(f.delete()))
+    assert(driftRows(log) === history,
+      "a partly deleted superseded version must never reach a reader")
+    assert(SimilarityOps.shouldRetrain(spark, path) === retrain)
+    // the restarted tick finishes the vacuum; the history stays exact
+    Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
+    assert(driftRows(log) === history,
+      "recovery must keep the full drift history of the live version")
+    assert(!new java.io.File(log).listFiles()
+      .exists(_.getName.endsWith(".parquet")),
+      "the superseded version must be fully reaped")
   }
 
   test("hash-index tombstones: immediate logical delete, physical at " +
@@ -266,11 +290,10 @@ class StoredIndexesSpec extends AnyFunSuite {
 
   test("sidecar crash recovery: a fresh drift row appended after the " +
     "crash survives the next tick (recovery-first append)") {
-    // the r14 loss window: crash mid-collapse (tmp complete, live
-    // partial) -> stream restarts and appends a FRESH drift row -> next
-    // tick recovers from tmp. With bare appends the fresh row landed in
-    // the doomed live dir and vanished; sidecarAppend completes the
-    // recovery BEFORE appending, so the row must survive.
+    // crash mid-collapse (the collapsed next version written, the
+    // pointer not swapped) -> stream restarts and appends a FRESH drift
+    // row -> next tick. The orphan version never held the fresh row, so
+    // the tick must rewrite from the live version, never adopt it.
     val e = Tables.embeddings(spark, sfDir)
     val path = java.nio.file.Files.createTempDirectory("cmp_mlog_fresh").toString
     SimilarityOps.buildIvfIndex(e.filter($"vec_id" % 8 === 0L), path)
@@ -278,35 +301,37 @@ class StoredIndexesSpec extends AnyFunSuite {
       SimilarityOps.mergeIvfIndex(e.filter($"vec_id" % 8 === r), path)
     }
     val log = s"$path/merge_log"
-    val preCrash = spark.read.parquet(log)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    // crash window: rewrite committed, deleteRec(live) died midway
-    val tmp = log + "._collapse"
-    spark.read.parquet(log).coalesce(1).write.parquet(tmp)
-    val liveFiles = new java.io.File(log).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    liveFiles.take(liveFiles.length / 2).foreach(f => assert(f.delete()))
-    // restarted stream appends fresh drift (merge #7) through the
-    // recovery-first path
+    val preCrash = driftRows(log)
+    import org.apache.spark.sql.functions.sum
+    // crash window: the collapse wrote `_v0` and died before the swap
+    intercept[IllegalStateException] {
+      Compaction.compactTable(spark, log,
+        _.agg(sum("n").cast("long").as("n"),
+          (sum($"mean_d2" * $"n".cast("double")) /
+            sum($"n".cast("double"))).as("mean_d2")).coalesce(1),
+        force = true,
+        beforePublish = _ => throw new IllegalStateException("crash"))
+    }
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(log, "_v0")),
+      "the crash leaves the collapsed version written")
+    assert(Compaction.resolve(log) === log, "...but never published")
+    // restarted stream appends fresh drift (merge #7) to the live version
     SimilarityOps.mergeIvfIndex(e.filter($"vec_id" % 8 === 7L), path)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp)),
-      "the append must have completed the pending recovery")
+    val live = driftRows(log)
+    assert(live.length === preCrash.length + 1,
+      "the fresh post-crash drift row must land beside the pre-crash rows")
+    assert(preCrash.forall(live.contains))
     // the next maintenance tick must keep ALL SEVEN rows
     Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
-    val after = spark.read.parquet(log)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    assert(after.length === preCrash.length + 1,
-      "the fresh post-crash drift row must survive the tick")
-    assert(preCrash.forall(after.contains),
-      "recovery must also have restored the full pre-crash history")
+    assertCollapsedFrom(driftRows(log), live,
+      "the tick must fold the fresh row and the full pre-crash history")
   }
 
   test("sidecar crash recovery: a sole-survivor tmp without _SUCCESS is " +
     "adopted, never deleted") {
-    // the marker-less window: a committer with marksuccessfuljobs=false
-    // (or an externally stripped marker) + live fully deleted — tmp is
-    // the ONLY copy; recovery must adopt it rather than discard it as an
-    // interrupted write
+    // a committer configured without markers (marksuccessfuljobs=false)
+    // publishes a live version with no _SUCCESS; the pointer, not the
+    // marker, is what makes it live, so nothing may discard it
     val e = Tables.embeddings(spark, sfDir)
     val path = java.nio.file.Files.createTempDirectory("cmp_mlog_nomark").toString
     SimilarityOps.buildIvfIndex(e.filter($"vec_id" % 8 === 0L), path)
@@ -314,22 +339,52 @@ class StoredIndexesSpec extends AnyFunSuite {
       SimilarityOps.mergeIvfIndex(e.filter($"vec_id" % 8 === r), path)
     }
     val log = s"$path/merge_log"
-    val rows = spark.read.parquet(log)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    val tmp = log + "._collapse"
-    spark.read.parquet(log).coalesce(1).write.parquet(tmp)
-    assert(java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$tmp/_SUCCESS")))
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(deleteRec)); f.delete(); ()
-    }
-    deleteRec(new java.io.File(log))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(log)))
+    val rows = driftRows(log)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val marker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val prior = Option(conf.get(marker))
+    conf.setBoolean(marker, false)
+    try Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
+    finally prior.fold(conf.unset(marker))(conf.set(marker, _))
+    val live = Compaction.resolve(log)
+    assert(live !== log, "the tick must have published a version")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(live, "_SUCCESS")),
+      "the committer must have written no marker")
+    val collapsed = driftRows(log)
+    assertCollapsedFrom(collapsed, rows,
+      "the marker-less version must carry the exact sum and weighted mean")
     Compaction.maintainIndex(spark, path, "ivf", maxFilesPerPartition = 4)
-    assert(spark.read.parquet(log)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq === rows,
-      "the sole surviving copy must be adopted as the live sidecar")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp)))
+    Compaction.vacuumIndex(path, "ivf")
+    assert(Compaction.resolve(log) === live && driftRows(log) === collapsed,
+      "neither the tick nor vacuum may delete the marker-less live version")
+  }
+
+  test("a _CURRENT pointer with trailing lines reads as its first line " +
+    "in both SnapshotStore and Compaction") {
+    val root = java.nio.file.Files.createTempDirectory("ptr_lines")
+    java.nio.file.Files.writeString(root.resolve("_CURRENT"),
+      "3\nwritten-by: a later format")
+    assert(new graft.engine.SnapshotStore(spark, root.toString)
+      .currentVersion() === Some(3L))
+    assert(Compaction.resolve(root.toString) === s"$root/_v3")
+  }
+
+  test("publishVersion over a torn attempt's orphan version dir " +
+    "publishes a version without the orphan's files") {
+    import java.nio.file.{Files, Paths}
+    val table = Files.createTempDirectory("ptr_orphan").toString
+    // a publish that crashed before its swap left `_v0` with a stray file
+    Files.createDirectories(Paths.get(table, "_v0"))
+    Files.writeString(Paths.get(table, "_v0", "stray.txt"), "torn")
+    // a writer that fills only subdirs, as the stored tokenizer does
+    Compaction.publishVersion(table) { dir =>
+      Seq(1L, 2L).toDF("id").coalesce(1).write.parquet(s"$dir/rules")
+    }
+    val live = Compaction.resolve(table)
+    assert(live === s"$table/_v0")
+    assert(!Files.exists(Paths.get(live, "stray.txt")),
+      "the orphan's stray file must not survive into the published version")
+    assert(spark.read.parquet(s"$live/rules").count() === 2L)
   }
 
   test("ivfpq index: merges append to cells, compaction keeps the pruned " +
@@ -343,7 +398,7 @@ class StoredIndexesSpec extends AnyFunSuite {
     }
     // append-only merges accumulate small files and drift rows
     assert(Compaction.filesPerPartition(s"$path/codes").values.sum > filesAfterBuild)
-    assert(parquetFiles(s"$path/merge_log") === 3)
+    assert(parquetFiles(Compaction.resolve(s"$path/merge_log")) === 3)
     val qv = e.filter($"vec_id" === 0L)
       .select(SimilarityOps.asDoubleVec($"embedding")).head().getSeq[Double](0)
     def probe() = SimilarityOps.queryIvfPqIndex(spark, path, qv, 10,
@@ -357,7 +412,7 @@ class StoredIndexesSpec extends AnyFunSuite {
     assert(perCell.nonEmpty && perCell.valuesIterator.max === 1,
       s"each cell dir must hold one file after compaction (got $perCell)")
     assert(probe() === before, "ADC scores must be bit-identical")
-    assert(parquetFiles(s"$path/merge_log") === 1,
+    assert(parquetFiles(Compaction.resolve(s"$path/merge_log")) === 1,
       "the tick must collapse the drift sidecar")
     // the composite's rebuild decision rides the PQ distortion signal
     assert(!SimilarityOps.shouldRetrainPq(spark, path),
