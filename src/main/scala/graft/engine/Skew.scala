@@ -32,9 +32,13 @@ object Skew {
     * replaying a month of history in one call — an oversized batch must
     * NOT be forced into a driver-side broadcast (OOM); it falls back to
     * planner/AQE strategy instead. */
-  def maybeBroadcast(df: DataFrame): DataFrame = {
+  def maybeBroadcast(df: DataFrame): DataFrame =
+    if (fitsBroadcast(df)) broadcast(df) else df
+
+  /** Does the optimizer's size estimate of `df` fit
+    * `autoBroadcastJoinThreshold`? The guard of [[maybeBroadcast]]. */
+  def fitsBroadcast(df: DataFrame): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val estimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (threshold > 0 && estimate <= threshold) broadcast(df) else df
+    threshold > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
   }
 }

@@ -2,6 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned parquet snapshot store with atomic publish — the engine's
   * replacement for the reference's transactional UPDATE+INSERT unit
@@ -48,8 +49,35 @@ class SnapshotStore(spark: SparkSession, root: String) {
   def readVersion(v: Long): DataFrame = {
     val dir = rootPath.resolve(s"v$v")
     if (!Files.exists(dir.resolve(ManifestName)))
-      spark.read.parquet(s"$root/v$v")
+      parquet(footerSchema(dataFiles(dir)), dir.toString)
     else readGrouped(effectiveDirs(v).values.toSeq)
+  }
+
+  private def parquet(schema: Option[StructType], paths: String*): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+
+  /** The schema `spark.read.parquet` infers for a flat dir of these
+    * files, from one footer read in the application instead of a schema-
+    * inference job: Spark's own converter over the first file, which is
+    * what its inference reads when schemas are not merged. Every file of a
+    * version shares its schema (a publish that widens it rewrites every
+    * file). None when there is no file (a partitioned dir) or schema
+    * merging is on: the read then infers. */
+  private def footerSchema(files: Seq[java.nio.file.Path]): Option[StructType] =
+    files.headOption.filter(_ => !spark.sessionState.conf.isParquetSchemaMergingEnabled)
+      .map { f =>
+        import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+        ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(f.toUri), footer(f)),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+
+  /** A parquet file's footer, read straight from the local file: no
+    * Hadoop configuration lookups, which cost more than the read. */
+  private def footer(f: java.nio.file.Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f))
+    try r.getFooter finally r.close()
   }
 
   /** Read `col=value` partition dirs that may span several VERSION
@@ -142,8 +170,10 @@ class SnapshotStore(spark: SparkSession, root: String) {
               sidecars: Map[String, String] = Map.empty): Long =
     Lease.withLease(root, "publish") { publishVersionDir { dir =>
       val w = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(dir)
+      CallSites.named(spark) {
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+          .parquet(dir)
+      }
       writeSidecars(dir, sidecars)
     } }
 
@@ -222,9 +252,11 @@ class SnapshotStore(spark: SparkSession, root: String) {
           // open one file per bucket — without this, every writer task
           // drops a sliver into every dir and the version dir explodes
           // into tasks × partitions small files
-          changed.repartition(changed(partitionCol))
-            .write.mode("overwrite")
-            .partitionBy(partitionCol).parquet(dir)
+          CallSites.named(spark) {
+            changed.repartition(changed(partitionCol))
+              .write.mode("overwrite")
+              .partitionBy(partitionCol).parquet(dir)
+          }
           val newDir = Paths.get(dir)
           // carry-over resolves through the PREVIOUS version's
           // effective map, so either mode composes after the other
@@ -295,18 +327,17 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * empty store. */
   def readSegments(): Option[(Option[DataFrame], DataFrame)] =
     currentVersion().map { v =>
-      val hist = historyFiles(v).map(_.toString)
-      val live = dataFiles(rootPath.resolve(s"v$v")).map(_.toString)
-        .filterNot(hist.contains)
+      val files = dataFiles(rootPath.resolve(s"v$v"))
+      val (hist, live) = files.partition(
+        _.getFileName.toString.startsWith(HistoryPrefix))
       if (hist.isEmpty) (None, readVersion(v))
-      else if (live.isEmpty) { // every key deleted: no current row left
-        val h = spark.read.parquet(hist: _*)
-        (Some(h), h.limit(0))
-      } else {
-        // the history read reuses the live read's schema: one footer
-        // inference per batch, not one per segment
-        val l = spark.read.parquet(live: _*)
-        (Some(spark.read.schema(l.schema).parquet(hist: _*)), l)
+      else {
+        // both segments read with the one footer schema
+        val schema = footerSchema(files)
+        val h = parquet(schema, hist.map(_.toString): _*)
+        // every key deleted: no current row left
+        (Some(h), if (live.isEmpty) h.limit(0)
+                  else parquet(schema, live.map(_.toString): _*))
       }
     }
 
@@ -335,21 +366,29 @@ class SnapshotStore(spark: SparkSession, root: String) {
                       carry: Boolean): Long =
     Lease.withLease(root, "publishSegments") {
       val n = spark.sparkContext.defaultParallelism
-      val prior = if (carry) currentVersion().map(historyFiles).getOrElse(Nil)
-                  else Nil
-      val fold = if (prior.size < 2 * n) Nil
+      val (prior, live) = currentVersion()
+        .map(v => dataFiles(rootPath.resolve(s"v$v"))).getOrElse(Nil)
+        .partition(_.getFileName.toString.startsWith(HistoryPrefix))
+      // coalescing keeps the file sizes it reads (a seed written as one
+      // file would stay one task's work every batch), so current rows
+      // read from fewer than n files are spread evenly over n once
+      val spread = !carry || live.size < n
+      val fold = if (!carry || prior.size < 2 * n) Nil
                  else prior.sortBy(Files.size(_)).take(prior.size + 1 - n)
       val hist = if (fold.isEmpty) closed
                  else closed.unionByName(spark.read.schema(closed.schema)
                    .parquet(fold.map(_.toString): _*))
       publishVersionDir { dir =>
-        // ONE write job, no shuffle on the carry path: the current rows
-        // coalesce into at most n tasks and the new history rows into
+        // ONE write job, with no shuffle on the carry path once the
+        // current rows span n files: they coalesce into at most n tasks
+        // and the new history rows into
         // one task of their own, so no file mixes the two, and the
         // footers tell them apart afterwards
-        current.coalesce(n)
-          .unionByName(if (carry) hist.coalesce(1) else hist.repartition(n))
-          .write.mode("overwrite").parquet(dir)
+        CallSites.named(spark) {
+          (if (spread) current.repartition(n) else current.coalesce(n))
+            .unionByName(if (carry) hist.coalesce(1) else hist.repartition(n))
+            .write.mode("overwrite").parquet(dir)
+        }
         val d = Paths.get(dir)
         dataFiles(d).filter(onlyClosedRows).foreach { f =>
           val name = f.getFileName.toString
@@ -358,7 +397,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
             Files.move(crc, d.resolve(s".$HistoryPrefix$name.crc"))
           Files.move(f, d.resolve(HistoryPrefix + name))
         }
-        prior.filterNot(fold.contains).foreach { p =>
+        if (carry) prior.filterNot(fold.contains).foreach { p =>
           linkFile(p, d.resolve(p.getFileName.toString))
         }
       }
@@ -370,18 +409,15 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * always safe (its closed rows move to history at the next merge). */
   private def onlyClosedRows(f: java.nio.file.Path): Boolean = {
     import scala.jdk.CollectionConverters._
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toString),
-        spark.sparkContext.hadoopConfiguration))
-    try r.getRecordCount > 0 && r.getFooter.getBlocks.asScala.forall { b =>
+    val blocks = footer(f).getBlocks.asScala
+    blocks.exists(_.getRowCount > 0) && blocks.forall { b =>
       b.getRowCount == 0 || b.getColumns.asScala.exists { c =>
         val st: org.apache.parquet.column.statistics.Statistics[_] =
           c.getStatistics
         c.getPath.toDotString == "is_current" && st != null &&
           st.hasNonNullValue && st.genericGetMax == java.lang.Boolean.FALSE
       }
-    } finally r.close()
+    }
   }
 
   /** The hive partition columns of the CURRENT version dir (empty when

@@ -11,9 +11,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `expr(...)`, views — with no per-call registry mutation (the
   * `createOrReplaceTempFunction` path re-registered on every operator
   * call and logged a replace warning each time).
+  *
+  * It is also the engine's one session-setup point: as each session
+  * builds its state (before its first query), [[graft.engine.LocalFs]]
+  * installs the fork-free `file:` file system. The parser hook is only the
+  * place Spark hands the session over; it returns the parser unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectParser { (session, parser) => graft.engine.LocalFs.setup(session); parser }
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getCanonicalName, "graft_dot"),

@@ -140,7 +140,7 @@ object JdbcCdc {
     *
     * Statement ORDER within the merge transaction: [[upsertSql]] FIRST,
     * then this — the upsert's timeline-end guard must read the
-    * PRE-batch dimension (exactly like `Scd2.mergeBatch` computes
+    * PRE-batch dimension (exactly like `Scd2.merge` computes
     * `keyMeta` before routing); run after the expire, the just-stamped
     * `valid_to = s.ts` would equal the incoming ts and block its own
     * key's insert. The expire is safe second: the freshly inserted
@@ -168,7 +168,7 @@ object JdbcCdc {
     *  - `NOT EXISTS` timeline-end guard: the change is admitted only
     *    when it is strictly newer than the key's TIMELINE END over ALL
     *    versions — `COALESCE(valid_to, valid_from)`, the same
-    *    `_tl_end` rule as `Scd2.mergeBatch` (Scd2.scala:119-125).
+    *    `_tl_end` rule as `Scd2.merge` (its `keyMeta`).
     *    Checking only current rows would miss two cases: a stale batch
     *    against a newer current row (second current row per key), and
     *    a late change for a DELETEd key — the delete stamps `valid_to`

@@ -29,10 +29,11 @@ object CdcStream {
     * the SCD2 snapshot at `store`. One micro-batch ≙ one change batch.
     * Pass `opCol` to honor DELETE change records (expire, insert nothing).
     *
-    * Cache hygiene: [[Scd2.mergeBatch]] caches its routed batch for
-    * intra-job reuse and hands back the cleanup; it is invoked after each
-    * publish, so a long-running stream holds at most one routed-batch
-    * cache entry at a time and caller-held caches are untouched.
+    * Cache hygiene: a batch routed by planned joins caches its routed
+    * changes for intra-job reuse ([[Scd2.mergeBatch]]); the cleanup runs
+    * after each publish, so a long-running stream holds at most one
+    * routed-batch cache entry at a time and caller-held caches are
+    * untouched. A small batch caches nothing.
     */
   def start(spark: SparkSession, inDir: String, checkpointDir: String,
             store: SnapshotStore, schema: StructType,
@@ -59,19 +60,22 @@ object CdcStream {
     val writer = changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyChangeBatch(store, batch, key, ts, tie, opCol, dimBuckets,
-          manifestCarry)
-        // manifest chains grow one referenced-owner hop per batch and
-        // vacuum must keep every referenced owner — without a
-        // scheduled materialization the store could never reclaim.
-        // Every N batches, rewrite the snapshot fully local (the
-        // OPTIMIZE tick — same amortization posture as the index
-        // compaction ticks: periodic, between batches, never
-        // concurrent with a merge), so the chain length is bounded by
-        // N and the pre-materialize owners age out at the next vacuum.
-        if (manifestCarry && materializeEvery > 0 && id > 0 &&
-            id % materializeEvery == 0)
-          materializeSnapshot(store, dimBuckets)
+        // jobs are named by the engine line that runs them, not by `start`
+        graft.engine.CallSites.cleared(spark) {
+          applyChangeBatch(store, batch, key, ts, tie, opCol, dimBuckets,
+            manifestCarry)
+          // manifest chains grow one referenced-owner hop per batch and
+          // vacuum must keep every referenced owner — without a
+          // scheduled materialization the store could never reclaim.
+          // Every N batches, rewrite the snapshot fully local (the
+          // OPTIMIZE tick — same amortization posture as the index
+          // compaction ticks: periodic, between batches, never
+          // concurrent with a merge), so the chain length is bounded by
+          // N and the pre-materialize owners age out at the next vacuum.
+          if (manifestCarry && materializeEvery > 0 && id > 0 &&
+              id % materializeEvery == 0)
+            materializeSnapshot(store, dimBuckets)
+        }
       }
 
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
@@ -134,8 +138,9 @@ object CdcStream {
     * rewrites only the current rows and appends the versions it closes
     * as one new history file, so per-batch write work is O(current rows)
     * rather than O(every version ever written); the metadata scan still
-    * reads the whole dim's key columns (bench/STREAM_r23.md). A batch
-    * that widens the schema rewrites both segments whole.
+    * reads the whole dim's key column, though only the batch's keys'
+    * rows leave it (bench/STREAM_r23.md). A batch that widens the schema
+    * rewrites both segments whole.
     *
     * `dimBuckets > 0` is the copy-on-write formulation: the snapshot
     * is hive-partitioned by [[BucketCol]] and a micro-batch touches
@@ -163,14 +168,25 @@ object CdcStream {
                        key: String, ts: String, tie: String,
                        opCol: Option[String], dimBuckets: Int = 0,
                        manifestCarry: Boolean = false): Unit = {
-    if (batch.isEmpty) return
+    // the batch's keys, collected while it fits a broadcast: the same job
+    // answers "is the batch empty?" (an empty batch publishes nothing) and
+    // narrows the merge's dim-side work to the keys it touches
+    val keys = Scd2.batchKeys(batch, key)
+    if (keys.batchIsEmpty(batch)) return
     // the CDC op column is TRANSPORT, not payload: keep it out of the
     // dimension-schema derivations (an empty-batch bootstrap would bake
     // a junk op column into every published version, and a snapshot
     // pre-seeded WITHOUT it would spuriously trip the widened-schema
-    // full republish on the first batch). mergeBatch still reads the op
+    // full republish on the first batch). The merge still reads the op
     // from the batch itself.
     val payload = opCol.fold(batch)(c => batch.drop(c))
+    // cleanup in finally: a throwing publish replays the batch, and each
+    // failed attempt must not leave the routed-batch cache resident (a
+    // crash-looping stream accumulates one per attempt)
+    def mergeThen(dim: DataFrame)(publish: DataFrame => Unit): Unit = {
+      val merged = Scd2.mergeBatch(dim, batch, key, ts, tie, opCol, keys)
+      try publish(merged.dim) finally merged.cleanup()
+    }
     if (dimBuckets <= 0) {
       // explicit whole-dim dial: a snapshot previously run bucketed is
       // MIGRATED BACK (bucket column dropped, next version unbucketed)
@@ -184,11 +200,8 @@ object CdcStream {
       // whole, so no carried file lacks the new column
       val widened = evolved.columns.length != dim.columns.length
       val merged =
-        if (widened) Scd2.mergeSegments(None, evolved, batch, key, ts, tie, opCol)
-        else Scd2.mergeSegments(history, live, batch, key, ts, tie, opCol)
-      // cleanup in finally: a throwing publish replays the batch, and
-      // each failed attempt must not leave the routed-batch cache
-      // resident (a crash-looping stream accumulates one per attempt)
+        if (widened) Scd2.mergeSegments(None, evolved, batch, key, ts, tie, opCol, keys)
+        else Scd2.mergeSegments(history, live, batch, key, ts, tie, opCol, keys)
       try store.publishSegments(merged.closed, merged.current, carry = !widened)
       finally merged.cleanup()
       return
@@ -215,8 +228,9 @@ object CdcStream {
         store.currentVersionSidecar(DimBucketsMeta)
           .contains(dimBuckets.toString)) {
       // the batch's bucket set: bounded by dimBuckets, driver-safe
-      val affected = withBucket(batch).select(col(BucketCol))
-        .distinct().collect().map(_.getInt(0)).toSeq
+      val affected = graft.engine.CallSites.named(batch.sparkSession) {
+        withBucket(batch).select(col(BucketCol)).distinct().collect()
+      }.map(_.getInt(0)).toSeq
       // manifest-style dim read: ONLY the affected bucket dirs are
       // listed and scanned — per-batch read cost is O(changed buckets)
       // in files AND in listing, independent of how many buckets the
@@ -227,29 +241,21 @@ object CdcStream {
       if (evolved.columns.length != dimAff.columns.length) {
         // schema widened — full republish so every partition's files
         // carry the new columns (see doc above)
-        val full = Scd2.evolveSchema(
-          store.read().get.drop(BucketCol), payload)
-        val merged = Scd2.mergeBatch(full, batch, key, ts, tie, opCol)
-        try store.publish(clustered(withBucket(merged.dim)),
-          Seq(BucketCol), Map(DimBucketsMeta -> dimBuckets.toString))
-        finally merged.cleanup()
-      } else {
-        val merged = Scd2.mergeBatch(evolved, batch, key, ts, tie, opCol)
-        try store.publishIncremental(withBucket(merged.dim), BucketCol,
-          Map(DimBucketsMeta -> dimBuckets.toString), manifestCarry)
-        finally merged.cleanup()
-      }
+        val full = Scd2.evolveSchema(store.read().get.drop(BucketCol), payload)
+        mergeThen(full)(m => store.publish(clustered(withBucket(m)),
+          Seq(BucketCol), Map(DimBucketsMeta -> dimBuckets.toString)))
+      } else
+        mergeThen(evolved)(m => store.publishIncremental(withBucket(m), BucketCol,
+          Map(DimBucketsMeta -> dimBuckets.toString), manifestCarry))
     } else {
       // bootstrap (empty store), migration (pre-bucketing snapshot),
       // or a CHANGED bucket count: one full publish (re-)establishes
       // the bucketed layout and its persisted count
       val dim = store.read().map(_.drop(BucketCol))
         .getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie))
-      val merged = Scd2.mergeBatch(Scd2.evolveSchema(dim, payload),
-        batch, key, ts, tie, opCol)
-      try store.publish(clustered(withBucket(merged.dim)),
-        Seq(BucketCol), Map(DimBucketsMeta -> dimBuckets.toString))
-      finally merged.cleanup()
+      mergeThen(Scd2.evolveSchema(dim, payload))(m => store.publish(
+        clustered(withBucket(m)), Seq(BucketCol),
+        Map(DimBucketsMeta -> dimBuckets.toString)))
     }
   }
 

@@ -447,7 +447,7 @@ class JdbcSpec extends AnyFunSuite {
     // the engine's own routing semantics, computed with DataFrame ops:
     // last-write-wins per key by (ts DESC, seq DESC), drop DELETEs,
     // admit only changes strictly newer than the key's TIMELINE END over
-    // ALL versions — Scd2.mergeBatch's _tl_end rule (Scd2.scala:119-125)
+    // ALL versions — Scd2.merge's _tl_end rule (keyMeta)
     val s = staged.toDF("k", "ts_s", "seq", "payload", "operation_type")
       .withColumn("ts", col("ts_s").cast("timestamp"))
     val last = graft.engine.Cdc.dedupLastPerKey(s, "k", "ts", "seq")

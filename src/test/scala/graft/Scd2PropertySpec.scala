@@ -78,8 +78,19 @@ class Scd2PropertySpec extends AnyFunSuite {
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime + 250 * 1000))
       val hist = df.filter($"ts" <= mid)
       val batch = df.filter($"ts" > mid)
-      val merged = Scd2.merge(Scd2.rebuild(hist, "user_id", "ts", "event_id"),
-        batch, "user_id", "ts", "event_id", Some("operation_type"))
+      val dim = Scd2.rebuild(hist, "user_id", "ts", "event_id")
+      val merged = Scd2.merge(dim, batch, "user_id", "ts", "event_id", Some("operation_type"))
+      // every routing agrees: the batch's keys collected, and the planned
+      // joins with and without broadcasts
+      val want = merged.orderBy("user_id", "version_no").collect().toSeq
+      val collected = Scd2.mergeBatch(dim, batch, "user_id", "ts", "event_id",
+        Some("operation_type"), Scd2.batchKeys(batch, "user_id"))
+      try assert(collected.dim.orderBy("user_id", "version_no").collect().toSeq === want)
+      finally collected.cleanup()
+      withoutBroadcast {
+        assert(Scd2.merge(dim, batch, "user_id", "ts", "event_id", Some("operation_type"))
+          .orderBy("user_id", "version_no").collect().toSeq === want)
+      }
       // at most one current row per key; never a current row for a key
       // whose latest routed change was DELETE
       assert(Scd2.duplicateCurrentKeys(merged, "user_id").count() === 0)
@@ -96,6 +107,14 @@ class Scd2PropertySpec extends AnyFunSuite {
         assert(atRows.count() === atRows.select("user_id").distinct().count())
       }
     }
+  }
+
+  /** Run `body` with broadcast joins off: every merge plans sort-merge
+    * joins, and the store path routes by planned joins. */
+  private def withoutBroadcast[T](body: => T): T = {
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
 
   /** A random change history cut into micro-batches: rows are
@@ -128,12 +147,23 @@ class Scd2PropertySpec extends AnyFunSuite {
 
   test("whole-dim store path equals the in-memory fold of Scd2.merge over " +
     "random micro-batch splits; history files carry forward by inode") {
+    storeFoldProperty(broadcast = true)
+  }
+
+  test("whole-dim store path routed by planned joins (no broadcast) equals " +
+    "the in-memory fold of Scd2.merge") {
+    withoutBroadcast(storeFoldProperty(broadcast = false))
+  }
+
+  /** With `broadcast` the store path routes each batch with its keys
+    * collected; without, by sort-merge joins. The fold plans joins. */
+  private def storeFoldProperty(broadcast: Boolean): Unit = {
     import graft.engine.SnapshotStore
     import graft.streaming.CdcStream
     import java.nio.file.Files
     def ino(p: java.nio.file.Path) = Files.getAttribute(p, "unix:ino")
     val (key, ts, tie, op) = ("user_id", "ts", "event_id", Some("operation_type"))
-    forAllSeeded(splitHistoryGen, 100) { batches =>
+    forAllSeeded(splitHistoryGen, if (broadcast) 100 else 40) { batches =>
       val store = new SnapshotStore(spark,
         Files.createTempDirectory("prop_store").toString)
       val empty = Scd2.rebuild(toDf(Nil).drop("operation_type"), key, ts, tie)
@@ -142,6 +172,8 @@ class Scd2PropertySpec extends AnyFunSuite {
         else {
           val prior = store.currentVersion().map(v => store.historyFiles(v)
             .map(p => p.getFileName.toString -> ino(p))).getOrElse(Nil)
+          // the routing the store path takes
+          assert(Scd2.batchKeys(b, key).values.isDefined === broadcast)
           CdcStream.applyChangeBatch(store, b, key, ts, tie, op)
           // at most 3 prior history files here, far below the fold bound,
           // and the schema never widens: every file must carry by inode
