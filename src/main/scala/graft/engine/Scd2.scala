@@ -158,7 +158,9 @@ object Scd2 {
   def merge(dim: DataFrame, batch: DataFrame,
             key: String, ts: String, tie: String,
             opCol: Option[String]): DataFrame =
-    mergeBatch(dim, batch, key, ts, tie, opCol).dim
+    // nothing is cached: the caller gets no cleanup to release it with
+    mergeSegments(None, dim, batch, key, ts, tie, opCol, BatchKeys.Planned, cache = false)
+      .rows
 
   /** [[merge]] returning a [[MergeResult]] whose `cleanup` unpersists the
     * routed-batch cache once the merged dimension has been materialized.
@@ -175,24 +177,31 @@ object Scd2 {
   private[graft] def mergeBatch(dim: DataFrame, batch: DataFrame,
                                 key: String, ts: String, tie: String,
                                 opCol: Option[String], keys: BatchKeys): MergeResult = {
-    val r = route(batch, dim, current(dim), key, ts, tie, opCol, keys)
-    val cols = dim.columns.toIndexedSeq.map(col)
-    // one scan keeps the closed rows and the current rows the batch does
-    // not touch: a merge folded over its own output grows linearly
-    val result = dim.filter(!col("is_current") || (col("is_current") && r.untouched))
-      .unionByName(r.curUnchanged)
-      .unionByName(r.expired.select(cols: _*))
-      .unionByName(r.newVersions.select(cols: _*))
-    MergeResult(result, r.cleanup)
+    val m = mergeSegments(None, dim, batch, key, ts, tie, opCol, keys)
+    MergeResult(m.rows, m.cleanup)
   }
 
   /** A merge over a dimension kept as two segments, split by what the
-    * merge rewrites: `closed` is the closed rows added by this batch
-    * (the versions it expires, plus any closed rows the live segment
-    * still held), `current` is every row current after it. `cleanup`
-    * is [[MergeResult]]'s. */
-  final case class SegmentMerge(closed: DataFrame, current: DataFrame,
-                                cleanup: () => Unit)
+    * merge rewrites: `kept` is the live rows the batch leaves as they are,
+    * `expired` the current rows it closes, `opened` the rest of the rows
+    * current after it. `cleanup` is [[MergeResult]]'s. */
+  final case class SegmentMerge(kept: DataFrame, expired: DataFrame, opened: DataFrame,
+                                cleanup: () => Unit) {
+    /** The closed rows added by this batch: the versions it expires, plus
+      * any closed rows the live segment still held. */
+    def closed: DataFrame = kept.filter(!col("is_current")).unionByName(expired)
+
+    /** Every row current after the batch. */
+    def current: DataFrame = kept.filter(col("is_current")).unionByName(opened)
+
+    /** The live segment after the merge, `closed ∪ current`. Its two
+      * branches over `live` come first, side by side, where the optimizer
+      * combines them: the constraints Spark derives for a merge folded
+      * over its own output then grow by one term a fold, while in any
+      * other order they double a fold (an in-memory fold of 25 batches
+      * ran out of heap canonicalizing them). */
+    def rows: DataFrame = kept.unionByName(opened).unionByName(expired)
+  }
 
   /** [[mergeBatch]] over `history` (closed rows only, never rewritten)
     * plus `live` (the rest): `history ∪ closed ∪ current` equals
@@ -206,25 +215,28 @@ object Scd2 {
                     opCol: Option[String]): SegmentMerge =
     mergeSegments(history, live, batch, key, ts, tie, opCol, BatchKeys.Planned)
 
-  /** [[mergeSegments]] routed by `keys`, as the private [[mergeBatch]]. */
+  /** [[mergeSegments]] routed by `keys`, as the private [[mergeBatch]].
+    * Without `cache` the planned route caches nothing and `cleanup` is a
+    * no-op. */
   private[graft] def mergeSegments(history: Option[DataFrame], live: DataFrame,
                                    batch: DataFrame, key: String, ts: String,
                                    tie: String, opCol: Option[String],
-                                   keys: BatchKeys): SegmentMerge = {
+                                   keys: BatchKeys, cache: Boolean = true): SegmentMerge = {
     val all = history.fold(live)(_.unionByName(live))
-    val r = route(batch, all, current(live), key, ts, tie, opCol, keys)
+    val r = route(batch, all, current(live), key, ts, tie, opCol, keys, cache)
     val cols = live.columns.toIndexedSeq.map(col)
-    SegmentMerge(
-      live.filter(!col("is_current")).unionByName(r.expired.select(cols: _*)),
-      current(live).filter(r.untouched).unionByName(r.curUnchanged)
-        .unionByName(r.newVersions.select(cols: _*)),
-      r.cleanup)
+    SegmentMerge(live.filter(!col("is_current") || r.untouched),
+      r.expired.select(cols: _*),
+      r.curUnchanged.unionByName(r.newVersions.select(cols: _*)), r.cleanup)
   }
 
   /** A change batch's distinct keys, collected into the application when
     * the batch is small: it fits a broadcast and has at most [[KeySetLimit]]
-    * keys. None routes the batch by planned joins. */
-  private[graft] final case class BatchKeys(values: Option[Seq[Any]]) {
+    * keys. None routes the batch by planned joins. `buckets` holds the
+    * batch's distinct buckets when a bucket column was asked for and the
+    * batch was collected (at any key count). */
+  private[graft] final case class BatchKeys(values: Option[Seq[Any]],
+                                            buckets: Option[Seq[Int]] = None) {
     /** Answered from the collected keys when there are some (no job). */
     def batchIsEmpty(batch: DataFrame): Boolean = values.fold(batch.isEmpty)(_.isEmpty)
   }
@@ -234,12 +246,17 @@ object Scd2 {
   }
 
   /** `batch`'s [[BatchKeys]]: one job for a batch that fits a broadcast,
-    * none for a larger one. */
-  private[graft] def batchKeys(batch: DataFrame, key: String): BatchKeys = {
-    val k = batch.select(col(key))
-    BatchKeys(
-      if (!Skew.fitsBroadcast(k)) None
-      else Some(k.collect().map(_.get(0)).distinct.toSeq).filter(_.size <= KeySetLimit))
+    * none for a larger one. `bucket`, an integer expression over the
+    * batch, is collected beside the key in the same job. */
+  private[graft] def batchKeys(batch: DataFrame, key: String,
+                               bucket: Option[Column] = None): BatchKeys = {
+    val k = batch.select(col(key) +: bucket.toSeq: _*)
+    if (!Skew.fitsBroadcast(k)) BatchKeys.Planned
+    else {
+      val rows = k.collect()
+      BatchKeys(Some(rows.map(_.get(0)).distinct.toSeq).filter(_.size <= KeySetLimit),
+        bucket.map(_ => rows.map(_.getInt(1)).distinct.sorted.toSeq))
+    }
   }
 
   /** The most keys a merge routes in the application. Its literal key set
@@ -284,13 +301,15 @@ object Scd2 {
     * task. The rest happens in the application, so the rewrite reads from
     * the dim only the rows it keeps, and runs as one plain job.
     *
-    * A larger batch is planned in place, and its routed changes are
-    * cached: they feed three branches of the rewrite, each pruning
-    * different columns out of them, so uncached each would re-run the
-    * dedup and metadata exchanges (AQE reuses only identical exchanges). */
+    * A larger batch is planned in place, and with `cache` its routed
+    * changes are cached: they feed three branches of the rewrite, each
+    * pruning different columns out of them, so uncached each would re-run
+    * the dedup and metadata exchanges (AQE reuses only identical
+    * exchanges). [[merge]] has no cleanup to hand out, so it pays that
+    * instead of leaving a cache behind. */
   private def route(batch: DataFrame, dim: DataFrame, cur: DataFrame,
                     key: String, ts: String, tie: String,
-                    opCol: Option[String], keys: BatchKeys): Routing = {
+                    opCol: Option[String], keys: BatchKeys, cache: Boolean): Routing = {
     // key types whose values compare in Scala exactly as the SQL
     // join compares them
     val exactKeys = batch.schema(key).dataType == dim.schema(key).dataType &&
@@ -302,17 +321,18 @@ object Scd2 {
       })
     keys.values.filter(_ => exactKeys) match {
       case Some(vs) => routeSmall(batch, dim, cur, key, ts, tie, opCol, vs)
-      case None => routePlanned(batch, dim, cur, key, ts, tie, opCol)
+      case None => routePlanned(batch, dim, cur, key, ts, tie, opCol, cache)
     }
   }
 
   private def routePlanned(batch: DataFrame, dim: DataFrame, cur: DataFrame,
                            key: String, ts: String, tie: String,
-                           opCol: Option[String]): Routing = {
-    val routed = Caches.ensureCached(routedChanges(
+                           opCol: Option[String], cache: Boolean): Routing = {
+    val changes = routedChanges(
       Cdc.dedupLastPerKey(batch, key, ts, tie),
       keyMeta(dim.join(Skew.maybeBroadcast(batch.select(col(key))), Seq(key), "left_semi"), key),
-      key, ts))
+      key, ts)
+    val routed = if (cache) Caches.ensureCached(changes) else changes
     // W2 expire (every routed change, delete or upsert): current row's
     // valid_to := incoming change's event time. Both joins use the one
     // changed-key side, broadcast only under the size guard.
@@ -323,7 +343,7 @@ object Scd2 {
         .withColumn("is_current", lit(false))
         .drop("_new_ts"),
       cur.join(changedKeys, Seq(key), "left_anti"),
-      lit(false), () => Caches.release(routed))
+      lit(false), () => if (cache) Caches.release(routed))
   }
 
   private def routeSmall(batch: DataFrame, dim: DataFrame, cur: DataFrame,

@@ -1,8 +1,9 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Versioned parquet snapshot store with atomic publish — the engine's
   * replacement for the reference's transactional UPDATE+INSERT unit
@@ -23,15 +24,19 @@ import org.apache.spark.sql.types.StructType
   * (same replay-safety window the reference has between commit and ledger
   * append, solved the same way: re-publishing version N+1 is idempotent).
   *
-  * History segment: a flat version written by [[publishSegments]] (the
-  * whole-dim SCD2 publish, and the only writer of it) keeps its closed
-  * rows (`is_current = false`) in `hist-`-prefixed files apart from the
-  * rest. Closed versions never change, so the next such publish
-  * hard-links those files forward and rewrites only the current rows.
-  * The split is invisible to readers: a version is still one parquet
-  * directory with one schema, and every other writer (including
-  * [[purgeKeys]]' rewrites) produces versions without a history
-  * segment, which the next [[publishSegments]] simply re-splits.
+  * Buckets and segments: a version's data lives in buckets — one
+  * `col=value` partition dir each, or the version dir itself when it is
+  * flat (the one-bucket case). A bucket may be carried from an older
+  * version, hard-linked or named by the version's `_MANIFEST`. Inside a
+  * bucket, [[publishSegments]] (the SCD2 publish, in every mode) keeps
+  * the closed rows (`is_current = false`) in `hist-`-prefixed files
+  * apart from the current rows. Closed versions never change, so the
+  * next such publish hard-links those files forward and rewrites only
+  * the current rows of the buckets it touches. The split is invisible
+  * to readers: a version is still one parquet table with one schema, and
+  * every other writer (including [[purgeKeys]]' rewrites) produces
+  * buckets without a history segment, which the next [[publishSegments]]
+  * simply re-splits.
   */
 class SnapshotStore(spark: SparkSession, root: String) {
   private val rootPath = Paths.get(root)
@@ -40,29 +45,37 @@ class SnapshotStore(spark: SparkSession, root: String) {
 
   def read(): Option[DataFrame] = currentVersion().map(readVersion)
 
-  /** Read a version — resolving its `_MANIFEST`, when it has one,
-    * through [[effectiveDirs]]: carried partition dirs are read from
-    * their OWNER version dirs (one grouped read per owner so hive
-    * partition inference stays correct under each owner's basePath,
-    * then a union-by-name across the ≤ #versions owner groups — plan
-    * size is bounded by the version chain, never the bucket count). */
+  /** Read a version — every bucket of it, carried ones from the
+    * versions that hold them (see [[readPaths]]) — with the schema of one
+    * footer read (see [[schemaOf]]). */
   def readVersion(v: Long): DataFrame = {
-    val dir = rootPath.resolve(s"v$v")
-    if (!Files.exists(dir.resolve(ManifestName)))
-      parquet(footerSchema(dataFiles(dir)), dir.toString)
-    else readGrouped(effectiveDirs(v).values.toSeq)
+    val dirs = bucketDirs(v)
+    readPaths(schemaOf(dirs), dirs.values.toSeq)
   }
 
-  private def parquet(schema: Option[StructType], paths: String*): DataFrame =
-    schema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+  /** The schema `spark.read.parquet` infers for `dirs` (bucket name →
+    * dir, see [[bucketDirs]]), without its schema-inference job: the
+    * footer schema of their first file plus, for partition dirs, the
+    * partition column typed integer, as inference types integer values.
+    * None (the read infers) when there is no file or the partition values
+    * are not all integers. */
+  private def schemaOf(dirs: Map[String, java.nio.file.Path]): Option[StructType] = {
+    val parts = dirs.keys.filter(_.nonEmpty).map(_.split("=", 2)).toSeq
+    val typed = parts.isEmpty || (spark.sessionState.conf.partitionColumnTypeInferenceEnabled &&
+      parts.forall(p => p.length == 2 && p(1).toIntOption.isDefined))
+    if (!typed) None
+    else dirs.toSeq.sortBy(_._1).iterator.map(d => dataFiles(d._2).headOption)
+      .collectFirst { case Some(f) => f }.flatMap(f => footerSchema(Seq(f)))
+      .map(s => parts.headOption.fold(s)(p => s.add(p(0), IntegerType)))
+  }
 
   /** The schema `spark.read.parquet` infers for a flat dir of these
     * files, from one footer read in the application instead of a schema-
     * inference job: Spark's own converter over the first file, which is
     * what its inference reads when schemas are not merged. Every file of a
     * version shares its schema (a publish that widens it rewrites every
-    * file). None when there is no file (a partitioned dir) or schema
-    * merging is on: the read then infers. */
+    * file). None when there is no file or schema merging is on: the read
+    * then infers. */
   private def footerSchema(files: Seq[java.nio.file.Path]): Option[StructType] =
     files.headOption.filter(_ => !spark.sessionState.conf.isParquetSchemaMergingEnabled)
       .map { f =>
@@ -80,27 +93,28 @@ class SnapshotStore(spark: SparkSession, root: String) {
     try r.getFooter finally r.close()
   }
 
-  /** Read `col=value` partition dirs that may span several VERSION
-    * dirs (manifest-carried buckets live in their owner versions):
-    * grouped per owner so hive partition inference stays correct
-    * under each owner's basePath, deterministically ordered, then a
-    * union-by-name across the ≤ version-chain owner groups — plan
-    * size is bounded by the version chain, never the bucket count.
-    * The ONE grouped-read used by [[readVersion]] and
-    * [[readCurrentPartitions]], so the two resolution paths can
-    * never diverge. */
-  private def readGrouped(dirs: Seq[java.nio.file.Path]): DataFrame =
-    dirs.groupBy(_.getParent).toSeq.sortBy(_._1.toString)
-      .map { case (base, ds) =>
-        spark.read.option("basePath", base.toString)
-          .parquet(ds.map(_.toString).sorted: _*)
+  /** Read parquet `paths` (bucket dirs or their files) that may span
+    * several VERSION dirs (carried buckets live in the versions that hold
+    * them): grouped per version so hive partition inference stays correct
+    * under each one's basePath, deterministically ordered, then a
+    * union-by-name across the ≤ version-chain groups — plan size is
+    * bounded by the version chain, never the bucket count. `glob`
+    * filters the file names read. The ONE read every reader here goes
+    * through, so the resolution paths can never diverge. */
+  private def readPaths(schema: Option[StructType], paths: Seq[java.nio.file.Path],
+                        glob: Option[String] = None): DataFrame =
+    paths.groupBy(p => rootPath.resolve(rootPath.relativize(p).getName(0)))
+      .toSeq.sortBy(_._1.toString)
+      .map { case (base, ps) =>
+        val r = schema.fold(spark.read)(spark.read.schema(_)).option("basePath", base.toString)
+        glob.fold(r)(r.option("pathGlobFilter", _)).parquet(ps.map(_.toString).sorted: _*)
       }
       .reduce(_ unionByName _)
 
   /** The manifest sidecar: `name<TAB>ownerVersion` per CARRIED
     * partition dir — the version's locally absent dirs, resolved to
     * the version that physically holds them. Written by
-    * [[publishIncremental]]'s manifest mode; locally present dirs
+    * [[carryDirs]]' manifest mode; locally present dirs
     * always own themselves and never appear in it. */
   private val ManifestName = "_MANIFEST"
 
@@ -108,23 +122,32 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * (name → absolute dir): local dirs plus manifest-carried ones,
     * local winning (a rewritten bucket owns itself). O(local dirs) +
     * one small-file manifest parse — never a recursive walk. */
-  private def effectiveDirs(v: Long): Map[String, java.nio.file.Path] = {
-    val dir = rootPath.resolve(s"v$v")
-    var m = Map.empty[String, java.nio.file.Path]
-    manifestEntries(v).foreach { case (name, owner) =>
-      m += (name -> rootPath.resolve(s"v$owner").resolve(name))
-    }
-    val stream = Files.list(dir)
-    try {
-      val it = stream.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (Files.isDirectory(p) && n.contains("=")) m += (n -> p)
-      }
-    } finally stream.close()
-    m
+  private def effectiveDirs(v: Long): Map[String, java.nio.file.Path] =
+    manifestEntries(v).map { case (name, owner) =>
+      name -> rootPath.resolve(s"v$owner").resolve(name)
+    }.toMap ++ children(rootPath.resolve(s"v$v")).filter(isPartitionDir)
+      .map(p => p.getFileName.toString -> p)
+
+  private def isPartitionDir(p: java.nio.file.Path): Boolean =
+    Files.isDirectory(p) && p.getFileName.toString.contains("=")
+
+  /** A version's buckets, name → dir: its effective partition dirs, or,
+    * for a flat version, the version dir itself under the name "". */
+  private def bucketDirs(v: Long): Map[String, java.nio.file.Path] = {
+    val eff = effectiveDirs(v)
+    if (eff.nonEmpty) eff else Map("" -> rootPath.resolve(s"v$v"))
   }
+
+  /** The entries of `dir`, empty when it does not exist. */
+  private def children(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val stream = Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        stream.iterator().asScala.toList
+      } finally stream.close()
+    }
 
   /** A version's parsed `_MANIFEST` entries (carried-dir name → owner
     * version), empty when it has none. The ONE parser for the
@@ -215,36 +238,18 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * by exactly `partitionCol` (enforced — carrying partitions over
     * from an unpartitioned or differently-partitioned version would
     * silently drop data; bootstrap/migrate with a full [[publish]]).
-    * An empty store publishes `changed` whole.
-    *
-    * File reuse is hard-link first (metadata-only on POSIX — the local
-    * realization of manifest-style file reuse; an unchanged partition's
-    * files in v{N+1} ARE v{N}'s inodes, so "byte-identical" is
-    * structural), per-file copy as the fallback where links are
-    * unsupported. On HDFS/object storage the same contract is kept by
-    * a manifest (a snapshot referencing prior data files, the
-    * Iceberg/Delta shape) — the store's pointer protocol doesn't care
-    * which realization writes the dir, and readers are untouched
-    * either way: v{N+1} is a plain hive-partitioned parquet dir behind
-    * the same atomic `_CURRENT` flip, so time travel, [[vacuum]]
-    * (deleting an old version unlinks, never destroys a newer
-    * version's reused files) and [[purgeKeys]] (which already
-    * reproduces hive layouts) all compose unchanged. Crash mid-link
-    * leaves an orphan dir the pointer never named — the standard
-    * torn-publish posture. */
+    * An empty store publishes `changed` whole. Unchanged partitions are
+    * carried by [[carryDirs]] (hard links, or with `manifest` a
+    * `_MANIFEST` reference); readers are untouched either way, and a
+    * crash mid-carry leaves an orphan dir the pointer never named — the
+    * standard torn-publish posture. */
   def publishIncremental(changed: DataFrame, partitionCol: String,
                          sidecars: Map[String, String] = Map.empty,
                          manifest: Boolean = false): Long =
     Lease.withLease(root, "publishIncremental") { currentVersion() match {
       case None => publish(changed, Seq(partitionCol), sidecars)
       case Some(cur) =>
-        val curDir = rootPath.resolve(s"v$cur")
-        val curParts = partitionColsOf(curDir)
-        require(curParts == Seq(partitionCol),
-          s"publishIncremental: current version v$cur is partitioned by " +
-            s"[${curParts.mkString(", ")}], not [$partitionCol] — " +
-            "carrying partitions across layouts would drop data; " +
-            "bootstrap/migrate with a full publish first")
+        requireLayout(cur, Seq(partitionCol), "publishIncremental")
         publishVersionDir { dir =>
           // cluster the write: one task per partition value → ONE file
           // per changed dir, so carry-over cost is one link (or one
@@ -258,220 +263,245 @@ class SnapshotStore(spark: SparkSession, root: String) {
               .partitionBy(partitionCol).parquet(dir)
           }
           val newDir = Paths.get(dir)
-          // carry-over resolves through the PREVIOUS version's
-          // effective map, so either mode composes after the other
-          // (a link publish after a manifest one materializes the
-          // carried dirs; a manifest one after links references them)
-          val carried = effectiveDirs(cur).filter { case (n, _) =>
+          carryDirs(effectiveDirs(cur).filter { case (n, _) =>
             !Files.exists(newDir.resolve(n))
-          }
-          if (manifest) {
-            // manifest mode: carried dirs are REFERENCED by owner, not
-            // materialized — carry-over cost is ONE small sequential
-            // file write regardless of bucket count (the shape a
-            // 100-TB object-store deployment needs; links don't exist
-            // there and even parallel local links are O(#buckets)
-            // syscalls per batch). The cost moves to the lifecycle:
-            // vacuum must keep referenced owner versions ([[vacuum]]'s
-            // manifest closure), and a periodic full publish
-            // (materialize/OPTIMIZE) resets the chain.
-            val lines = carried.toSeq.sortBy(_._1).map { case (n, p) =>
-              s"$n\t${p.getParent.getFileName.toString.drop(1)}"
-            }
-            Files.writeString(newDir.resolve(ManifestName),
-              lines.mkString("\n"))
-          } else {
-            // link mode: PARALLEL hard-link walk — each unchanged
-            // dir's links are independent, and at high bucket counts
-            // the serial syscall walk is the dominant per-batch fixed
-            // cost (measured ~3 s at 25K dirs single-threaded)
-            import scala.jdk.CollectionConverters._
-            carried.toSeq.asJava.parallelStream().forEach { e =>
-              linkTree(e._2, newDir.resolve(e._1))
-            }
-          }
+          }, newDir, manifest)
           writeSidecars(dir, sidecars)
         }
     } }
 
-  /** File-name prefix of a version's history segment (closed rows only).
-    * Visible to Spark's listing, so readers of the version dir see these
+  /** Refuse to carry buckets from version `v` into a version partitioned
+    * by `parts` when `v` is laid out otherwise: carrying across layouts
+    * would drop data. */
+  private def requireLayout(v: Long, parts: Seq[String], verb: String): Unit = {
+    val have = effectivePartitionCols(v)
+    require(have == parts,
+      s"$verb: current version v$v is partitioned by " +
+        s"[${have.mkString(", ")}], not [${parts.mkString(", ")}] — " +
+        "carrying partitions across layouts would drop data; " +
+        "bootstrap/migrate with a full publish first")
+  }
+
+  /** Carry partition `dirs` (name → dir, in earlier versions) into the
+    * version being written at `dir`, where readers resolve them like
+    * local ones:
+    *
+    *  - by hard link (copy where links are unsupported): an unchanged
+    *    dir's files in v{N+1} ARE v{N}'s inodes, and [[vacuum]] deleting
+    *    an old version unlinks, never destroys, them. A parallel walk:
+    *    the dirs are independent, and at high bucket counts the serial
+    *    syscall walk is the dominant per-batch fixed cost (measured
+    *    ~3 s at 25K dirs single-threaded);
+    *  - with `manifest`, as `_MANIFEST` references to the versions that
+    *    hold them: one small sequential file write whatever the bucket
+    *    count (the shape object storage needs, where links don't exist).
+    *    The cost moves to the lifecycle: [[vacuum]] keeps referenced
+    *    versions, and [[publishMaterialized]] resets the chain.
+    *
+    * Resolution goes through [[effectiveDirs]], so either mode composes
+    * after the other. */
+  private def carryDirs(dirs: Map[String, java.nio.file.Path],
+                        dir: java.nio.file.Path, manifest: Boolean): Unit =
+    if (manifest) {
+      if (dirs.nonEmpty)
+        Files.writeString(dir.resolve(ManifestName), dirs.toSeq.sortBy(_._1)
+          .map { case (n, p) => s"$n\t${p.getParent.getFileName.toString.drop(1)}" }
+          .mkString("\n"))
+    } else {
+      import scala.jdk.CollectionConverters._
+      dirs.toSeq.asJava.parallelStream().forEach(e => linkTree(e._2, dir.resolve(e._1)))
+    }
+
+  /** Publish the current version again, fully local: every bucket dir it
+    * reads — its own and the ones its `_MANIFEST` names — hard-linked
+    * into the new version, with its sidecars and without a manifest. No
+    * data is rewritten; once the new version is the only one retained,
+    * [[vacuum]] may drop the versions the old manifest chain pinned. */
+  def publishMaterialized(): Long = Lease.withLease(root, "publishMaterialized") {
+    val cur = currentVersion().getOrElse(throw new IllegalStateException(
+      s"publishMaterialized: no published version under $root"))
+    val dirs = effectiveDirs(cur)
+    require(dirs.nonEmpty, s"publishMaterialized: v$cur has no partition dirs")
+    publishVersionDir { dir =>
+      carryDirs(dirs, Paths.get(dir), manifest = false)
+      writeSidecars(dir, versionSidecars(rootPath.resolve(s"v$cur")))
+    }
+  }
+
+  /** File-name prefix of a bucket's history segment (closed rows only).
+    * Visible to Spark's listing, so readers of the version see these
     * files like any other. */
   private val HistoryPrefix = "hist-"
 
-  /** A version's history-segment files, by name. */
+  private def isHistory(f: java.nio.file.Path): Boolean =
+    f.getFileName.toString.startsWith(HistoryPrefix)
+
+  /** A version's history-segment files, in every bucket. */
   private[graft] def historyFiles(v: Long): Seq[java.nio.file.Path] =
-    dataFiles(rootPath.resolve(s"v$v")).filter(
-      _.getFileName.toString.startsWith(HistoryPrefix))
+    bucketDirs(v).values.toSeq.flatMap(dataFiles).filter(isHistory).sortBy(_.toString)
 
   /** The visible parquet files directly inside `dir`, sorted by name. */
-  private def dataFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val stream = Files.list(dir)
-    try {
-      val it = stream.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith(".") && Files.isRegularFile(p)) buf += p
-      }
-      buf.sortBy(_.getFileName.toString).toSeq
-    } finally stream.close()
-  }
+  private def dataFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    children(dir).filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") &&
+        Files.isRegularFile(p)
+    }.sortBy(_.getFileName.toString)
 
-  /** The current version as the two segments a whole-dim merge wants:
-    * its history segment (None when it has none) and everything else.
-    * A version without one (a plain [[publish]], a purge rewrite, a
-    * bucketed or manifest version) is all "everything else". None on an
-    * empty store. */
-  def readSegments(): Option[(Option[DataFrame], DataFrame)] =
+  /** The current version's `buckets` (partition dir names; None reads
+    * every bucket, and a flat version is its own one bucket) as the two
+    * segments a merge wants: their history files (None when there are
+    * none) and everything else. A bucket without a history segment (a
+    * plain [[publish]], a purge rewrite) is all "everything else". Both
+    * segments read with the version's schema, as [[readVersion]]. None on
+    * an empty store. */
+  def readSegments(buckets: Option[Seq[String]] = None): Option[(Option[DataFrame], DataFrame)] =
     currentVersion().map { v =>
-      val files = dataFiles(rootPath.resolve(s"v$v"))
-      val (hist, live) = files.partition(
-        _.getFileName.toString.startsWith(HistoryPrefix))
-      if (hist.isEmpty) (None, readVersion(v))
-      else {
-        // both segments read with the one footer schema
-        val schema = footerSchema(files)
-        val h = parquet(schema, hist.map(_.toString): _*)
-        // every key deleted: no current row left
-        (Some(h), if (live.isEmpty) h.limit(0)
-                  else parquet(schema, live.map(_.toString): _*))
-      }
+      val all = bucketDirs(v)
+      val dirs = buckets.fold(all)(bs => bs.flatMap(b => all.get(b).map(b -> _)).toMap)
+      val schema = schemaOf(dirs).orElse(schemaOf(all))
+      val (hist, live) = dirs.values.toSeq.flatMap(dataFiles).partition(isHistory)
+      // each segment reads its files' dirs, filtered by name: the dir count
+      // bounds Spark's listing, not the file count
+      def segment(files: Seq[java.nio.file.Path], glob: String) =
+        if (files.isEmpty) None
+        else Some(readPaths(schema, files.map(_.getParent).distinct, Some(glob)))
+      (segment(hist, s"$HistoryPrefix*"),
+        segment(live, s"[!${HistoryPrefix.head}]*").getOrElse(schema.fold(
+          readVersion(v).limit(0))(s => spark.createDataFrame(java.util.List.of[Row](), s))))
     }
 
-  /** Whole-dim publish of a dimension kept as a history segment plus
-    * current rows (the output of [[Scd2.mergeSegments]]), all inside the
-    * version dir before the pointer flip:
+  /** The SCD2 publish, in every layout: the next version's buckets, each
+    * a history segment plus current rows, with `buckets` None for a flat
+    * version (one bucket, the version dir). `closed` and `current` are
+    * the output of [[Scd2.mergeSegments]] for the touched buckets. With
+    * n = max(1, defaultParallelism / buckets), each touched bucket gets:
     *
-    *  - `current` is rewritten into at most `defaultParallelism` files;
-    *  - with `carry`, the previous version's history files are
-    *    hard-linked forward (copied where links are unsupported) and
-    *    `closed` becomes ONE new history file, so write work is
-    *    O(current rows + closed rows) instead of O(every version ever
-    *    written);
+    *  - its current rows, rewritten into at most n files;
+    *  - with `carry`, its history files hard-linked forward from the
+    *    current version (copied where links are unsupported) and `closed`
+    *    as ONE new history file, so write work is O(current rows + closed
+    *    rows) instead of O(every version ever written). A bucket holds at
+    *    most 2n history files: a publish that would exceed that folds its
+    *    smallest carried files into the new one, down to n files;
     *  - without `carry`, `closed` is taken to be the WHOLE history and is
-    *    written into `defaultParallelism` files (a widened schema: a
-    *    carried file without the new column could hide it from readers,
-    *    since Spark infers a flat dir's schema from one footer).
+    *    written into at most n files, and nothing is carried (bootstrap, a
+    *    changed layout, or a widened schema: a carried file without the
+    *    new column could hide it from readers).
     *
-    * A version holds at most `2 × defaultParallelism` history files: a
-    * publish that would exceed that folds its smallest carried files into
-    * the new one, down to `defaultParallelism` files. A previous version
-    * without a history segment carries nothing, so the seed publish, a
-    * purge rewrite, a migration back from bucketed and an empty store all
-    * go through here unchanged. */
-  def publishSegments(closed: DataFrame, current: DataFrame,
-                      carry: Boolean): Long =
+    * With `carry`, untouched buckets are carried by [[carryDirs]]. The
+    * write is ONE job, with no shuffle on a flat carry once the current
+    * rows span n files; each row's segment is a partition column of the
+    * write, whose dirs are dissolved into their bucket (history files
+    * renamed `hist-`) before the pointer flip. A bucket without a history
+    * segment carries nothing, so a plain [[publish]] or a purge rewrite
+    * is re-split here. */
+  def publishSegments(closed: DataFrame, current: DataFrame, carry: Boolean,
+                      buckets: Option[SnapshotStore.Buckets] = None,
+                      sidecars: Map[String, String] = Map.empty): Long =
     Lease.withLease(root, "publishSegments") {
-      val n = spark.sparkContext.defaultParallelism
-      val (prior, live) = currentVersion()
-        .map(v => dataFiles(rootPath.resolve(s"v$v"))).getOrElse(Nil)
-        .partition(_.getFileName.toString.startsWith(HistoryPrefix))
-      // coalescing keeps the file sizes it reads (a seed written as one
+      val n = math.max(1, spark.sparkContext.defaultParallelism / buckets.fold(1)(_.count))
+      val cur = currentVersion().filter(_ => carry)
+      cur.foreach(requireLayout(_, buckets.map(_.col).toSeq, "publishSegments"))
+      val dirs = cur.map(bucketDirs).getOrElse(Map.empty)
+      val touched = buckets.fold(Seq(""))(b => b.touched.map(t => s"${b.col}=$t"))
+      val segments = touched.map(t => t -> dirs.get(t).map(dataFiles).getOrElse(Nil).partition(isHistory))
+      val prior = segments.map { case (t, (h, _)) => t -> h }
+      val fold = prior.flatMap { case (_, p) =>
+        if (p.size < 2 * n) Nil else p.sortBy(Files.size(_)).take(p.size + 1 - n) }
+      val hist = if (fold.isEmpty) closed
+                 else closed.unionByName(readPaths(Some(closed.schema), fold))
+      // one task a bucket dir, or n where buckets are few; flat, a
+      // coalesce keeps the file sizes it reads (a seed written as one
       // file would stay one task's work every batch), so current rows
       // read from fewer than n files are spread evenly over n once
-      val spread = !carry || live.size < n
-      val fold = if (!carry || prior.size < 2 * n) Nil
-                 else prior.sortBy(Files.size(_)).take(prior.size + 1 - n)
-      val hist = if (fold.isEmpty) closed
-                 else closed.unionByName(spark.read.schema(closed.schema)
-                   .parquet(fold.map(_.toString): _*))
+      def spread(df: DataFrame) = buckets.fold(df.repartition(n)) { b =>
+        df.repartition(col(b.col) +: (if (n == 1) Nil
+          else Seq(pmod(hash(df.columns.toIndexedSeq.map(col): _*), lit(n)))): _*)
+      }
+      val flatCarry = buckets.isEmpty && carry && segments.map(_._2._2.size).sum >= n
+      val rows = (if (flatCarry) current.coalesce(n) else spread(current))
+        .withColumn(SegmentCol, lit("live"))
+        .unionByName((if (carry) hist.coalesce(1) else spread(hist))
+          .withColumn(SegmentCol, lit("hist")))
       publishVersionDir { dir =>
-        // ONE write job, with no shuffle on the carry path once the
-        // current rows span n files: they coalesce into at most n tasks
-        // and the new history rows into
-        // one task of their own, so no file mixes the two, and the
-        // footers tell them apart afterwards
         CallSites.named(spark) {
-          (if (spread) current.repartition(n) else current.coalesce(n))
-            .unionByName(if (carry) hist.coalesce(1) else hist.repartition(n))
-            .write.mode("overwrite").parquet(dir)
+          rows.write.mode("overwrite")
+            .partitionBy(buckets.map(_.col).toSeq :+ SegmentCol: _*).parquet(dir)
         }
         val d = Paths.get(dir)
-        dataFiles(d).filter(onlyClosedRows).foreach { f =>
-          val name = f.getFileName.toString
-          val crc = d.resolve(s".$name.crc")
-          if (Files.exists(crc))
-            Files.move(crc, d.resolve(s".$HistoryPrefix$name.crc"))
-          Files.move(f, d.resolve(HistoryPrefix + name))
-        }
-        if (carry) prior.filterNot(fold.contains).foreach { p =>
-          linkFile(p, d.resolve(p.getFileName.toString))
-        }
+        dissolveSegments(d)
+        prior.foreach { case (t, fs) => fs.filterNot(fold.contains).foreach { p =>
+          Files.createDirectories(d.resolve(t))
+          linkFile(p, d.resolve(t).resolve(p.getFileName.toString))
+        } }
+        buckets.filter(_ => carry).foreach(b => carryDirs(dirs -- touched, d, b.manifest))
+        // an empty dimension still needs a file that carries its schema
+        if (children(d).forall(p => !isPartitionDir(p) && !p.getFileName.toString.endsWith(".parquet")) &&
+            !Files.exists(d.resolve(ManifestName)))
+          CallSites.named(spark)(current.limit(0).write.mode("append").parquet(dir))
+        writeSidecars(dir, sidecars)
       }
     }
 
-  /** Does parquet file `f` hold rows, all of them closed
-    * (`is_current = false`)? Read from the footer's statistics, never
-    * the data; a file without the statistic counts as current, which is
-    * always safe (its closed rows move to history at the next merge). */
-  private def onlyClosedRows(f: java.nio.file.Path): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val blocks = footer(f).getBlocks.asScala
-    blocks.exists(_.getRowCount > 0) && blocks.forall { b =>
-      b.getRowCount == 0 || b.getColumns.asScala.exists { c =>
-        val st: org.apache.parquet.column.statistics.Statistics[_] =
-          c.getStatistics
-        c.getPath.toDotString == "is_current" && st != null &&
-          st.hasNonNullValue && st.genericGetMax == java.lang.Boolean.FALSE
+  /** The transient partition column [[publishSegments]] writes each
+    * row's segment into. */
+  private val SegmentCol = "graft_segment"
+
+  /** Move the files of every `SegmentCol=` dir under `dir` up into its
+    * bucket — history files renamed with [[HistoryPrefix]], their `.crc`
+    * sidecars along — and delete the emptied dirs. */
+  private def dissolveSegments(dir: java.nio.file.Path): Unit =
+    children(dir).filter(Files.isDirectory(_)).foreach { c =>
+      val name = c.getFileName.toString
+      if (!name.startsWith(s"$SegmentCol=")) dissolveSegments(c)
+      else {
+        val prefix = if (name == s"$SegmentCol=hist") HistoryPrefix else ""
+        children(c).foreach { f =>
+          val n = f.getFileName.toString
+          Files.move(f, dir.resolve(if (n.startsWith(".")) s".$prefix${n.drop(1)}" else prefix + n))
+        }
+        Files.delete(c)
       }
     }
-  }
 
-  /** The hive partition columns of the CURRENT version dir (empty when
-    * unpartitioned or no version) — a filesystem probe, NOT a schema
-    * read: callers deciding between the incremental and full publish
-    * paths must not pay a full partition discovery (O(partitions)
+  /** The hive partition columns of the CURRENT version (empty when
+    * unpartitioned or no version), carried buckets included — a
+    * filesystem probe, NOT a schema read: callers deciding on a publish
+    * path must not pay a full partition discovery (O(partitions)
     * listing) just to ask how the snapshot is laid out. */
   def currentPartitionCols(): Seq[String] =
-    currentVersion().map(v => partitionColsOf(rootPath.resolve(s"v$v")))
-      .getOrElse(Seq.empty)
+    currentVersion().map(effectivePartitionCols).getOrElse(Seq.empty)
 
-  /** Read ONLY the named partition dirs of the current version — the
-    * manifest-style read the incremental merge wants: a micro-batch
-    * touching 28 of 4,096 buckets must list 28 dirs, not run a full
-    * partition discovery over all 4,096 (O(partitions) driver listing
-    * per batch — measured as the dominant incremental cost before this
-    * existed). `basePath` keeps the partition column in the schema.
-    * Values whose dir doesn't exist (first change in a fresh bucket)
-    * are skipped; if none exist, an empty frame with the snapshot's
-    * schema is returned (derived from one existing partition dir). */
+  /** Read ONLY the named partition dirs of the current version — a
+    * point read touching 1 of 4,096 buckets lists 1 dir, not a full
+    * partition discovery over all 4,096. Manifest-carried dirs resolve
+    * from the versions that hold them; `basePath` keeps the partition
+    * column in the schema, which comes from one footer read (see
+    * [[schemaOf]]). Values whose dir doesn't exist are skipped; if none
+    * exist, an empty frame with the snapshot's schema is returned. */
   def readCurrentPartitions(partitionCol: String,
                             values: Seq[Any]): DataFrame = {
     val v = currentVersion().getOrElse(throw new IllegalStateException(
       s"readCurrentPartitions: no published version under $root"))
-    // resolution goes through the effective map, so manifest-carried
-    // dirs read from their owner versions exactly like local ones
     val eff = effectiveDirs(v)
-    val wanted = values
-      .flatMap(x => eff.get(s"$partitionCol=$x"))
-    if (wanted.nonEmpty) readGrouped(wanted)
-    else {
-      val one = eff.headOption.map(_._2).getOrElse(
-        throw new IllegalStateException(
-          s"readCurrentPartitions: v$v has no $partitionCol= dirs"))
-      spark.read.option("basePath", one.getParent.toString)
-        .parquet(one.toString).limit(0)
-    }
+    if (eff.isEmpty) throw new IllegalStateException(
+      s"readCurrentPartitions: v$v has no $partitionCol= dirs")
+    val wanted = values.flatMap(x => eff.get(s"$partitionCol=$x").map(s"$partitionCol=$x" -> _)).toMap
+    val schema = schemaOf(wanted).orElse(schemaOf(eff))
+    if (wanted.nonEmpty) readPaths(schema, wanted.values.toSeq)
+    else readPaths(schema, Seq(eff.head._2)).limit(0)
   }
 
   /** Mirror `src` under `dst` with per-file hard links (copy where the
-    * filesystem refuses links) — the unchanged-partition carry-over of
-    * [[publishIncremental]]. */
+    * filesystem refuses links) — [[carryDirs]]' link mode. */
   private def linkTree(src: java.nio.file.Path,
                        dst: java.nio.file.Path): Unit = {
     Files.createDirectories(dst)
-    val stream = Files.list(src)
-    try {
-      val it = stream.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val d = dst.resolve(p.getFileName.toString)
-        if (Files.isDirectory(p)) linkTree(p, d) else link(p, d)
-      }
-    } finally stream.close()
+    children(src).foreach { p =>
+      val d = dst.resolve(p.getFileName.toString)
+      if (Files.isDirectory(p)) linkTree(p, d) else link(p, d)
+    }
   }
 
   /** Hard-link one data file plus its `.crc` sidecar, when it has one —
@@ -887,9 +917,6 @@ class SnapshotStore(spark: SparkSession, root: String) {
   private def queueFiles(): Seq[java.nio.file.Path] =
     if (!Files.exists(queueDir)) Seq.empty else dataFiles(queueDir)
 
-  /** The hive partition columns a version dir was written with, in
-    * nesting order — detected from the `col=value` directory levels, so
-    * a purge rewrite can reproduce the layout it replaces. */
   /** A version's partition columns as [[purgeKeys]]' rewrites must see
     * them: local hive dirs when the version holds any, else the carried
     * dirs named by its manifest — a version whose buckets are ALL
@@ -907,33 +934,12 @@ class SnapshotStore(spark: SparkSession, root: String) {
       .map(_._1.split("=", 2)(0))
   }
 
-  private def partitionColsOf(dir: java.nio.file.Path): Seq[String] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    var cur = dir
-    var descend = true
-    while (descend) {
-      descend = false
-      if (Files.isDirectory(cur)) {
-        val stream = Files.list(cur)
-        val child = try {
-          val it = stream.iterator()
-          var found: Option[java.nio.file.Path] = None
-          while (it.hasNext && found.isEmpty) {
-            val p = it.next()
-            if (Files.isDirectory(p) &&
-                p.getFileName.toString.contains("=")) found = Some(p)
-          }
-          found
-        } finally stream.close()
-        child.foreach { c =>
-          buf += c.getFileName.toString.split("=", 2)(0)
-          cur = c
-          descend = true
-        }
-      }
-    }
-    buf.toSeq
-  }
+  /** The hive partition columns a version dir was written with, in
+    * nesting order — detected from the `col=value` directory levels, so
+    * a purge rewrite can reproduce the layout it replaces. */
+  private def partitionColsOf(dir: java.nio.file.Path): Seq[String] =
+    children(dir).find(isPartitionDir).toSeq.flatMap(c =>
+      c.getFileName.toString.split("=", 2)(0) +: partitionColsOf(c))
 
   /** Cluster a purge rewrite's output by its partition columns when the
     * version has MORE partition values than shuffle partitions (the
@@ -955,27 +961,16 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * so maintenance never strips a layout contract from the version it
     * rewrites. */
   private def versionSidecars(dir: java.nio.file.Path): Map[String, String] =
-    if (!Files.isDirectory(dir)) Map.empty
-    else {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        var m = Map.empty[String, String]
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          // _MANIFEST is a protocol artifact, not a caller sidecar: a
-          // purge rewrite MATERIALIZES the version (readVersion resolved
-          // the manifest into the rewritten data), so carrying the
-          // stale manifest would double-serve carried dirs
-          if (Files.isRegularFile(p) && n.startsWith("_") &&
-              n != "_SUCCESS" && n != "_PURGED" && n != "_LAYOUT" &&
-              n != ManifestName && !n.endsWith(".crc"))
-            m += (n -> Files.readString(p))
-        }
-        m
-      } finally stream.close()
-    }
+    children(dir).filter { p =>
+      val n = p.getFileName.toString
+      // _MANIFEST is a protocol artifact, not a caller sidecar: a
+      // purge rewrite MATERIALIZES the version (readVersion resolved
+      // the manifest into the rewritten data), so carrying the
+      // stale manifest would double-serve carried dirs
+      Files.isRegularFile(p) && n.startsWith("_") &&
+        n != "_SUCCESS" && n != "_PURGED" && n != "_LAYOUT" &&
+        n != ManifestName && !n.endsWith(".crc")
+    }.map(p => p.getFileName.toString -> Files.readString(p)).toMap
 
   /** Adopt-or-discard any `v{N}._purge` temp a crashed [[purgeKeys]]
     * left: temps carrying the `_PURGED` adoption marker (written LAST,
@@ -1004,20 +999,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
 
   /** The `v{N}._purge` staging temps currently on disk. */
   private def purgeTemps(): Seq[java.nio.file.Path] =
-    if (!Files.exists(rootPath)) Seq.empty
-    else {
-      val stream = Files.list(rootPath)
-      try {
-        val it = stream.iterator()
-        val buf =
-          scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.endsWith("._purge")) buf += p
-        }
-        buf.toSeq
-      } finally stream.close()
-    }
+    children(rootPath).filter(_.getFileName.toString.endsWith("._purge"))
 
   /** Versions currently on disk (published or orphaned), ascending.
     * Strictly `v{digits}` names: a purge's `v{N}._purge` staging temp
@@ -1025,23 +1007,19 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * NOT a version and must not break enumeration — vacuum and the
     * stream's maintenance tick both list through here. */
   def versions(): Seq[Long] =
-    if (!Files.exists(rootPath)) Seq.empty
-    else {
-      val stream = Files.list(rootPath)
-      try {
-        val it = stream.iterator()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (it.hasNext) {
-          val name = it.next().getFileName.toString
-          if (name.length > 1 && name.startsWith("v") &&
-              name.drop(1).forall(_.isDigit)) buf += name.drop(1).toLong
-        }
-        buf.sorted.toSeq
-      } finally stream.close()
-    }
+    children(rootPath).map(_.getFileName.toString).collect {
+      case n if n.length > 1 && n.startsWith("v") && n.drop(1).forall(_.isDigit) =>
+        n.drop(1).toLong
+    }.sorted
 }
 
 object SnapshotStore {
+
+  /** The bucket layout of a [[SnapshotStore!.publishSegments publishSegments]]
+    * call: rows carry their bucket (one of `count`) in partition column
+    * `col`, and `touched` names the buckets the publish rewrites; with
+    * carry, every other bucket is carried (`manifest` chooses how). */
+  final case class Buckets(col: String, count: Int, touched: Seq[Int], manifest: Boolean)
 
   /** Publish a dimension snapshot as a BUCKETED managed table — the
     * layout the merge read path wants at scale: with the snapshot

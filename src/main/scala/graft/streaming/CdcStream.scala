@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -30,7 +30,7 @@ object CdcStream {
     * Pass `opCol` to honor DELETE change records (expire, insert nothing).
     *
     * Cache hygiene: a batch routed by planned joins caches its routed
-    * changes for intra-job reuse ([[Scd2.mergeBatch]]); the cleanup runs
+    * changes for intra-job reuse ([[Scd2.mergeSegments]]); the cleanup runs
     * after each publish, so a long-running stream holds at most one
     * routed-batch cache entry at a time and caller-held caches are
     * untouched. A small batch caches nothing.
@@ -81,34 +81,33 @@ object CdcStream {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** Publish a fully-LOCAL copy of the current bucketed snapshot (one
-    * clustered file per bucket, no manifest) — the OPTIMIZE verb that
-    * resets a manifest chain so [[SnapshotStore.vacuum]]'s owner
-    * closure stops pinning old versions. O(dim), scheduled (see
+  /** Publish a fully-LOCAL copy of the current bucketed snapshot — the
+    * OPTIMIZE verb that resets a manifest chain so
+    * [[SnapshotStore.vacuum]]'s owner closure stops pinning old
+    * versions. Every bucket dir is hard-linked, none rewritten
+    * ([[SnapshotStore.publishMaterialized]]); scheduled (see
     * `materializeEvery`), a no-op on an empty or unbucketed store —
     * and REFUSED when `dimBuckets` disagrees with the current
     * version's `_BUCKETS` sidecar (re-stamping a count the dirs do
     * not have would disarm the stream's layout guard). */
   def materializeSnapshot(store: SnapshotStore, dimBuckets: Int): Unit =
-    store.read().foreach { d =>
-      if (d.columns.contains(BucketCol)) {
-        // the stamped count must describe the EXISTING BucketCol
-        // values (this verb re-clusters, it never re-hashes), so it is
-        // validated against the current version's own sidecar: a
-        // caller-passed mismatch — or an unstamped snapshot whose
-        // modulo nobody recorded — is refused loudly, because stamping
-        // N over modulo-M dirs would let a restarted stream pass the
-        // layout guard and merge keys into the wrong buckets (split
-        // version chains, duplicate current rows, silently)
-        val stamped = store.currentVersionSidecar(DimBucketsMeta)
-        require(stamped.contains(dimBuckets.toString),
-          s"materializeSnapshot: bucket count $dimBuckets does not " +
-            s"match the current version's $DimBucketsMeta sidecar " +
-            s"(${stamped.getOrElse("absent")}) — refusing to stamp a " +
-            "layout the dirs do not have")
-        store.publish(d.repartition(d(BucketCol)), Seq(BucketCol),
-          Map(DimBucketsMeta -> dimBuckets.toString))
-      }
+    if (store.currentPartitionCols() == Seq(BucketCol)) {
+      // the stamped count must describe the EXISTING BucketCol
+      // values (this verb re-links, it never re-hashes), so it is
+      // validated against the current version's own sidecar: a
+      // caller-passed mismatch — or an unstamped snapshot whose
+      // modulo nobody recorded — is refused loudly, because stamping
+      // N over modulo-M dirs would let a restarted stream pass the
+      // layout guard and merge keys into the wrong buckets (split
+      // version chains, duplicate current rows, silently)
+      val stamped = store.currentVersionSidecar(DimBucketsMeta)
+      require(stamped.contains(dimBuckets.toString),
+        s"materializeSnapshot: bucket count $dimBuckets does not " +
+          s"match the current version's $DimBucketsMeta sidecar " +
+          s"(${stamped.getOrElse("absent")}) — refusing to stamp a " +
+          "layout the dirs do not have")
+      store.publishMaterialized()
+      ()
     }
 
   /** The dim snapshot's key-bucket partition column —
@@ -124,54 +123,51 @@ object CdcStream {
     * (a seed published with a different hash would route every later
     * batch to the wrong partitions). */
   def bucketed(df: DataFrame, key: String, dimBuckets: Int): DataFrame =
-    df.withColumn(BucketCol,
-      pmod(xxhash64(df(key)), lit(dimBuckets.toLong)).cast("int"))
+    df.withColumn(BucketCol, bucketOf(df(key), dimBuckets))
+
+  private def bucketOf(key: Column, dimBuckets: Int): Column =
+    pmod(xxhash64(key), lit(dimBuckets.toLong)).cast("int")
 
   /** One micro-batch of the streaming SCD2 merge — the foreachBatch
-    * body of [[start]], public so both publish modes are directly
+    * body of [[start]], public so every publish mode is directly
     * testable.
     *
-    * `dimBuckets <= 0` is the whole-dim formulation: one flat snapshot
-    * dir, kept by [[SnapshotStore.publishSegments]] as a history segment
-    * (closed versions, hard-linked forward, never rewritten) plus the
-    * current rows. A batch reads its keys' metadata from both segments,
-    * rewrites only the current rows and appends the versions it closes
-    * as one new history file, so per-batch write work is O(current rows)
-    * rather than O(every version ever written); the metadata scan still
-    * reads the whole dim's key column, though only the batch's keys'
-    * rows leave it (bench/STREAM_r23.md). A batch that widens the schema
-    * rewrites both segments whole.
+    * Every mode keeps one layout ([[SnapshotStore]]): the dimension is a
+    * set of buckets, each a history segment (closed versions,
+    * hard-linked forward, never rewritten) plus the current rows.
+    * `dimBuckets <= 0` is the one-bucket case, a flat snapshot dir;
+    * `dimBuckets > 0` hive-partitions it by [[BucketCol]], and a key's
+    * whole version chain lives in its bucket, so a merge over the
+    * buckets a batch's keys hash into IS the global merge. A batch reads
+    * the segments of just those buckets (their set collected with the
+    * batch's keys, bounded by `dimBuckets`), runs one
+    * [[Scd2.mergeSegments]] and one [[SnapshotStore.publishSegments]]:
+    * each touched bucket rewrites its current rows and appends the
+    * versions it closes as one new history file, and every untouched
+    * bucket is carried by hard link, or with `manifestCarry` by a
+    * `_MANIFEST` reference. Per-batch write work therefore tracks the
+    * touched buckets' current rows, not the dim.
     *
-    * `dimBuckets > 0` is the copy-on-write formulation: the snapshot
-    * is hive-partitioned by [[BucketCol]] and a micro-batch touches
-    * ONLY the buckets its keys hash into — the dim-side READ is
-    * partition-pruned to those dirs (the batch's distinct bucket set is
-    * O(min(batch keys, dimBuckets)) — collected, bounded, never data-
-    * sized), the merge runs against just those buckets' rows (merge
-    * semantics are per-key, and a key's whole version chain lives in
-    * its bucket, so the bucket-local merge IS the global merge), and
-    * [[SnapshotStore.publishIncremental]] rewrites just those dirs,
-    * carrying every untouched partition over by file-level reuse. Per-
-    * batch cost therefore tracks CHANGED-BUCKET data size, not dim size
-    * — the r18 verdict's named scale-killer, closed.
-    *
-    * Bootstrap and migration (empty store, or a snapshot published
-    * before bucketing was turned on) take one full partitioned publish
-    * to establish the layout; a batch that WIDENS the schema (the live
-    * ALTER TABLE case — evolveSchema appends batch-only columns, null
-    * for history) also republishes whole, because untouched partition
-    * files can't gain the new column by reuse and a mixed-schema dir
-    * would make the read schema depend on which file Spark samples.
-    * Both are rare, loud-in-the-log events; steady state is
-    * incremental. */
+    * Bootstrap (an empty store), migration (a snapshot laid out for
+    * another `dimBuckets`, in either direction) and a batch that WIDENS
+    * the schema (the live ALTER TABLE case — evolveSchema appends
+    * batch-only columns, null for history) make the same calls with
+    * carry off: the whole dimension is merged and rewritten, so no
+    * carried file can lack a new column or sit in a wrong bucket. All
+    * are rare, loud-in-the-log events; steady state carries. */
   def applyChangeBatch(store: SnapshotStore, batch: DataFrame,
                        key: String, ts: String, tie: String,
                        opCol: Option[String], dimBuckets: Int = 0,
                        manifestCarry: Boolean = false): Unit = {
-    // the batch's keys, collected while it fits a broadcast: the same job
-    // answers "is the batch empty?" (an empty batch publishes nothing) and
-    // narrows the merge's dim-side work to the keys it touches
-    val keys = Scd2.batchKeys(batch, key)
+    require(!batch.columns.contains(BucketCol),
+      s"applyChangeBatch: batch carries a '$BucketCol' column — the " +
+        "name is reserved for the snapshot's key-bucket partition")
+    val buckets = dimBuckets > 0
+    // the batch's keys (and buckets), collected while it fits a broadcast:
+    // the same job answers "is the batch empty?" (an empty batch publishes
+    // nothing) and narrows the merge's dim-side work to the keys it touches
+    val keys = Scd2.batchKeys(batch, key,
+      if (buckets) Some(bucketOf(batch(key), dimBuckets)) else None)
     if (keys.batchIsEmpty(batch)) return
     // the CDC op column is TRANSPORT, not payload: keep it out of the
     // dimension-schema derivations (an empty-batch bootstrap would bake
@@ -180,83 +176,39 @@ object CdcStream {
     // full republish on the first batch). The merge still reads the op
     // from the batch itself.
     val payload = opCol.fold(batch)(c => batch.drop(c))
+    // layout decision from a FILESYSTEM probe, never a schema read. The
+    // bucket COUNT must match the CURRENT VERSION's `_BUCKETS` sidecar
+    // too — dirs are modulo-dimBuckets, so a stream restarted with a
+    // different dimBuckets would look keys up in the WRONG dirs (split
+    // version chains, duplicate current rows, silently); a count change
+    // instead re-buckets everything. The sidecar lives INSIDE the version
+    // dir and rides every publish's all-or-nothing pointer flip, so data
+    // and meta can never disagree across a crash.
+    val kept = store.currentVersion().nonEmpty &&
+      store.currentPartitionCols() == Seq(BucketCol).filter(_ => buckets) &&
+      (!buckets || store.currentVersionSidecar(DimBucketsMeta).contains(dimBuckets.toString))
+    lazy val touched = keys.buckets.getOrElse(graft.engine.CallSites.named(batch.sparkSession) {
+      bucketed(batch, key, dimBuckets).select(col(BucketCol)).distinct().collect()
+    }.map(_.getInt(0)).toSeq)
+    // a widened schema carries nothing (see above)
+    val segments = (if (!kept) None
+      else store.readSegments(if (buckets) Some(touched.map(b => s"$BucketCol=$b")) else None))
+      .map { case (h, l) => (h.map(_.drop(BucketCol)), l.drop(BucketCol)) }
+      .filter { case (_, l) => Scd2.evolveSchema(l, payload).columns.length == l.columns.length }
+    val (history, live) = segments.getOrElse((None, Scd2.evolveSchema(
+      store.read().map(_.drop(BucketCol)).getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie)),
+      payload)))
+    val merged = Scd2.mergeSegments(history, live, batch, key, ts, tie, opCol, keys)
+    def withBucket(df: DataFrame) = if (buckets) bucketed(df, key, dimBuckets) else df
     // cleanup in finally: a throwing publish replays the batch, and each
     // failed attempt must not leave the routed-batch cache resident (a
     // crash-looping stream accumulates one per attempt)
-    def mergeThen(dim: DataFrame)(publish: DataFrame => Unit): Unit = {
-      val merged = Scd2.mergeBatch(dim, batch, key, ts, tie, opCol, keys)
-      try publish(merged.dim) finally merged.cleanup()
-    }
-    if (dimBuckets <= 0) {
-      // explicit whole-dim dial: a snapshot previously run bucketed is
-      // MIGRATED BACK (bucket column dropped, next version unbucketed)
-      // rather than crashing the merge on the unexpected column
-      val (history, live) = store.readSegments()
-        .map { case (h, l) => (h, l.drop(BucketCol)) }
-        .getOrElse((None, Scd2.rebuild(payload.limit(0), key, ts, tie)))
-      val dim = history.fold(live)(_.unionByName(live))
-      val evolved = Scd2.evolveSchema(dim, payload)
-      // a widened schema carries nothing: both segments are rewritten
-      // whole, so no carried file lacks the new column
-      val widened = evolved.columns.length != dim.columns.length
-      val merged =
-        if (widened) Scd2.mergeSegments(None, evolved, batch, key, ts, tie, opCol, keys)
-        else Scd2.mergeSegments(history, live, batch, key, ts, tie, opCol, keys)
-      try store.publishSegments(merged.closed, merged.current, carry = !widened)
-      finally merged.cleanup()
-      return
-    }
-    require(!batch.columns.contains(BucketCol),
-      s"applyChangeBatch: batch carries a '$BucketCol' column — the " +
-        "name is reserved for the snapshot's key-bucket partition")
-    def withBucket(df: DataFrame) = bucketed(df, key, dimBuckets)
-
-    // layout decision from a FILESYSTEM probe, never a schema read: a
-    // full partition discovery just to ask "is this snapshot bucketed?"
-    // would cost O(partitions) driver listing per micro-batch. The
-    // bucket COUNT must also match the CURRENT VERSION's `_BUCKETS`
-    // sidecar — dirs are modulo-dimBuckets, so a stream restarted with
-    // a different dimBuckets against the incremental path would look
-    // keys up in the WRONG dirs (split version chains, duplicate
-    // current rows, silently); a count change instead takes the
-    // migration arm's full re-bucketing publish. The sidecar lives
-    // INSIDE the version dir and rides every publish's all-or-nothing
-    // pointer flip, so data and meta can never disagree across a crash
-    // (a root-level meta written after the publish could).
-    if (store.currentVersion().nonEmpty &&
-        store.currentPartitionCols() == Seq(BucketCol) &&
-        store.currentVersionSidecar(DimBucketsMeta)
-          .contains(dimBuckets.toString)) {
-      // the batch's bucket set: bounded by dimBuckets, driver-safe
-      val affected = graft.engine.CallSites.named(batch.sparkSession) {
-        withBucket(batch).select(col(BucketCol)).distinct().collect()
-      }.map(_.getInt(0)).toSeq
-      // manifest-style dim read: ONLY the affected bucket dirs are
-      // listed and scanned — per-batch read cost is O(changed buckets)
-      // in files AND in listing, independent of how many buckets the
-      // snapshot holds
-      val dimAff = store.readCurrentPartitions(BucketCol, affected)
-        .drop(BucketCol)
-      val evolved = Scd2.evolveSchema(dimAff, payload)
-      if (evolved.columns.length != dimAff.columns.length) {
-        // schema widened — full republish so every partition's files
-        // carry the new columns (see doc above)
-        val full = Scd2.evolveSchema(store.read().get.drop(BucketCol), payload)
-        mergeThen(full)(m => store.publish(clustered(withBucket(m)),
-          Seq(BucketCol), Map(DimBucketsMeta -> dimBuckets.toString)))
-      } else
-        mergeThen(evolved)(m => store.publishIncremental(withBucket(m), BucketCol,
-          Map(DimBucketsMeta -> dimBuckets.toString), manifestCarry))
-    } else {
-      // bootstrap (empty store), migration (pre-bucketing snapshot),
-      // or a CHANGED bucket count: one full publish (re-)establishes
-      // the bucketed layout and its persisted count
-      val dim = store.read().map(_.drop(BucketCol))
-        .getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie))
-      mergeThen(Scd2.evolveSchema(dim, payload))(m => store.publish(
-        clustered(withBucket(m)), Seq(BucketCol),
-        Map(DimBucketsMeta -> dimBuckets.toString)))
-    }
+    try store.publishSegments(withBucket(merged.closed), withBucket(merged.current),
+      carry = segments.nonEmpty,
+      if (!buckets) None else Some(SnapshotStore.Buckets(BucketCol, dimBuckets,
+        if (segments.isEmpty) Nil else touched, manifestCarry)),
+      if (buckets) Map(DimBucketsMeta -> dimBuckets.toString) else Map.empty)
+    finally merged.cleanup()
   }
 
   /** The per-version bucket-count sidecar — the layout's equivalent of
@@ -267,10 +219,10 @@ object CdcStream {
   private[graft] val DimBucketsMeta = "_BUCKETS"
 
   /** One writer task per bucket → one file per bucket dir — the write
-    * clustering every bucketed publish wants (matches
-    * [[SnapshotStore.publishIncremental]]'s internal clustering, which
-    * covers the steady-state path). Public so harnesses pre-seeding a
-    * bucketed snapshot cluster their seed the same way. */
+    * clustering a bucketed full publish wants (as
+    * [[SnapshotStore.publishSegments]] clusters its own). Public so
+    * harnesses pre-seeding a bucketed snapshot cluster their seed the
+    * same way. */
   def clustered(df: DataFrame): DataFrame =
     df.repartition(df(BucketCol))
 

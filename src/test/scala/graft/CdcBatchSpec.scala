@@ -81,6 +81,9 @@ class CdcBatchSpec extends AnyFunSuite {
         h.foreach(x => same(x.schema, inferred(v), s"$what: history segment"))
         same(l.schema, inferred(v), s"$what: live segment")
       }
+      if (store.currentPartitionCols().nonEmpty)
+        same(store.readCurrentPartitions(CdcStream.BucketCol, Seq(0, 1)).schema, inferred(v),
+          s"$what: partition read")
     }
     // a plain publish: a legacy version without `hist-` files
     store.publish(batchFile(0, 300).drop(op).withColumn("valid_from", col(ts))
@@ -107,6 +110,15 @@ class CdcBatchSpec extends AnyFunSuite {
     check("every key deleted")
     store.purgeKeys(store.read().get.select(key).limit(5), key)
     check("purgeKeys rewrite")
+    val web = (lo: Long, hi: Long) => batchFile(lo, hi).withColumn("channel", lit("web"))
+    apply(store, web(750, 850), 16, manifest = false)
+    assert(store.currentPartitionCols() === Seq(CdcStream.BucketCol))
+    check("a bucketed version")
+    apply(store, web(850, 900).limit(1), 16, manifest = true)
+    assert(Files.exists(root.resolve(s"v${store.currentVersion().get}").resolve("_MANIFEST")))
+    check("a manifest version")
+    store.purgeKeys(store.read().get.select(key).limit(5), key)
+    check("a bucketed purge rewrite")
   }
 
   test("a streamed batch's jobs are named by the engine, not the stream") {

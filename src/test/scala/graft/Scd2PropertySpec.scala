@@ -156,16 +156,23 @@ class Scd2PropertySpec extends AnyFunSuite {
   }
 
   /** With `broadcast` the store path routes each batch with its keys
-    * collected; without, by sort-merge joins. The fold plans joins. */
+    * collected; without, by sort-merge joins. The fold plans joins. Each
+    * history also draws a layout — whole-dim or 4 buckets, with or
+    * without manifest carry — and a materialize tick runs between
+    * batches. */
   private def storeFoldProperty(broadcast: Boolean): Unit = {
     import graft.engine.SnapshotStore
     import graft.streaming.CdcStream
     import java.nio.file.Files
     def ino(p: java.nio.file.Path) = Files.getAttribute(p, "unix:ino")
     val (key, ts, tie, op) = ("user_id", "ts", "event_id", Some("operation_type"))
-    forAllSeeded(splitHistoryGen, if (broadcast) 100 else 40) { batches =>
+    val layouts = Gen.zip(Gen.oneOf(0, 4), Gen.oneOf(false, true))
+    forAllSeeded(Gen.zip(splitHistoryGen, layouts), if (broadcast) 100 else 40) {
+      case (batches, (buckets, manifest)) => withClue(s"buckets=$buckets manifest=$manifest") {
       val store = new SnapshotStore(spark,
         Files.createTempDirectory("prop_store").toString)
+      // the most history files a bucket may keep
+      val bound = 2 * math.max(1, spark.sparkContext.defaultParallelism / math.max(1, buckets))
       val empty = Scd2.rebuild(toDf(Nil).drop("operation_type"), key, ts, tie)
       val expected = batches.map(toDf).foldLeft(empty) { (dim, b) =>
         if (b.isEmpty) dim
@@ -174,27 +181,41 @@ class Scd2PropertySpec extends AnyFunSuite {
             .map(p => p.getFileName.toString -> ino(p))).getOrElse(Nil)
           // the routing the store path takes
           assert(Scd2.batchKeys(b, key).values.isDefined === broadcast)
-          CdcStream.applyChangeBatch(store, b, key, ts, tie, op)
-          // at most 3 prior history files here, far below the fold bound,
-          // and the schema never widens: every file must carry by inode
-          val now = store.historyFiles(store.currentVersion().get)
-            .map(p => p.getFileName.toString -> ino(p)).toMap
-          prior.foreach { case (n, i) => assert(now.get(n).contains(i),
-            s"history file $n was rewritten instead of carried") }
+          CdcStream.applyChangeBatch(store, b, key, ts, tie, op, buckets, manifest)
+          val hist = store.historyFiles(store.currentVersion().get)
+          hist.foreach(f => assert(closedOnly(f), s"history file $f holds a current row"))
+          hist.groupBy(_.getParent).foreach { case (d, fs) =>
+            assert(fs.size <= bound, s"bucket $d keeps ${fs.size} history files") }
+          if (buckets == 0) {
+            // at most 3 prior history files here, far below the fold bound,
+            // and the schema never widens: every file must carry by inode
+            val now = hist.map(p => p.getFileName.toString -> ino(p)).toMap
+            prior.foreach { case (n, i) => assert(now.get(n).contains(i),
+              s"history file $n was rewritten instead of carried") }
+          }
+          CdcStream.materializeSnapshot(store, buckets)
           Scd2.merge(dim, b, key, ts, tie, op).localCheckpoint()
         }
       }
-      store.currentVersion().foreach { v =>
-        val hist = store.historyFiles(v)
-        if (hist.nonEmpty)
-          assert(spark.read.parquet(hist.map(_.toString): _*)
-            .filter($"is_current").count() === 0L,
-            "the history segment holds closed rows only")
+      store.currentVersion().foreach { _ =>
         val cols = expected.columns.sorted.map(col).toIndexedSeq
         assert(store.read().get.select(cols: _*)
           .orderBy(key, "version_no").collect().toSeq ===
           expected.select(cols: _*).orderBy(key, "version_no").collect().toSeq)
       }
-    }
+    } }
+  }
+
+  /** Does parquet file `f` hold closed rows only? Read from its footer:
+    * every row group's `is_current` statistics must top out at false. */
+  private def closedOnly(f: java.nio.file.Path): Boolean = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f))
+    try r.getFooter.getBlocks.asScala.forall(_.getColumns.asScala.exists { c =>
+      val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+      c.getPath.toDotString == "is_current" && st != null && st.hasNonNullValue &&
+        st.genericGetMax == java.lang.Boolean.FALSE
+    }) finally r.close()
   }
 }

@@ -147,6 +147,17 @@ class Scd2Spec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.size === before)
   }
 
+  test("merge leaves no persisted RDD behind") {
+    val split = "2024-01-21 18:00:00" // unique split → fresh plans, no cross-test cache hits
+    val hist = Scd2.rebuild(events.filter($"ts" <= lit(split)), "user_id", "ts", "event_id")
+    val batch = events.filter($"ts" > lit(split))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach { _ =>
+      assert(Scd2.merge(hist, batch, "user_id", "ts", "event_id").count() > 0)
+      assert(spark.sparkContext.getPersistentRDDs.size === before)
+    }
+  }
+
   test("merging an empty batch is a no-op") {
     val merged = Scd2.merge(dim, events.limit(0), "user_id", "ts", "event_id")
     assert(merged.count() === dim.count())

@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
-"""Compare two checkouts on one cdcbench workload in alternating pairs.
+"""Compare two checkouts on cdcbench workloads in alternating pairs.
 
     python3 tools/bench_pairs.py --parent ../parent --change . \
-        --workload ingest_micro --seeds 1,2,3,4,5 [--pairs 10] [--seconds 15] [--trace 0]
+        --workload ingest_micro[,history_reads,...] --seeds 1,2,3,4,5 \
+        [--pairs 10] [--seconds 15] [--trace 0]
+
+Each workload of the comma list gets its own --pairs pairs, run and
+reported in turn.
 
 Each pair runs `python3 cdcbench/run.py` once in each checkout, from that
 checkout's root, with the same seed; the side that goes first alternates
@@ -24,7 +28,8 @@ and not every change run beats every parent run, else "within". A run that
 fails (nonzero exit, no result line, or "correct": false) is reported and
 its pair is left out of the statistics but not out of the win base.
 
---out writes every run (side, pair, seed, load, result, context) as JSON.
+--out writes every run (workload, side, pair, seed, load, result, context)
+as JSON.
 """
 import argparse
 import json
@@ -108,7 +113,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[1])
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True, help="comma-separated workloads")
     ap.add_argument("--seeds", required=True, help="comma-separated seeds")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seconds", type=int, default=15)
@@ -117,20 +122,24 @@ def main():
     a = ap.parse_args()
     seeds = [int(s) for s in a.seeds.split(",") if s.strip()]
     sides = {"parent": a.parent, "change": a.change}
-    pairs = []
-    for i in range(a.pairs):
-        seed = seeds[i % len(seeds)]
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        pair = {"pair": i, "seed": seed, "first": order[0]}
-        for side in order:
-            pair[side] = run_one(sides[side], a.workload, seed, a.seconds, a.trace)
-            r = pair[side]
-            print(f"pair {i} seed {seed} {side}: load {r['load']} "
-                  f"{'ok' if r['ok'] else 'FAILED (exit %d)' % r['exit']}", flush=True)
-        pairs.append(pair)
-    if a.out:
-        Path(a.out).write_text(json.dumps(pairs, indent=1))
-    report(pairs, declared(a.change))
+    runs = []
+    for workload in [w.strip() for w in a.workload.split(",") if w.strip()]:
+        pairs = []
+        for i in range(a.pairs):
+            seed = seeds[i % len(seeds)]
+            order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+            pair = {"workload": workload, "pair": i, "seed": seed, "first": order[0]}
+            for side in order:
+                pair[side] = run_one(sides[side], workload, seed, a.seconds, a.trace)
+                r = pair[side]
+                print(f"{workload} pair {i} seed {seed} {side}: load {r['load']} "
+                      f"{'ok' if r['ok'] else 'FAILED (exit %d)' % r['exit']}", flush=True)
+            pairs.append(pair)
+            if a.out:
+                Path(a.out).write_text(json.dumps(runs + pairs, indent=1))
+        runs += pairs
+        print(f"== {workload}")
+        report(pairs, declared(a.change))
 
 
 if __name__ == "__main__":
