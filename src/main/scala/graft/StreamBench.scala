@@ -147,10 +147,8 @@ object StreamBench {
       // incremental per-batch cost stays flat as the dim grows: the
       // batch's ~32 hot keys touch ~the same number of same-sized
       // buckets at every scale
-      val results = Seq(("whole", 0, false),
-          ("incremental", 256 * dimScale, false),
-          ("manifest", 256 * dimScale, true)).map {
-        case (mode, buckets, mfCarry) =>
+      val results = Seq(("whole", 0), ("incremental", 256 * dimScale)).map {
+        case (mode, buckets) =>
           val work = Files
             .createTempDirectory(s"stream_slope_${mode}_$dimScale").toString
           ChangeGen.writeBatchFiles(hot, TIE, 10, 500, work)
@@ -167,8 +165,7 @@ object StreamBench {
           val (wall, batches) = time {
             val q = CdcStream.start(spark, s"$work/changes_*.json",
               s"$work/ckpt", store, hot.schema, K, TS, TIE,
-              opCol = Some("operation_type"), dimBuckets = buckets,
-              manifestCarry = mfCarry)
+              opCol = Some("operation_type"), dimBuckets = buckets)
             q.awaitTermination()
             q.recentProgress.count(_.numInputRows > 0)
           }
@@ -191,12 +188,11 @@ object StreamBench {
             s"publish disagree (${results(0)._2} vs ${r._2}) — refusing " +
             "to report a wrong merge's cost")
       }
-      (dimScale, dimRows, results(0)._3, results(1)._3, results(2)._3)
+      (dimScale, dimRows, results(0)._3, results(1)._3)
     }
-    perScale.foreach { case (s, rows, whole, inc, mf) =>
+    perScale.foreach { case (s, rows, whole, inc) =>
       println(f"slope_summary   scale=${s}%2dx dim_rows=$rows%7d " +
-        f"whole_per_batch=$whole%7.1f ms incremental_per_batch=$inc%7.1f ms " +
-        f"manifest_per_batch=$mf%7.1f ms")
+        f"whole_per_batch=$whole%7.1f ms incremental_per_batch=$inc%7.1f ms")
     }
     spark.stop()
   }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 /** Single-writer ENFORCEMENT for the maintenance verbs. Every mutation
   * verb over a versioned root (publish / purge / sweep / compaction /
-  * materialize) documents a single-writer schedule — crash atomicity is
+  * vacuum) documents a single-writer schedule — crash atomicity is
   * guaranteed by the _CURRENT swap + recovery adoption, but nothing
   * REFUSED a concurrent writer: two simultaneous publishes could race
   * the version allocation, and a vacuum under a publish could reclaim
@@ -30,10 +30,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   *  - release deletes the file only when its token matches THIS
   *    acquisition — a verb that outlived its TTL and lost the lease to
   *    a takeover must not delete the new holder's lease on exit;
-  *  - reentrant WITHIN the owning thread (verbs nest: publishIncremental
-  *    → publishVersionDir, vacuum → recoverPurgeTemps, purgeSweep →
-  *    purgeKeys); a SECOND thread — same JVM or not — conflicts like
-  *    any foreign writer.
+  *  - reentrant WITHIN the owning thread (verbs nest: purgeSweep →
+  *    purgeKeys → publish); a SECOND thread — same JVM or not —
+  *    conflicts like any foreign writer.
   *
   * Residual windows, documented honestly: the rename-claim closes the
   * two-taker race, but a THIRD writer creating a fresh lease in the

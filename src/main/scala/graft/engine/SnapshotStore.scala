@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * Buckets and segments: a version's data lives in buckets — one
   * `col=value` partition dir each, or the version dir itself when it is
   * flat (the one-bucket case). A bucket may be carried from an older
-  * version, hard-linked or named by the version's `_MANIFEST`. Inside a
-  * bucket, [[publishSegments]] (the SCD2 publish, in every mode) keeps
-  * the closed rows (`is_current = false`) in `hist-`-prefixed files
+  * version by hard link, so every version dir holds all of its buckets
+  * and a read of it is one parquet relation. Inside a bucket,
+  * [[publishSegments]] (the SCD2 publish, in every mode) keeps the
+  * closed rows (`is_current = false`) in `hist-`-prefixed files
   * apart from the current rows. Closed versions never change, so the
   * next such publish hard-links those files forward and rewrites only
   * the current rows of the buckets it touches. The split is invisible
@@ -45,12 +46,11 @@ class SnapshotStore(spark: SparkSession, root: String) {
 
   def read(): Option[DataFrame] = currentVersion().map(readVersion)
 
-  /** Read a version — every bucket of it, carried ones from the
-    * versions that hold them (see [[readPaths]]) — with the schema of one
+  /** Read a version — every bucket of it — with the schema of one
     * footer read (see [[schemaOf]]). */
   def readVersion(v: Long): DataFrame = {
     val dirs = bucketDirs(v)
-    readPaths(schemaOf(dirs), dirs.values.toSeq)
+    readPaths(v, schemaOf(dirs), dirs.values.toSeq)
   }
 
   /** The schema `spark.read.parquet` infers for `dirs` (bucket name →
@@ -93,49 +93,42 @@ class SnapshotStore(spark: SparkSession, root: String) {
     try r.getFooter finally r.close()
   }
 
-  /** Read parquet `paths` (bucket dirs or their files) that may span
-    * several VERSION dirs (carried buckets live in the versions that hold
-    * them): grouped per version so hive partition inference stays correct
-    * under each one's basePath, deterministically ordered, then a
-    * union-by-name across the ≤ version-chain groups — plan size is
-    * bounded by the version chain, never the bucket count. `glob`
-    * filters the file names read. The ONE read every reader here goes
-    * through, so the resolution paths can never diverge. */
-  private def readPaths(schema: Option[StructType], paths: Seq[java.nio.file.Path],
-                        glob: Option[String] = None): DataFrame =
-    paths.groupBy(p => rootPath.resolve(rootPath.relativize(p).getName(0)))
-      .toSeq.sortBy(_._1.toString)
-      .map { case (base, ps) =>
-        val r = schema.fold(spark.read)(spark.read.schema(_)).option("basePath", base.toString)
-        glob.fold(r)(r.option("pathGlobFilter", _)).parquet(ps.map(_.toString).sorted: _*)
-      }
-      .reduce(_ unionByName _)
+  /** Read parquet `paths` (bucket dirs or their files) of version `v`
+    * as one relation whose `basePath` is the version dir, so hive
+    * partition inference sees the bucket column. `glob` filters the file
+    * names read. The ONE read every reader here goes through, so the
+    * resolution paths can never diverge. */
+  private def readPaths(v: Long, schema: Option[StructType], paths: Seq[java.nio.file.Path],
+                        glob: Option[String] = None): DataFrame = {
+    val r = schema.fold(spark.read)(spark.read.schema(_))
+      .option("basePath", versionDir(v).toString)
+    glob.fold(r)(r.option("pathGlobFilter", _)).parquet(paths.map(_.toString).sorted: _*)
+  }
 
-  /** The manifest sidecar: `name<TAB>ownerVersion` per CARRIED
-    * partition dir — the version's locally absent dirs, resolved to
-    * the version that physically holds them. Written by
-    * [[carryDirs]]' manifest mode; locally present dirs
-    * always own themselves and never appear in it. */
-  private val ManifestName = "_MANIFEST"
-
-  /** A version's effective `col=value` partition-dir map
-    * (name → absolute dir): local dirs plus manifest-carried ones,
-    * local winning (a rewritten bucket owns itself). O(local dirs) +
-    * one small-file manifest parse — never a recursive walk. */
-  private def effectiveDirs(v: Long): Map[String, java.nio.file.Path] =
-    manifestEntries(v).map { case (name, owner) =>
-      name -> rootPath.resolve(s"v$owner").resolve(name)
-    }.toMap ++ children(rootPath.resolve(s"v$v")).filter(isPartitionDir)
-      .map(p => p.getFileName.toString -> p)
+  private def versionDir(v: Long): java.nio.file.Path = rootPath.resolve(s"v$v")
 
   private def isPartitionDir(p: java.nio.file.Path): Boolean =
     Files.isDirectory(p) && p.getFileName.toString.contains("=")
 
-  /** A version's buckets, name → dir: its effective partition dirs, or,
+  /** A version's buckets, name → dir: its `col=value` partition dirs, or,
     * for a flat version, the version dir itself under the name "". */
   private def bucketDirs(v: Long): Map[String, java.nio.file.Path] = {
-    val eff = effectiveDirs(v)
-    if (eff.nonEmpty) eff else Map("" -> rootPath.resolve(s"v$v"))
+    val dir = versionDir(v)
+    refuseManifest(dir)
+    val parts = children(dir).filter(isPartitionDir).map(p => p.getFileName.toString -> p).toMap
+    if (parts.nonEmpty) parts else Map("" -> dir)
+  }
+
+  /** Refuse a version dir an older build wrote with a `_MANIFEST`: its
+    * carried buckets live in the versions that manifest names, which this
+    * build neither reads nor keeps, so serving the version would miss
+    * buckets and vacuuming would drop the versions it needs. */
+  private def refuseManifest(dir: java.nio.file.Path): Unit = {
+    val mf = dir.resolve("_MANIFEST")
+    if (Files.exists(mf)) throw new IllegalStateException(
+      s"$mf: this version's buckets are carried by a manifest naming older " +
+        "versions, which this build does not resolve — materialize the store " +
+        "with the build that wrote it first")
   }
 
   /** The entries of `dir`, empty when it does not exist. */
@@ -148,39 +141,6 @@ class SnapshotStore(spark: SparkSession, root: String) {
         stream.iterator().asScala.toList
       } finally stream.close()
     }
-
-  /** A version's parsed `_MANIFEST` entries (carried-dir name → owner
-    * version), empty when it has none. The ONE parser for the
-    * sidecar's `name<TAB>ownerVersion` format — every reader
-    * ([[effectiveDirs]], [[manifestOwners]]) fails the same loud way
-    * on a corrupt line instead of disagreeing on corruption
-    * handling. */
-  private def manifestEntries(v: Long): Seq[(String, Long)] = {
-    val dir = rootPath.resolve(s"v$v")
-    val mf = dir.resolve(ManifestName)
-    if (!Files.exists(mf)) Seq.empty
-    else Files.readString(mf).linesIterator.filter(_.nonEmpty).map {
-      line =>
-        line.split("\t", 2) match {
-          case Array(name, owner) if owner.trim.nonEmpty &&
-              owner.trim.forall(_.isDigit) =>
-            (name, owner.trim.toLong)
-          case _ => throw new IllegalStateException(
-            s"unparseable $ManifestName line under $dir: '$line' — " +
-              "refusing to serve a version whose carried dirs this " +
-              "build cannot resolve")
-        }
-    }.toSeq
-  }
-
-  /** The DIRECT owner versions a version's manifest references —
-    * always strictly OLDER versions, and always the version that
-    * physically holds each dir (carry resolves through
-    * [[effectiveDirs]] at publish time, so references never chain
-    * per-dir; READABILITY of a kept owner still chains — see
-    * [[vacuum]]'s fixpoint). */
-  private def manifestOwners(v: Long): Set[Long] =
-    manifestEntries(v).map(_._2).toSet
 
   /** Write `df` as the next version and atomically publish it.
     * `partitionBy` columns become hive-style partition directories inside
@@ -223,58 +183,11 @@ class SnapshotStore(spark: SparkSession, root: String) {
       if (Files.exists(p)) Some(Files.readString(p).trim) else None
     }
 
-  /** Copy-on-write publish: the next version carries `changed`'s
-    * partitions REWRITTEN and every other `partitionCol=` dir of the
-    * current version REUSED at file level — write work is
-    * O(changed partitions), not O(snapshot). This is the scale form of
-    * a hot-key merge against a 100-TB dimension: a micro-batch touching
-    * 12 of 4,096 key-bucket partitions rewrites 12 dirs, while a
-    * whole-snapshot [[publish]] would rewrite all of them every batch
-    * (the r18-measured O(dim) per-batch term, bench/STREAM_r18.md).
-    *
-    * Contract: `changed` must contain the FULL post-merge contents of
-    * every partition it includes (its distinct `partitionCol` values)
-    * and nothing else; the current version must already be partitioned
-    * by exactly `partitionCol` (enforced — carrying partitions over
-    * from an unpartitioned or differently-partitioned version would
-    * silently drop data; bootstrap/migrate with a full [[publish]]).
-    * An empty store publishes `changed` whole. Unchanged partitions are
-    * carried by [[carryDirs]] (hard links, or with `manifest` a
-    * `_MANIFEST` reference); readers are untouched either way, and a
-    * crash mid-carry leaves an orphan dir the pointer never named — the
-    * standard torn-publish posture. */
-  def publishIncremental(changed: DataFrame, partitionCol: String,
-                         sidecars: Map[String, String] = Map.empty,
-                         manifest: Boolean = false): Long =
-    Lease.withLease(root, "publishIncremental") { currentVersion() match {
-      case None => publish(changed, Seq(partitionCol), sidecars)
-      case Some(cur) =>
-        requireLayout(cur, Seq(partitionCol), "publishIncremental")
-        publishVersionDir { dir =>
-          // cluster the write: one task per partition value → ONE file
-          // per changed dir, so carry-over cost is one link (or one
-          // manifest line) per UNCHANGED dir and later pruned reads
-          // open one file per bucket — without this, every writer task
-          // drops a sliver into every dir and the version dir explodes
-          // into tasks × partitions small files
-          CallSites.named(spark) {
-            changed.repartition(changed(partitionCol))
-              .write.mode("overwrite")
-              .partitionBy(partitionCol).parquet(dir)
-          }
-          val newDir = Paths.get(dir)
-          carryDirs(effectiveDirs(cur).filter { case (n, _) =>
-            !Files.exists(newDir.resolve(n))
-          }, newDir, manifest)
-          writeSidecars(dir, sidecars)
-        }
-    } }
-
   /** Refuse to carry buckets from version `v` into a version partitioned
     * by `parts` when `v` is laid out otherwise: carrying across layouts
     * would drop data. */
   private def requireLayout(v: Long, parts: Seq[String], verb: String): Unit = {
-    val have = effectivePartitionCols(v)
+    val have = partitionCols(v)
     require(have == parts,
       s"$verb: current version v$v is partitioned by " +
         s"[${have.mkString(", ")}], not [${parts.mkString(", ")}] — " +
@@ -282,50 +195,17 @@ class SnapshotStore(spark: SparkSession, root: String) {
         "bootstrap/migrate with a full publish first")
   }
 
-  /** Carry partition `dirs` (name → dir, in earlier versions) into the
-    * version being written at `dir`, where readers resolve them like
-    * local ones:
-    *
-    *  - by hard link (copy where links are unsupported): an unchanged
-    *    dir's files in v{N+1} ARE v{N}'s inodes, and [[vacuum]] deleting
-    *    an old version unlinks, never destroys, them. A parallel walk:
-    *    the dirs are independent, and at high bucket counts the serial
-    *    syscall walk is the dominant per-batch fixed cost (measured
-    *    ~3 s at 25K dirs single-threaded);
-    *  - with `manifest`, as `_MANIFEST` references to the versions that
-    *    hold them: one small sequential file write whatever the bucket
-    *    count (the shape object storage needs, where links don't exist).
-    *    The cost moves to the lifecycle: [[vacuum]] keeps referenced
-    *    versions, and [[publishMaterialized]] resets the chain.
-    *
-    * Resolution goes through [[effectiveDirs]], so either mode composes
-    * after the other. */
+  /** Carry partition `dirs` (name → dir, in the current version) into
+    * the version being written at `dir` by per-file hard links (copies
+    * where links are unsupported): an unchanged dir's files in v{N+1} ARE
+    * v{N}'s inodes, and [[vacuum]] deleting an old version unlinks, never
+    * destroys, them. A parallel walk: the dirs are independent, and at
+    * high bucket counts the serial syscall walk is the dominant per-batch
+    * fixed cost (measured ~3 s at 25K dirs single-threaded). */
   private def carryDirs(dirs: Map[String, java.nio.file.Path],
-                        dir: java.nio.file.Path, manifest: Boolean): Unit =
-    if (manifest) {
-      if (dirs.nonEmpty)
-        Files.writeString(dir.resolve(ManifestName), dirs.toSeq.sortBy(_._1)
-          .map { case (n, p) => s"$n\t${p.getParent.getFileName.toString.drop(1)}" }
-          .mkString("\n"))
-    } else {
-      import scala.jdk.CollectionConverters._
-      dirs.toSeq.asJava.parallelStream().forEach(e => linkTree(e._2, dir.resolve(e._1)))
-    }
-
-  /** Publish the current version again, fully local: every bucket dir it
-    * reads — its own and the ones its `_MANIFEST` names — hard-linked
-    * into the new version, with its sidecars and without a manifest. No
-    * data is rewritten; once the new version is the only one retained,
-    * [[vacuum]] may drop the versions the old manifest chain pinned. */
-  def publishMaterialized(): Long = Lease.withLease(root, "publishMaterialized") {
-    val cur = currentVersion().getOrElse(throw new IllegalStateException(
-      s"publishMaterialized: no published version under $root"))
-    val dirs = effectiveDirs(cur)
-    require(dirs.nonEmpty, s"publishMaterialized: v$cur has no partition dirs")
-    publishVersionDir { dir =>
-      carryDirs(dirs, Paths.get(dir), manifest = false)
-      writeSidecars(dir, versionSidecars(rootPath.resolve(s"v$cur")))
-    }
+                        dir: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    dirs.toSeq.asJava.parallelStream().forEach(e => linkTree(e._2, dir.resolve(e._1)))
   }
 
   /** File-name prefix of a bucket's history segment (closed rows only).
@@ -365,7 +245,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
       // bounds Spark's listing, not the file count
       def segment(files: Seq[java.nio.file.Path], glob: String) =
         if (files.isEmpty) None
-        else Some(readPaths(schema, files.map(_.getParent).distinct, Some(glob)))
+        else Some(readPaths(v, schema, files.map(_.getParent).distinct, Some(glob)))
       (segment(hist, s"$HistoryPrefix*"),
         segment(live, s"[!${HistoryPrefix.head}]*").getOrElse(schema.fold(
           readVersion(v).limit(0))(s => spark.createDataFrame(java.util.List.of[Row](), s))))
@@ -389,7 +269,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
     *    changed layout, or a widened schema: a carried file without the
     *    new column could hide it from readers).
     *
-    * With `carry`, untouched buckets are carried by [[carryDirs]]. The
+    * With `carry`, untouched buckets are hard-linked by [[carryDirs]]. The
     * write is ONE job, with no shuffle on a flat carry once the current
     * rows span n files; each row's segment is a partition column of the
     * write, whose dirs are dissolved into their bucket (history files
@@ -410,7 +290,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
       val fold = prior.flatMap { case (_, p) =>
         if (p.size < 2 * n) Nil else p.sortBy(Files.size(_)).take(p.size + 1 - n) }
       val hist = if (fold.isEmpty) closed
-                 else closed.unionByName(readPaths(Some(closed.schema), fold))
+                 else closed.unionByName(readPaths(cur.get, Some(closed.schema), fold))
       // one task a bucket dir, or n where buckets are few; flat, a
       // coalesce keeps the file sizes it reads (a seed written as one
       // file would stay one task's work every batch), so current rows
@@ -435,10 +315,9 @@ class SnapshotStore(spark: SparkSession, root: String) {
           Files.createDirectories(d.resolve(t))
           linkFile(p, d.resolve(t).resolve(p.getFileName.toString))
         } }
-        buckets.filter(_ => carry).foreach(b => carryDirs(dirs -- touched, d, b.manifest))
+        carryDirs(dirs -- touched, d)
         // an empty dimension still needs a file that carries its schema
-        if (children(d).forall(p => !isPartitionDir(p) && !p.getFileName.toString.endsWith(".parquet")) &&
-            !Files.exists(d.resolve(ManifestName)))
+        if (children(d).forall(p => !isPartitionDir(p) && !p.getFileName.toString.endsWith(".parquet")))
           CallSites.named(spark)(current.limit(0).write.mode("append").parquet(dir))
         writeSidecars(dir, sidecars)
       }
@@ -471,12 +350,11 @@ class SnapshotStore(spark: SparkSession, root: String) {
     * path must not pay a full partition discovery (O(partitions)
     * listing) just to ask how the snapshot is laid out. */
   def currentPartitionCols(): Seq[String] =
-    currentVersion().map(effectivePartitionCols).getOrElse(Seq.empty)
+    currentVersion().map(partitionCols).getOrElse(Seq.empty)
 
   /** Read ONLY the named partition dirs of the current version — a
     * point read touching 1 of 4,096 buckets lists 1 dir, not a full
-    * partition discovery over all 4,096. Manifest-carried dirs resolve
-    * from the versions that hold them; `basePath` keeps the partition
+    * partition discovery over all 4,096. `basePath` keeps the partition
     * column in the schema, which comes from one footer read (see
     * [[schemaOf]]). Values whose dir doesn't exist are skipped; if none
     * exist, an empty frame with the snapshot's schema is returned. */
@@ -484,17 +362,17 @@ class SnapshotStore(spark: SparkSession, root: String) {
                             values: Seq[Any]): DataFrame = {
     val v = currentVersion().getOrElse(throw new IllegalStateException(
       s"readCurrentPartitions: no published version under $root"))
-    val eff = effectiveDirs(v)
-    if (eff.isEmpty) throw new IllegalStateException(
+    val eff = bucketDirs(v)
+    if (eff.contains("")) throw new IllegalStateException(
       s"readCurrentPartitions: v$v has no $partitionCol= dirs")
     val wanted = values.flatMap(x => eff.get(s"$partitionCol=$x").map(s"$partitionCol=$x" -> _)).toMap
     val schema = schemaOf(wanted).orElse(schemaOf(eff))
-    if (wanted.nonEmpty) readPaths(schema, wanted.values.toSeq)
-    else readPaths(schema, Seq(eff.head._2)).limit(0)
+    if (wanted.nonEmpty) readPaths(v, schema, wanted.values.toSeq)
+    else readPaths(v, schema, Seq(eff.head._2)).limit(0)
   }
 
   /** Mirror `src` under `dst` with per-file hard links (copy where the
-    * filesystem refuses links) — [[carryDirs]]' link mode. */
+    * filesystem refuses links) — [[carryDirs]]' walk. */
   private def linkTree(src: java.nio.file.Path,
                        dst: java.nio.file.Path): Unit = {
     Files.createDirectories(dst)
@@ -612,30 +490,8 @@ class SnapshotStore(spark: SparkSession, root: String) {
   def vacuum(keepLast: Int): Seq[Long] = Lease.withLease(root, "vacuum") {
     recoverPurgeTemps()
     val all = versions()
-    val cur = currentVersion()
-    val retained = all.takeRight(math.max(keepLast, 1)).toSet ++ cur.toSet
-    // manifest closure, to a FIXPOINT: a retained version's carried
-    // dirs live in owner versions, which must survive this vacuum even
-    // when they fall outside the retention window — dropping them
-    // would tear every reader of the retained version. And a
-    // kept-as-owner version must itself stay READABLE, not merely
-    // hold its dirs: purgeKeys rewrites every on-disk version through
-    // readVersion, so a kept owner whose OWN manifest references a
-    // dropped version would wedge the compliance verb forever (the
-    // hot-key chain v1 local → v2 carries from v1 → v3 re-owns the
-    // bucket: one hop keeps v2 for v3 but drops v1, and v2 is then
-    // unreadable while permanently pinned). Entries name the version
-    // that physically holds each DIR, so per-dir resolution is one
-    // hop — readability of the kept owners is what chains. The space
-    // bound degrades gracefully under long manifest chains; a periodic
-    // full publish (materialize/OPTIMIZE) resets the chain and lets
-    // the owners age out at the next vacuum.
-    var keep = retained
-    var frontier = retained.flatMap(manifestOwners) -- keep
-    while (frontier.nonEmpty) {
-      keep = keep ++ frontier
-      frontier = frontier.flatMap(manifestOwners) -- keep
-    }
+    val keep = all.takeRight(math.max(keepLast, 1)).toSet ++ currentVersion().toSet
+    keep.foreach(v => refuseManifest(versionDir(v)))
     val drop = all.filterNot(keep)
     drop.foreach { v =>
       VersionPointer.deleteTree(rootPath.resolve(s"v$v._purge"))
@@ -721,26 +577,16 @@ class SnapshotStore(spark: SparkSession, root: String) {
               case Some(z) =>
                 publishZOrdered(purged(cur), z.a, z.b, z.tie, z.numFiles)
               case None =>
-                val parts = effectivePartitionCols(curV)
+                val parts = partitionCols(curV)
                 publish(clusterManyPartitions(purged(cur), parts, curV),
                   parts, versionSidecars(curDir))
             }
           }
-          // NEWEST-FIRST: a version's manifest references strictly
-          // OLDER owners, so rewriting in descending order guarantees
-          // every readVersion(v) below resolves its carried dirs from
-          // still-unrewritten owner dirs. Ascending order breaks on a
-          // bucket the purge EMPTIES: the older owner's rewrite drops
-          // the now-empty partition dir, a younger version's manifest
-          // still names it, and the younger version's materializing
-          // read crashes — on every re-run, so the compliance verb
-          // could never complete.
           val hist = versions().filterNot(fresh.contains)
-            .sorted(Ordering[Long].reverse)
           hist.foreach { v =>
             val dir = rootPath.resolve(s"v$v")
             val tmp = rootPath.resolve(s"v$v._purge")
-            val parts = effectivePartitionCols(v)
+            val parts = partitionCols(v)
             val body = clusterManyPartitions(
               applyLayout(purged(readVersion(v)), dir), parts, v)
             val w = body.write.mode("overwrite")
@@ -917,26 +763,13 @@ class SnapshotStore(spark: SparkSession, root: String) {
   private def queueFiles(): Seq[java.nio.file.Path] =
     if (!Files.exists(queueDir)) Seq.empty else dataFiles(queueDir)
 
-  /** A version's partition columns as [[purgeKeys]]' rewrites must see
-    * them: local hive dirs when the version holds any, else the carried
-    * dirs named by its manifest — a version whose buckets are ALL
-    * carried (an empty incremental publish) has no local `col=` child,
-    * and detecting layout from the local dir alone would rewrite it
-    * unpartitioned while still carrying the `_BUCKETS` sidecar: exactly
-    * the layout/meta disagreement the sidecar protocol refuses. Manifest
-    * versions are single-level by construction ([[publishIncremental]]
-    * takes one partition column), so the carried-dir name prefix is the
-    * whole answer there. */
-  private def effectivePartitionCols(v: Long): Seq[String] = {
-    val local = partitionColsOf(rootPath.resolve(s"v$v"))
-    if (local.nonEmpty) local
-    else manifestEntries(v).headOption.toSeq
-      .map(_._1.split("=", 2)(0))
-  }
-
-  /** The hive partition columns a version dir was written with, in
+  /** The hive partition columns version `v` was written with, in
     * nesting order — detected from the `col=value` directory levels, so
-    * a purge rewrite can reproduce the layout it replaces. */
+    * a purge rewrite can reproduce the layout it replaces. Every bucket
+    * of a version is in its dir (carried ones by link), so the dir alone
+    * answers. */
+  private def partitionCols(v: Long): Seq[String] = partitionColsOf(versionDir(v))
+
   private def partitionColsOf(dir: java.nio.file.Path): Seq[String] =
     children(dir).find(isPartitionDir).toSeq.flatMap(c =>
       c.getFileName.toString.split("=", 2)(0) +: partitionColsOf(c))
@@ -951,7 +784,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
   private def clusterManyPartitions(df: DataFrame, parts: Seq[String],
                                     v: Long): DataFrame =
     if (parts.nonEmpty &&
-        effectiveDirs(v).size >
+        bucketDirs(v).size >
           spark.sessionState.conf.numShufflePartitions)
       df.repartition(parts.map(df(_)): _*)
     else df
@@ -963,13 +796,8 @@ class SnapshotStore(spark: SparkSession, root: String) {
   private def versionSidecars(dir: java.nio.file.Path): Map[String, String] =
     children(dir).filter { p =>
       val n = p.getFileName.toString
-      // _MANIFEST is a protocol artifact, not a caller sidecar: a
-      // purge rewrite MATERIALIZES the version (readVersion resolved
-      // the manifest into the rewritten data), so carrying the
-      // stale manifest would double-serve carried dirs
       Files.isRegularFile(p) && n.startsWith("_") &&
-        n != "_SUCCESS" && n != "_PURGED" && n != "_LAYOUT" &&
-        n != ManifestName && !n.endsWith(".crc")
+        n != "_SUCCESS" && n != "_PURGED" && n != "_LAYOUT" && !n.endsWith(".crc")
     }.map(p => p.getFileName.toString -> Files.readString(p)).toMap
 
   /** Adopt-or-discard any `v{N}._purge` temp a crashed [[purgeKeys]]
@@ -1018,8 +846,8 @@ object SnapshotStore {
   /** The bucket layout of a [[SnapshotStore!.publishSegments publishSegments]]
     * call: rows carry their bucket (one of `count`) in partition column
     * `col`, and `touched` names the buckets the publish rewrites; with
-    * carry, every other bucket is carried (`manifest` chooses how). */
-  final case class Buckets(col: String, count: Int, touched: Seq[Int], manifest: Boolean)
+    * carry, every other bucket is hard-linked forward. */
+  final case class Buckets(col: String, count: Int, touched: Seq[Int])
 
   /** Publish a dimension snapshot as a BUCKETED managed table — the
     * layout the merge read path wants at scale: with the snapshot

@@ -34,6 +34,9 @@ object CdcStream {
     * after each publish, so a long-running stream holds at most one
     * routed-batch cache entry at a time and caller-held caches are
     * untouched. A small batch caches nothing.
+    *
+    * `manifestCarry` is a no-op kept for callers that still pass it:
+    * untouched buckets are always carried by hard link.
     */
   def start(spark: SparkSession, inDir: String, checkpointDir: String,
             store: SnapshotStore, schema: StructType,
@@ -42,8 +45,7 @@ object CdcStream {
             availableNow: Boolean = true,
             maxFilesPerTrigger: Int = 1,
             dimBuckets: Int = 0,
-            manifestCarry: Boolean = false,
-            materializeEvery: Int = 0): StreamingQuery = {
+            manifestCarry: Boolean = false): StreamingQuery = {
     // maxFilesPerTrigger is the throughput/latency dial: 1 keeps the
     // one-file-≙-one-batch replay granularity the tests pin; raising it
     // coalesces arriving files into fewer micro-batches, amortizing the
@@ -59,55 +61,29 @@ object CdcStream {
 
     val writer = changes.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         // jobs are named by the engine line that runs them, not by `start`
         graft.engine.CallSites.cleared(spark) {
-          applyChangeBatch(store, batch, key, ts, tie, opCol, dimBuckets,
-            manifestCarry)
-          // manifest chains grow one referenced-owner hop per batch and
-          // vacuum must keep every referenced owner — without a
-          // scheduled materialization the store could never reclaim.
-          // Every N batches, rewrite the snapshot fully local (the
-          // OPTIMIZE tick — same amortization posture as the index
-          // compaction ticks: periodic, between batches, never
-          // concurrent with a merge), so the chain length is bounded by
-          // N and the pre-materialize owners age out at the next vacuum.
-          if (manifestCarry && materializeEvery > 0 && id > 0 &&
-              id % materializeEvery == 0)
-            materializeSnapshot(store, dimBuckets)
+          applyChangeBatch(store, batch, key, ts, tie, opCol, dimBuckets)
         }
       }
 
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** Publish a fully-LOCAL copy of the current bucketed snapshot — the
-    * OPTIMIZE verb that resets a manifest chain so
-    * [[SnapshotStore.vacuum]]'s owner closure stops pinning old
-    * versions. Every bucket dir is hard-linked, none rewritten
-    * ([[SnapshotStore.publishMaterialized]]); scheduled (see
-    * `materializeEvery`), a no-op on an empty or unbucketed store —
-    * and REFUSED when `dimBuckets` disagrees with the current
-    * version's `_BUCKETS` sidecar (re-stamping a count the dirs do
-    * not have would disarm the stream's layout guard). */
+  /** Check that the current bucketed snapshot is laid out for
+    * `dimBuckets`: REFUSED when the count disagrees with the current
+    * version's `_BUCKETS` sidecar (a caller that believes in another
+    * modulo would merge keys into the wrong buckets), a no-op on an empty
+    * or unbucketed store. Every version already holds all of its buckets
+    * (carried ones by hard link), so there is nothing to publish. */
   def materializeSnapshot(store: SnapshotStore, dimBuckets: Int): Unit =
     if (store.currentPartitionCols() == Seq(BucketCol)) {
-      // the stamped count must describe the EXISTING BucketCol
-      // values (this verb re-links, it never re-hashes), so it is
-      // validated against the current version's own sidecar: a
-      // caller-passed mismatch — or an unstamped snapshot whose
-      // modulo nobody recorded — is refused loudly, because stamping
-      // N over modulo-M dirs would let a restarted stream pass the
-      // layout guard and merge keys into the wrong buckets (split
-      // version chains, duplicate current rows, silently)
       val stamped = store.currentVersionSidecar(DimBucketsMeta)
       require(stamped.contains(dimBuckets.toString),
         s"materializeSnapshot: bucket count $dimBuckets does not " +
           s"match the current version's $DimBucketsMeta sidecar " +
-          s"(${stamped.getOrElse("absent")}) — refusing to stamp a " +
-          "layout the dirs do not have")
-      store.publishMaterialized()
-      ()
+          s"(${stamped.getOrElse("absent")})")
     }
 
   /** The dim snapshot's key-bucket partition column —
@@ -144,9 +120,9 @@ object CdcStream {
     * [[Scd2.mergeSegments]] and one [[SnapshotStore.publishSegments]]:
     * each touched bucket rewrites its current rows and appends the
     * versions it closes as one new history file, and every untouched
-    * bucket is carried by hard link, or with `manifestCarry` by a
-    * `_MANIFEST` reference. Per-batch write work therefore tracks the
-    * touched buckets' current rows, not the dim.
+    * bucket is carried by hard link (`manifestCarry` is a no-op, as in
+    * [[start]]). Per-batch write work therefore tracks the touched
+    * buckets' current rows, not the dim.
     *
     * Bootstrap (an empty store), migration (a snapshot laid out for
     * another `dimBuckets`, in either direction) and a batch that WIDENS
@@ -206,7 +182,7 @@ object CdcStream {
     try store.publishSegments(withBucket(merged.closed), withBucket(merged.current),
       carry = segments.nonEmpty,
       if (!buckets) None else Some(SnapshotStore.Buckets(BucketCol, dimBuckets,
-        if (segments.isEmpty) Nil else touched, manifestCarry)),
+        if (segments.isEmpty) Nil else touched)),
       if (buckets) Map(DimBucketsMeta -> dimBuckets.toString) else Map.empty)
     finally merged.cleanup()
   }

@@ -114,11 +114,36 @@ class CdcBatchSpec extends AnyFunSuite {
     apply(store, web(750, 850), 16, manifest = false)
     assert(store.currentPartitionCols() === Seq(CdcStream.BucketCol))
     check("a bucketed version")
-    apply(store, web(850, 900).limit(1), 16, manifest = true)
-    assert(Files.exists(root.resolve(s"v${store.currentVersion().get}").resolve("_MANIFEST")))
-    check("a manifest version")
+    val before = bucketInodes(root.resolve(s"v${store.currentVersion().get}"))
+    // one new key (every older key was deleted in 2030): its bucket
+    // writes a current row, the other 15 carry
+    apply(store, web(850, 900).filter(col(op) === "INSERT").limit(1)
+      .withColumn(key, lit(1000000L)), 16, manifest = true)
+    val after = bucketInodes(root.resolve(s"v${store.currentVersion().get}"))
+    assert(before.size === 16 && after.size === 16)
+    assert(after.count { case (b, files) => before.get(b).contains(files) } === 15,
+      "a one-key batch must carry 15 of 16 buckets by link")
+    check("a version with 15 of 16 buckets carried")
     store.purgeKeys(store.read().get.select(key).limit(5), key)
     check("a bucketed purge rewrite")
+  }
+
+  test("a version an older build carried by _MANIFEST is refused by read and vacuum") {
+    val root = Files.createTempDirectory("cdc_legacy")
+    val store = new SnapshotStore(spark, root.toString)
+    apply(store, batchFile(0, 400), 4, manifest = false)
+    apply(store, batchFile(400, 700), 4, manifest = false)
+    val cur = root.resolve(s"v${store.currentVersion().get}")
+    val mf = cur.resolve("_MANIFEST")
+    // the older build's format: `bucket<TAB>owner version`, one line a
+    // carried bucket
+    Files.writeString(mf, s"${CdcStream.BucketCol}=0\t0\n${CdcStream.BucketCol}=1\t0")
+    Seq[(String, () => Any)]("read" -> (() => store.read()),
+        "vacuum" -> (() => store.vacuum(keepLast = 1))).foreach { case (verb, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(mf.toString), s"$verb: ${e.getMessage}")
+    }
+    assert(store.versions() === Seq(0L, 1L), "the refused vacuum must delete nothing")
   }
 
   test("a streamed batch's jobs are named by the engine, not the stream") {

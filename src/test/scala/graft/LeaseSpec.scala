@@ -38,13 +38,12 @@ class LeaseSpec extends AnyFunSuite {
   test("verbs NEST on the owning thread (publishIncremental → publish)") {
     val root = tmp("leasenest")
     val store = new SnapshotStore(spark, root)
-    // first incremental on an empty store delegates to publish — two
+    store.publish(Seq((1L, "a", "x"), (2L, "c", "y")).toDF("k", "b", "v"))
+    store.queuePurgeKeys(Seq(1L).toDF("k"), "k")
+    // a sweep purges, which republishes the current version — three
     // leased verbs on one root, same thread: must not self-deadlock
-    store.publishIncremental(
-      Seq((1L, "a", "x")).toDF("k", "b", "v"), "b")
-    store.publishIncremental(
-      Seq((2L, "c", "y")).toDF("k", "b", "v"), "b")
-    assert(store.read().get.count() === 2)
+    assert(store.purgeSweep("k") === Seq(1L, 0L))
+    assert(store.read().get.as[(Long, String, String)].collect().toSeq === Seq((2L, "c", "y")))
     assert(!Files.exists(Paths.get(root, "_LEASE")))
   }
 

@@ -157,20 +157,21 @@ class Scd2PropertySpec extends AnyFunSuite {
 
   /** With `broadcast` the store path routes each batch with its keys
     * collected; without, by sort-merge joins. The fold plans joins. Each
-    * history also draws a layout — whole-dim or 4 buckets, with or
-    * without manifest carry — and a materialize tick runs between
-    * batches. */
+    * history also draws a layout — whole-dim or 4 buckets — and a vacuum
+    * keeping only the current version runs after every batch, so the final
+    * equality shows that carry never depends on a dropped version. */
   private def storeFoldProperty(broadcast: Boolean): Unit = {
     import graft.engine.SnapshotStore
     import graft.streaming.CdcStream
     import java.nio.file.Files
     def ino(p: java.nio.file.Path) = Files.getAttribute(p, "unix:ino")
     val (key, ts, tie, op) = ("user_id", "ts", "event_id", Some("operation_type"))
-    val layouts = Gen.zip(Gen.oneOf(0, 4), Gen.oneOf(false, true))
-    forAllSeeded(Gen.zip(splitHistoryGen, layouts), if (broadcast) 100 else 40) {
-      case (batches, (buckets, manifest)) => withClue(s"buckets=$buckets manifest=$manifest") {
-      val store = new SnapshotStore(spark,
-        Files.createTempDirectory("prop_store").toString)
+    forAllSeeded(Gen.zip(splitHistoryGen, Gen.oneOf(0, 4)), if (broadcast) 100 else 40) {
+      case (batches, buckets) => withClue(s"buckets=$buckets") {
+      val root = Files.createTempDirectory("prop_store")
+      val store = new SnapshotStore(spark, root.toString)
+      def currentBuckets() =
+        store.currentVersion().fold(Map.empty[String, Map[String, AnyRef]])(v => bucketInodes(root.resolve(s"v$v")))
       // the most history files a bucket may keep
       val bound = 2 * math.max(1, spark.sparkContext.defaultParallelism / math.max(1, buckets))
       val empty = Scd2.rebuild(toDf(Nil).drop("operation_type"), key, ts, tie)
@@ -179,9 +180,10 @@ class Scd2PropertySpec extends AnyFunSuite {
         else {
           val prior = store.currentVersion().map(v => store.historyFiles(v)
             .map(p => p.getFileName.toString -> ino(p))).getOrElse(Nil)
+          val priorBuckets = currentBuckets()
           // the routing the store path takes
           assert(Scd2.batchKeys(b, key).values.isDefined === broadcast)
-          CdcStream.applyChangeBatch(store, b, key, ts, tie, op, buckets, manifest)
+          CdcStream.applyChangeBatch(store, b, key, ts, tie, op, buckets)
           val hist = store.historyFiles(store.currentVersion().get)
           hist.foreach(f => assert(closedOnly(f), s"history file $f holds a current row"))
           hist.groupBy(_.getParent).foreach { case (d, fs) =>
@@ -192,8 +194,15 @@ class Scd2PropertySpec extends AnyFunSuite {
             val now = hist.map(p => p.getFileName.toString -> ino(p)).toMap
             prior.foreach { case (n, i) => assert(now.get(n).contains(i),
               s"history file $n was rewritten instead of carried") }
+          } else {
+            // every bucket the batch's keys miss keeps its files' inodes
+            val touched = CdcStream.bucketed(b, key, buckets).select(CdcStream.BucketCol)
+              .distinct().collect().map(r => s"${CdcStream.BucketCol}=${r.getInt(0)}").toSet
+            val now = currentBuckets()
+            (priorBuckets -- touched).foreach { case (d, files) =>
+              assert(now.get(d).contains(files), s"untouched bucket $d was not carried by link") }
           }
-          CdcStream.materializeSnapshot(store, buckets)
+          store.vacuum(keepLast = 1)
           Scd2.merge(dim, b, key, ts, tie, op).localCheckpoint()
         }
       }

@@ -1300,14 +1300,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.select(fc: _*).orderBy("order_key", "version_no").collect().toSeq ===
       folded.select(fc: _*).orderBy("order_key", "version_no").collect().toSeq,
       "whole-dim → bucketed → whole-dim must agree with the in-memory fold")
-    // and publishIncremental itself refuses a layout it cannot carry from
+    // and a bucketed carry refuses a flat version it cannot carry from
     assertThrows[IllegalArgumentException] {
       val s3 = new SnapshotStore(spark,
         Files.createTempDirectory("kb_refuse").toString)
       s3.publish(b1((1L, 1L, "2024-01-01 00:00:00")))
-      s3.publishIncremental(
-        b1((2L, 2L, "2024-02-01 00:00:00"))
-          .withColumn(CdcStream.BucketCol, lit(0)), CdcStream.BucketCol)
+      val d = b1((2L, 2L, "2024-02-01 00:00:00")).withColumn(CdcStream.BucketCol, lit(0))
+      s3.publishSegments(d.limit(0), d, carry = true,
+        Some(SnapshotStore.Buckets(CdcStream.BucketCol, 4, Seq(0))))
     }
   }
 
@@ -1328,97 +1328,48 @@ class StreamingSpec extends AnyFunSuite {
       (k, k, "2024-01-01 00:00:00", s"s$k")): _*)) // bootstrap → v0, local
     apply(batch((100L, 7L, "2024-02-01 00:00:00", "hot7"))) // → v1
     apply(batch((101L, 9L, "2024-03-01 00:00:00", "hot9"))) // → v2
-    val v2Dir = java.nio.file.Paths.get(snap, "v2")
-    def kbDirs(d: java.nio.file.Path): Seq[String] = {
-      val s = Files.list(d)
-      try {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        s.iterator().forEachRemaining { p =>
-          if (p.getFileName.toString.startsWith(s"${CdcStream.BucketCol}="))
-            buf += p.getFileName.toString
-        }
-        buf.toSeq
-      } finally s.close()
-    }
-    // v2 holds ONLY key 9's bucket locally — everything else is a
-    // manifest REFERENCE (no links, no copies: O(changed) file ops)
-    assert(kbDirs(v2Dir).size === 1,
-      s"v2 must hold only the touched bucket: ${kbDirs(v2Dir)}")
-    val mf = Files.readString(v2Dir.resolve("_MANIFEST"))
-    assert(mf.linesIterator.size >= B - 2,
-      "every untouched bucket must be carried by reference")
-    assert(mf.linesIterator.forall(l => l.split("\t")(1).toLong < 2L),
-      "manifest entries must name the PHYSICAL holder (v0 or v1)")
-    // reads resolve through the chain: full, pruned, and versioned
+    // every bucket the hot keys miss holds v0's files, by inode
+    def files(v: Long) = bucketInodes(java.nio.file.Paths.get(snap, s"v$v"))
+    def kb(k: Long): Int = spark.range(1)
+      .select(pmod(xxhash64(lit(k)), lit(B.toLong)).cast("int")).head().getInt(0)
+    val (v0, v2) = (files(0L), files(2L))
+    val untouched = v0 -- Seq(kb(7L), kb(9L)).map(b => s"${CdcStream.BucketCol}=$b")
+    assert(untouched.nonEmpty && untouched.forall { case (b, fs) => v2.get(b).contains(fs) },
+      "every untouched bucket's files must keep their inode from v0")
+    // and key 7's bucket, touched by v1 only, holds v1's files
+    val b7 = s"${CdcStream.BucketCol}=${kb(7L)}"
+    if (kb(7L) != kb(9L))
+      assert(files(1L).get(b7).exists(fs => fs.nonEmpty && v2.get(b7).contains(fs)),
+        "a bucket carried from v1 must keep v1's inodes")
     assert(store.read().get.count() === 66L)
     assert(Scd2.current(store.read().get).count() === 64L)
     assert(Scd2.duplicateCurrentKeys(store.read().get, "order_key")
       .count() === 0L)
     assert(store.read().get.filter($"order_key" === 7L).count() === 2L)
-    val kb13 = spark.range(1)
-      .select(pmod(xxhash64(lit(13L)), lit(B.toLong)).cast("int"))
-      .head().getInt(0)
-    assert(store.readCurrentPartitions(CdcStream.BucketCol, Seq(kb13))
-      .filter($"order_key" === 13L).count() === 1L,
-      "a carried bucket must resolve through the manifest")
     assert(store.readVersion(1L).count() === 65L)
-    // vacuum closure: v2's manifest references v0 (and possibly v1), and
-    // v1's references v0 — nothing outside the retained window may drop
-    // while a retained manifest points at it
-    assert(store.vacuum(keepLast = 1).isEmpty,
-      "owners referenced by the retained manifest must survive vacuum")
+    // each version holds every bucket, so retention keeps only the window
+    assert(store.vacuum(keepLast = 1).toSet === Set(0L, 1L))
     assert(store.read().get.count() === 66L)
-    // purge materializes the whole chain: key 13 gone from EVERY
-    // version, no _MANIFEST left behind (a stale manifest after a
-    // materializing rewrite would double-serve carried dirs)
+    assert(store.readCurrentPartitions(CdcStream.BucketCol, Seq(kb(13L)))
+      .filter($"order_key" === 13L).count() === 1L,
+      "a carried bucket must serve its rows")
     store.purgeKeys(Seq(13L).toDF("order_key"), "order_key")
     store.versions().foreach { v =>
       assert(store.readVersion(v).filter($"order_key" === 13L)
         .count() === 0L, s"key 13 must be gone from v$v")
       assert(!Files.exists(
         java.nio.file.Paths.get(snap, s"v$v", "_MANIFEST")),
-        s"v$v must be materialized (manifest dropped) after the purge")
+        s"v$v must hold no _MANIFEST")
     }
     assert(store.read().get.count() === 65L)
-    // with the chain materialized, retention proceeds normally again
-    val dropped = store.vacuum(keepLast = 1)
-    assert(dropped.nonEmpty, "materialized versions age out normally")
-    assert(store.read().get.count() === 65L)
-
-    // the scheduled OPTIMIZE tick is the chain's other exit: a fresh
-    // manifest chain, one materializeSnapshot, and the pre-materialize
-    // owners age out at the next vacuum
-    val snap2 = Files.createTempDirectory("mf_mat").toString
-    val store2 = new SnapshotStore(spark, snap2)
-    def apply2(b: org.apache.spark.sql.DataFrame): Unit =
-      CdcStream.applyChangeBatch(store2, b, "order_key", "cdc_timestamp",
-        "change_id", Some("operation_type"), dimBuckets = B,
-        manifestCarry = true)
-    apply2(batch((1L to 32L).map(k =>
-      (k, k, "2024-01-01 00:00:00", s"s$k")): _*))
-    apply2(batch((200L, 3L, "2024-02-01 00:00:00", "hot3")))
-    assert(store2.vacuum(keepLast = 1).isEmpty, "chain pins owners")
-    CdcStream.materializeSnapshot(store2, B)
-    assert(!Files.exists(java.nio.file.Paths.get(snap2,
-      s"v${store2.currentVersion().get}", "_MANIFEST")),
-      "the OPTIMIZE tick publishes a fully-local version")
-    assert(store2.read().get.count() === 33L)
-    assert(store2.vacuum(keepLast = 1).toSet === Set(0L, 1L),
-      "the pre-materialize chain must age out after the OPTIMIZE tick")
-    assert(store2.read().get.count() === 33L)
-    assert(store2.read().get.filter($"order_key" === 3L).count() === 2L)
   }
 
   test("manifest carry: vacuum's owner closure is transitive, so a " +
     "kept-as-owner version stays readable and purge never wedges") {
-    // the hot-key chain: v0 full; v1 re-owns key 7's bucket (manifest
-    // → v0); v2 re-owns key 9's bucket (manifest: kb(7) → v1, rest →
-    // v0); v3 re-owns key 7's bucket AGAIN (manifest: kb(9) → v2, rest
-    // → v0 — kb(7) is local, so v1 is referenced by NO retained
-    // manifest directly). A one-hop closure keeps v2 for v3 but drops
-    // v1 — and v2's own manifest still names v1 for kb(7), so
-    // readVersion(2) (and with it every purgeKeys, which rewrites all
-    // on-disk versions) would crash forever while v2 stays pinned.
+    // the hot-key chain: v0 full; v1 re-owns key 7's bucket; v2 re-owns
+    // key 9's bucket; v3 re-owns key 7's bucket AGAIN. Every version
+    // holds all of its buckets (carried ones by link), so no version
+    // depends on another and vacuum keeps only the current one.
     val snap = Files.createTempDirectory("mf_fixpoint").toString
     val store = new SnapshotStore(spark, snap)
     val B = 16
@@ -1435,12 +1386,11 @@ class StreamingSpec extends AnyFunSuite {
     apply(batch((100L, 7L, "2024-02-01 00:00:00", "hot7a"))) // v1
     apply(batch((101L, 9L, "2024-03-01 00:00:00", "hot9"))) // v2
     apply(batch((102L, 7L, "2024-04-01 00:00:00", "hot7b"))) // v3
-    assert(store.vacuum(keepLast = 1).isEmpty,
-      "the transitive owner closure must pin the whole readable chain")
-    store.versions().foreach { v =>
-      assert(store.readVersion(v).count() >= 64L,
-        s"v$v must stay readable after the vacuum")
-    }
+    assert(store.vacuum(keepLast = 1).toSet === Set(0L, 1L, 2L),
+      "no version may pin another")
+    assert(store.versions() === Seq(3L))
+    assert(store.read().get.filter($"order_key" === 7L).count() === 3L,
+      "the current version must hold key 7's whole version chain")
     // the compliance verb completes over the kept chain
     store.purgeKeys(Seq(13L).toDF("order_key"), "order_key")
     store.versions().foreach { v =>
@@ -1512,12 +1462,12 @@ class StreamingSpec extends AnyFunSuite {
     CdcStream.applyChangeBatch(store,
       batch((1L to 16L).map(k => (k, k, "2024-01-01 00:00:00")): _*),
       "order_key", "cdc_timestamp", "change_id", None, dimBuckets = B,
-      manifestCarry = true) // v0, fully local
-    // a no-op version: zero changed rows, every bucket a manifest
-    // reference — the version dir holds no local col= child at all
-    store.publishIncremental(store.read().get.limit(0),
-      CdcStream.BucketCol,
-      Map(CdcStream.DimBucketsMeta -> B.toString), manifest = true) // v1
+      manifestCarry = true) // v0
+    // a no-op version: no touched bucket, every bucket carried
+    val none = store.read().get.limit(0)
+    store.publishSegments(none, none, carry = true,
+      Some(SnapshotStore.Buckets(CdcStream.BucketCol, B, Nil)),
+      Map(CdcStream.DimBucketsMeta -> B.toString)) // v1
     def kbDirs(v: Long): Long = {
       import scala.jdk.CollectionConverters._
       val s = Files.list(java.nio.file.Paths.get(snap, s"v$v"))
@@ -1525,11 +1475,12 @@ class StreamingSpec extends AnyFunSuite {
         p.getFileName.toString.startsWith(s"${CdcStream.BucketCol}="))
       finally s.close()
     }
-    assert(kbDirs(1L) === 0L, "v1 must carry everything by reference")
-    // the purge materializes v1 — and must re-establish its hive bucket
-    // dirs (layout detection through the MANIFEST, not the empty local
-    // dir), or the rewritten version would advertise _BUCKETS over an
-    // unpartitioned body
+    def buckets(v: Long) = bucketInodes(java.nio.file.Paths.get(snap, s"v$v"))
+    assert(buckets(0L).nonEmpty && buckets(1L) === buckets(0L),
+      "v1 must hold v0's bucket dirs by link")
+    // the purge rewrites v1 — and must keep its hive bucket dirs, or the
+    // rewritten version would advertise _BUCKETS over an unpartitioned
+    // body
     store.purgeKeys(Seq(3L).toDF("order_key"), "order_key")
     store.versions().foreach { v =>
       assert(kbDirs(v) > 0L,
@@ -1560,8 +1511,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("_BUCKETS"))
     val before = store.currentVersion().get
-    CdcStream.materializeSnapshot(store, 8) // the matching call publishes
-    assert(store.currentVersion().get === before + 1)
+    CdcStream.materializeSnapshot(store, 8) // the matching call publishes nothing
+    assert(store.currentVersion().get === before)
+    assert(store.versions() === Seq(before))
     assert(store.read().get.count() === 2L)
   }
 
