@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.streaming.CdcStream
@@ -15,15 +14,8 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val work = if (args.nonEmpty) args(0)
     else Files.createTempDirectory("graft_pipeline").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(4)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val K = "order_key"; val TS = "cdc_timestamp"; val TIE = "change_id"
 

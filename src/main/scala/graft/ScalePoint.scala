@@ -1,17 +1,31 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Measured scale slope for the three most expensive queries.
+import graft.Harness.time
+
+/** Measured scale slopes. Usage:
+  *
+  *  - `graft.ScalePoint queries [baseDir] [outDir]` — the heavy
+  *    declared queries at the base corpus and at 10×;
+  *  - `graft.ScalePoint deletion [baseDir] [outDir]` — the deletion
+  *    lifecycle at both scales;
+  *  - `graft.ScalePoint bpek [sfDir] [k1,k2,...] [replicas]` — the BPE
+  *    tokenizer's other axis, the learned-rule count k.
+  *
+  * `baseDir`/`sfDir` default to the sf0.1 test data dir, `outDir` (where
+  * the 10× corpus is built once and kept) to /tmp/graft_scale10x.
   *
   * The plan audits claim the heavy hitters are linear-at-scale (stored
   * postings broadcast-probed, df-capped candidate joins, one-scan batch
-  * probes). This harness turns that prose into a measured point: it
-  * deterministically scales the sf0.1 documents corpus 10× and times
-  * `dedup_incremental`, `text_bm25_batch_topk`, and `text_containment`
-  * at both scales, in the same session, with the same procedure.
+  * probes). This harness turns that prose into measured points: it
+  * deterministically scales the base corpus 10× and times each query at
+  * both scales, in the same session, with the same procedure.
   *
   * Corpus construction (deterministic, generator-style): replica i of
   * each document applies a replica-keyed substitution cipher over
@@ -38,6 +52,9 @@ import org.apache.spark.sql.functions._
   * slope of interest is scaled/base per run kind; ≲ 10× means linear.
   */
 object ScalePoint {
+
+  def main(args: Array[String]): Unit = Harness.sections("graft.ScalePoint", args)(
+    "queries" -> queries, "deletion" -> deletion, "bpek" -> bpek)
 
   private val Replicas = 10
   // r14 adds the two heaviest new text ops: the bigram-LM score (the
@@ -70,6 +87,35 @@ object ScalePoint {
       "multimodal_decode", "multimodal_phash_incremental",
       "multimodal_audio_features")
 
+  /** The replica id shift. */
+  private val Shift = 10000000L
+
+  /** `df` crossed with `_rep` = 0 until `n`, replica 0 being `df` itself. */
+  private def replicated(df: DataFrame, n: Int): DataFrame =
+    df.crossJoin(df.sparkSession.range(n).select(col("id").cast("int").as("_rep")))
+
+  /** `id` moved by `_rep` × `stride`. */
+  private def shifted(id: String, stride: Long): Column =
+    (col(id) + col("_rep").cast("long") * lit(stride)).as(id)
+
+  /** `text` under replica `_rep`'s substitution cipher over `[a-z0-9]`
+    * (a deterministic per-replica permutation of the alphabet), for
+    * replicas 0 until `n`; replica 0 keeps the plain text. */
+  private def cipheredText(n: Int): Column = {
+    val alphabet = ('a' to 'z').mkString + ('0' to '9').mkString
+    def cipher(rep: Int): String = {
+      val arr = alphabet.toCharArray
+      val rnd = new scala.util.Random(0x5ca1e + rep)
+      for (j <- arr.length - 1 to 1 by -1) {
+        val k = rnd.nextInt(j + 1)
+        val t = arr(j); arr(j) = arr(k); arr(k) = t
+      }
+      new String(arr)
+    }
+    (1 until n).foldLeft(when(col("_rep") === 0, col("text"))) { (acc, i) =>
+      acc.when(col("_rep") === i, translate(col("text"), alphabet, cipher(i)))
+    }.as("text")
+  }
 
   /** A scaled table counts as built only when Spark's `_SUCCESS` commit
     * marker is present: the harness outDir persists across runs, and a
@@ -97,15 +143,14 @@ object ScalePoint {
       // no hint of why — an empty base has no ids to alias, so it
       // passes trivially (the replica build just yields empty dirs)
       val mx = if (row.isNullAt(i)) -1L else row.getLong(i)
-      require(mx < 10000000L,
+      require(mx < Shift,
         s"buildScaled: $table.$c max id $mx >= 10^7 — the i*10^7 replica " +
           "shift would alias ids across replicas and corrupt every " +
           "id-keyed scale slope; raise the shift for this corpus")
     }
   }
 
-  private[graft] def buildScaled(spark: SparkSession, baseDir: String,
-                                 outDir: String): Unit = {
+  private def buildScaled(spark: SparkSession, baseDir: String, outDir: String): Unit = {
     buildScaledEmbeddings(spark, baseDir, outDir)
     buildScaledEvents(spark, baseDir, outDir)
     val docsTgt = Paths.get(s"$outDir/documents.parquet")
@@ -114,28 +159,10 @@ object ScalePoint {
     Files.createDirectories(Paths.get(outDir))
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
     requireIdsBelowShift(base, "documents", "doc_id")
-    val alphabet = ('a' to 'z').mkString + ('0' to '9').mkString
-    // deterministic per-replica permutation of the 36-char alphabet
-    def cipher(rep: Int): String = {
-      val arr = alphabet.toCharArray
-      val rnd = new scala.util.Random(0x5ca1e + rep)
-      for (j <- arr.length - 1 to 1 by -1) {
-        val k = rnd.nextInt(j + 1)
-        val t = arr(j); arr(j) = arr(k); arr(k) = t
-      }
-      new String(arr)
-    }
-    val textByRep = (1 until Replicas).foldLeft(
-      when(col("_rep") === 0, col("text"))) { (acc, i) =>
-      acc.when(col("_rep") === i, translate(col("text"), alphabet, cipher(i)))
-    }
-    val scaled = base
-      .crossJoin(spark.range(Replicas).select(col("id").cast("int").as("_rep")))
-      .select(
-        (col("doc_id") + col("_rep").cast("long") * lit(10000000L)).as("doc_id"),
-        textByRep.as("text"),
+    replicated(base, Replicas)
+      .select(shifted("doc_id", Shift), cipheredText(Replicas),
         col("lang"), col("source"), col("n_chars"))
-    scaled.repartition(32).write.mode("overwrite")
+      .repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")
     // the three queries only read documents, but Tables helpers expect a
     // complete dir — link the rest of the base tables in place
@@ -181,12 +208,8 @@ object ScalePoint {
       acc.when(col("_rep") === i, array((0 until dim).map(k =>
         element_at(col("embedding"), p(k) + 1) * lit(s(k))): _*))
     }
-    base
-      .crossJoin(spark.range(Replicas).select(col("id").cast("int").as("_rep")))
-      .select(
-        (col("vec_id") + col("_rep").cast("long") * lit(10000000L)).as("vec_id"),
-        embByRep.as("embedding"),
-        col("label"))
+    replicated(base, Replicas)
+      .select(shifted("vec_id", Shift), embByRep.as("embedding"), col("label"))
       .repartition(32).write.mode("overwrite")
       .parquet(tgt.toString)
   }
@@ -213,63 +236,277 @@ object ScalePoint {
     else engine.VersionPointer.deleteTree(tgt) // incomplete: rebuild
     val baseEv = graft.engine.Tables.events(spark, baseDir)
     requireIdsBelowShift(baseEv, "events", "event_id", "user_id")
-    baseEv
-      .crossJoin(spark.range(Replicas).select(col("id").cast("long").as("_rep")))
-      .select(
-        (col("event_id") + col("_rep") * lit(10000000L)).as("event_id"),
-        col("ts"),
-        (col("user_id") + col("_rep") * lit(10000000L)).as("user_id"),
+    replicated(baseEv, Replicas)
+      .select(shifted("event_id", Shift), col("ts"), shifted("user_id", Shift),
         col("event_type"), col("value"), col("props"))
       .repartition(32).write.mode("overwrite").parquet(tgt.toString)
   }
 
-  /** One measured invocation — shared with [[ScaleDeletion]] so the two
-    * scale harnesses cannot diverge on the measurement primitive. */
-  private[graft] def time[T](body: => T): (Double, T) = {
-    val t0 = System.nanoTime()
-    val r = body
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
+  /** A measured row: `warm` is None for a single-run measurement. */
+  private final case class Point(label: String, name: String, cold: Double,
+                                 warm: Option[Double], rows: Long)
 
-  /** The harness session + scaled-corpus bootstrap (build replicas,
-    * JVM/codegen warmup) — shared with [[ScaleDeletion]]. */
-  private[graft] def bootstrap(baseDir: String,
-                               outDir: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The session plus the scaled corpus (built into `outDir` unless
+    * already there) and a JVM/codegen warmup, run as `body` over the
+    * base and the scaled dir; then each measured row's scaled/base
+    * slope. */
+  private def atBothScales(args: Array[String])(
+      body: (SparkSession, String, String) => Seq[Point]): Unit = {
+    val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val outDir = args.lift(1).getOrElse("/tmp/graft_scale10x")
+    val spark = Harness.session(32)
     buildScaled(spark, baseDir, outDir)
     // JVM/codegen warmup outside measurement
     spark.read.parquet(s"$baseDir/documents.parquet").count()
-    spark
+    val results = Seq("base_sf0.1" -> baseDir, "scaled_10x" -> outDir)
+      .flatMap { case (label, dir) => body(spark, label, dir) }
+    println()
+    for (q <- results.map(_.name).distinct) {
+      val b = results.find(r => r.label == "base_sf0.1" && r.name == q).get
+      val s = results.find(r => r.label == "scaled_10x" && r.name == q).get
+      val slope = (s.warm, b.warm) match {
+        case (Some(sw), Some(bw)) => f"cold=${s.cold / b.cold}%5.2fx warm=${sw / bw}%5.2fx"
+        case _ => f"slope=${s.cold / b.cold}%5.2fx"
+      }
+      println(f"SLOPE $q%-22s $slope (rows ${b.rows} -> ${s.rows})")
+    }
+    spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 1) args(1) else "/tmp/graft_scale10x"
-    val spark = bootstrap(baseDir, outDir)
+  /** One declared query at one scale: a cold run, then a warm one. */
+  private def coldWarm(spark: SparkSession, label: String, dir: String, q: String): Point = {
+    val fn = SparkEntry.queries(q)
+    val (t1, rows) = time(fn(spark, dir).count())
+    val (t2, _) = time(fn(spark, dir).count())
+    println(f"$label%-11s $q%-22s cold=$t1%8.2fs warm=$t2%8.2fs rows=$rows")
+    Point(label, q, t1, Some(t2), rows)
+  }
 
-    val results = for {
-      (label, dir) <- Seq("base_sf0.1" -> baseDir, "scaled_10x" -> outDir)
-      q <- Queries
-    } yield {
-      val fn = SparkEntry.queries(q)
-      val (t1, rows) = time(fn(spark, dir).count())
-      val (t2, _) = time(fn(spark, dir).count())
-      println(f"$label%-11s $q%-22s cold=$t1%8.2fs warm=$t2%8.2fs rows=$rows")
-      (label, q, t1, t2, rows)
+  private def queries(args: Array[String]): Unit =
+    atBothScales(args)((spark, label, dir) => Queries.map(coldWarm(spark, label, dir, _)))
+
+  /** The DELETION lifecycle — the r16 verdict's ask: the tombstone →
+    * compaction machinery had plan audits and small-scale specs but no
+    * committed slope. Same corpus and procedure as [[queries]] (the
+    * whole workload scales, indexes and deletion predicates included),
+    * measuring:
+    *
+    *  - `purge_audit` — the 24-row cross-family certification sweep
+    *    (cold includes building every tombstoned/retracted root for the
+    *    scaled dir, warm is the pure screened multi-family read);
+    *  - `text_bm25_retract_topk` — the retraction read path (cold builds
+    *    the index + applies the `% 13 = 5` retraction, warm probes the
+    *    screened postings against the adjusted side tables);
+    *  - `distinct_view_retracted` — the retractable distinct view's
+    *    read paths (both runs are steady-state probes of the exact
+    *    companion joined with the rebuilt HLL: the root's build + two
+    *    tagged merges + the `user_id % 10 = 7` retraction + the hll
+    *    tick's sketch rebuild happen inside `purge_audit`'s COLD run,
+    *    which builds every audit root first — the lifecycle-build slope
+    *    is therefore carried by the audit's cold row, not this one);
+    *  - a MASS-PURGE absorb + forced-compaction cycle on a fresh
+    *    fingerprint index: one op-aware batch deletes a third of the
+    *    corpus through [[graft.streaming.CdcStream.screenAndAbsorb]] with
+    *    `autoBroadcastJoinThreshold = -1`, so every size-guarded
+    *    tombstone screen MUST take the `Skew.maybeBroadcast` shuffle
+    *    fallback (asserted on the screened probe's executed plan — the
+    *    same check StoredIndexesSpec makes at small scale), then the
+    *    `fingerprint` tick makes the purge physical and the harness
+    *    fail-louds on any residual;
+    *  - a time-travel purge over a multi-version snapshot store.
+    *
+    * The replica construction scales EVENTS too (user_id / event_id
+    * shifted by i·10⁷), so the events-keyed distinct family scales with
+    * everything else: 10× rows, 10× (grp, key) pairs, 10× retraction
+    * slice, same group set. */
+  private def deletion(args: Array[String]): Unit = atBothScales(args) { (spark, label, dir) =>
+    val results = ArrayBuffer.empty[Point]
+    for (q <- Seq("purge_audit", "text_bm25_retract_topk", "distinct_view_retracted"))
+      results += coldWarm(spark, label, dir, q)
+    // mass-purge cycle, broadcast disabled end-to-end: the absorb's
+    // tombstone append, the probe's screen, and the compaction's
+    // anti-join must all ride the maybeBroadcast shuffle fallback
+    val docs = graft.engine.Tables.documents(spark, dir)
+    val idx = Files.createTempDirectory("scale_purge_idx").toString
+    val ckpt = Files.createTempDirectory("scale_purge_ckpt").toString
+    // count OUTSIDE the timed block: the label needs it, the build
+    // figure must not carry an unrelated corpus scan
+    val nDocs = docs.count()
+    val (tBuild, _) = time {
+      graft.ops.DedupOps.buildFingerprintIndex(docs, idx)
     }
-    println()
-    for (q <- Queries) {
-      val b = results.find(r => r._1 == "base_sf0.1" && r._2 == q).get
-      val s = results.find(r => r._1 == "scaled_10x" && r._2 == q).get
-      println(f"SLOPE $q%-22s cold=${s._3 / b._3}%5.2fx warm=${s._4 / b._4}%5.2fx " +
-        f"(rows ${b._5} -> ${s._5})")
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val purge = docs.filter(col("doc_id") % 3 === 0)
+        .select(col("doc_id"),
+          lit(null).cast("string").as("text"), lit("DELETE").as("op"))
+      val (tAbsorb, _) = time {
+        graft.streaming.CdcStream.screenAndAbsorb(spark, purge, 0L, idx,
+          ckpt, graft.streaming.CdcStream.Screen.fingerprint, (_, _) => ())
+      }
+      val probe = docs.filter(col("doc_id") % 3 === 1)
+        .limit(50).select(col("doc_id") + 900000000L as "doc_id", col("text"))
+      val screened = graft.ops.DedupOps.queryFingerprintIndex(spark, idx, probe)
+      val plan = screened.queryExecution.executedPlan.toString
+      require(!plan.contains("BroadcastHashJoin"),
+        "mass purge: the tombstone screen must fall back to planner " +
+          "strategy, never a forced driver broadcast")
+      val (tProbe, nHits) = time(screened.count())
+      val (tCompact, rewrote) = time(
+        graft.engine.Compaction.maintainIndex(spark, idx, "fingerprint"))
+      require(rewrote, "the forced tick must rewrite the purged tables")
+      val residual = spark.read
+        .parquet(graft.engine.Compaction.resolve(s"$idx/postings"))
+        .filter(col("doc_id") % 3 === 0).count()
+      require(residual == 0L,
+        s"mass purge left $residual served postings rows — residual " +
+          "after the physical tick must be zero")
+      println(f"$label%-11s mass_purge ($nDocs docs, third deleted) " +
+        f"build=$tBuild%8.2fs absorb=$tAbsorb%8.2fs " +
+        f"screened_probe=$tProbe%8.2fs ($nHits hits) compact=$tCompact%8.2fs " +
+        "fallback=engaged residual=0")
+      results += Point(label, "mass_purge_build", tBuild, None, nDocs)
+      results += Point(label, "mass_purge_absorb", tAbsorb, None, nDocs)
+      results += Point(label, "mass_purge_probe", tProbe, None, nHits)
+      results += Point(label, "mass_purge_compact", tCompact, None, nDocs)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    // time-travel purge over a MULTI-VERSION snapshot store — the r17
+    // verdict's missing slope: three erasure requests queue O(|keys|)
+    // each, ONE scheduled sweep pays the O(retained-window) rewrite — a
+    // growing three-version store, every version rewritten, residual
+    // audited.
+    val evTbl = graft.engine.Tables.events(spark, dir)
+    val storeRoot =
+      Files.createTempDirectory("scale_purge_store").toString
+    val store = new graft.engine.SnapshotStore(spark, storeRoot)
+    val (tPublish, _) = time {
+      store.publish(evTbl.filter(col("event_id") % 3 === 0))
+      store.publish(evTbl.filter(col("event_id") % 3 =!= 2))
+      store.publish(evTbl)
+    }
+    // the erasure slice: user_id % 30 ∈ {7,17,27} ⇔ % 10 = 7 — the
+    // same 1/10-of-users residue the distinct-view retraction uses,
+    // split into three arriving requests
+    val nKeys = evTbl.filter(col("user_id") % 10 === 7)
+      .select("user_id").distinct().count()
+    val (tQueue, _) = time {
+      Seq(7L, 17L, 27L).foreach { r =>
+        store.queuePurgeKeys(
+          evTbl.filter(col("user_id") % 30 === r)
+            .select("user_id").distinct(), "user_id")
+      }
+    }
+    val (tSweep, rewritten) = time(store.purgeSweep("user_id"))
+    require(rewritten.toSet == Set(3L, 0L, 1L, 2L),
+      s"the sweep must publish ONE fresh current and rewrite every " +
+        s"retained version exactly once, got $rewritten")
+    val resid = store.versions()
+      .map(v => store.readVersion(v)
+        .filter(col("user_id") % 10 === 7).count()).sum
+    require(resid == 0L,
+      s"time-travel purge left $resid rows of the erased users across " +
+        "the retained window")
+    val (tNoop, none) = time(store.purgeSweep("user_id"))
+    require(none.isEmpty,
+      "a sweep with nothing queued must rewrite nothing")
+    println(f"$label%-11s tt_purge ($nKeys users erased, 4 versions) " +
+      f"publish=$tPublish%8.2fs queue=$tQueue%8.2fs sweep=$tSweep%8.2fs " +
+      f"noop_sweep=$tNoop%8.2fs residual=0")
+    results += Point(label, "tt_purge_publish", tPublish, None, nKeys)
+    results += Point(label, "tt_purge_queue", tQueue, None, nKeys)
+    results += Point(label, "tt_purge_sweep", tSweep, None, nKeys)
+    results += Point(label, "tt_purge_noop_sweep", tNoop, None, 0L)
+    results.toSeq
+  }
+
+  /** The rule-count (k) axis of the BPE tokenizer loop. The corpus axis
+    * is covered by [[queries]] (10× docs, ~linear). This measures the
+    * OTHER axis — the learned-vocabulary size — which is where the r14
+    * shape died: k chained fold projections (and k chained cache entries
+    * in the trainer) grow Catalyst analysis time and plan depth
+    * linearly, so k=32,000 merges would spend hours in analysis before
+    * OOMing the driver. After the r15 restructure (trainer: eager
+    * localCheckpoint per round, O(1) lineage; encode: ONE
+    * nested-aggregate expression replaying a broadcast rule table) both
+    * train and encode must be ~linear in k with FLAT per-plan analysis
+    * time. This prints, per k (default 16, 64, 256):
+    *
+    *   - train_s    — full merge-loop training (k distributed argmax
+    *                  rounds; linear in k by construction, the point is
+    *                  the constant stays flat);
+    *   - analyze_s  — encode plan resolution + physical planning ONLY
+    *                  (queryExecution.executedPlan), the number that was
+    *                  super-linear in the chained shape;
+    *   - encode1_s / encode2_s — cold/warm full-corpus tokenization
+    *                  (bpeEncodeIds: posexplode → vocab join → symbol
+    *                  explode → id join → per-doc fold).
+    *
+    * replicas = 1 (default): the inline mode — train AND encode on the
+    * sf corpus directly. The corpus's own 31-word vocabulary exhausts
+    * the merge loop at ~89 rules (sum of word lengths bounds the pair
+    * inventory), so this mode can't reach a realistic k.
+    *
+    * replicas = R > 1: the deep-k mode — the training vocabulary is the
+    * sf corpus under R replica ciphers (the [[queries]] construction:
+    * bijective char maps preserve the per-replica word-length/tf
+    * structure exactly while replica vocabularies diverge like
+    * independent languages), giving ~89·R learnable rules. Training
+    * runs FROM THE STORED VOCAB VIEW (bpeTrainFromVocab — the production
+    * 100 TB shape, O(view) per round, no corpus pass), the k-rule
+    * tokenizer publishes, and the encode measures the FIXED base corpus
+    * under the stored artifact (bpeEncodeIdsStored), so the k axis moves
+    * alone: train_s(k) at constant view size, analyze_s/encode_s(k) at
+    * constant corpus. */
+  private def bpek(args: Array[String]): Unit = {
+    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val ks = args.lift(1).fold(Seq(16, 64, 256))(_.split(",").map(_.toInt).toSeq)
+    val replicas = args.lift(2).fold(1)(_.toInt)
+    val spark = Harness.session(32)
+    val docs = graft.engine.Tables.documents(spark, sfDir)
+    docs.count() // scan warmup outside measurement
+
+    if (replicas <= 1) {
+      for (k <- ks) {
+        val (tTrain, nRules) =
+          time(graft.ops.TextOps.bpeTrain(docs, k).count())
+        val enc = graft.ops.TextOps.bpeEncodeIds(docs, k)
+        val (tAnalyze, _) = time(enc.queryExecution.executedPlan)
+        val (tEnc1, rows) = time(enc.count())
+        val (tEnc2, _) =
+          time(graft.ops.TextOps.bpeEncodeIds(docs, k).count())
+        println(f"k=$k%-4d rules=$nRules%-4d train=$tTrain%8.2fs " +
+          f"analyze=$tAnalyze%6.3fs encode1=$tEnc1%7.2fs " +
+          f"encode2=$tEnc2%7.2fs rows=$rows")
+      }
+    } else {
+      // replica namespace derived from the corpus itself: a fixed
+      // constant would silently merge distinct replica rows whenever
+      // base doc_ids reach it (larger-sf corpora)
+      val repStride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
+      val scaled = replicated(docs, replicas)
+        .select(shifted("doc_id", repStride), cipheredText(replicas))
+      val work = Files.createTempDirectory("bpe_k_axis").toString
+      val viewPath = s"$work/vocab_view"
+      val (tView, _) =
+        time(graft.ops.TextOps.buildVocabIndex(scaled, viewPath))
+      println(f"view build (${replicas}x vocab): $tView%.2fs")
+      for (k <- ks) {
+        val (tTrain, nRules) = time(
+          graft.ops.TextOps.bpeTrainFromVocab(spark, viewPath, k).count())
+        val tokPath = s"$work/tok_$k"
+        // reuses the memoized training — times only the id-table build
+        graft.ops.TextOps.buildTokenizerFromView(spark, viewPath, k, tokPath)
+        val enc = graft.ops.TextOps.bpeEncodeIdsStored(spark, docs, tokPath)
+        val (tAnalyze, _) = time(enc.queryExecution.executedPlan)
+        val (tEnc1, rows) = time(enc.count())
+        val (tEnc2, _) = time(
+          graft.ops.TextOps.bpeEncodeIdsStored(spark, docs, tokPath).count())
+        println(f"k=$k%-5d rules=$nRules%-5d train=$tTrain%8.2fs " +
+          f"analyze=$tAnalyze%6.3fs encode1=$tEnc1%7.2fs " +
+          f"encode2=$tEnc2%7.2fs rows=$rows")
+      }
     }
     spark.stop()
   }

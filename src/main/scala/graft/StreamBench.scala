@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.{ChangeGen, Scd2, SnapshotStore}
 import graft.streaming.CdcStream
 
@@ -30,21 +28,13 @@ import graft.streaming.CdcStream
   * number). Results: `bench/STREAM_r18.md`. */
 object StreamBench {
 
-  import ScalePoint.time
+  import Harness.time
 
   private val K = "order_key"; private val TS = "cdc_timestamp"
   private val TIE = "change_id"
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
 
     for ((label, n, nKeys, files, perFile, mfpt) <- Seq(
         ("bulk_100k", 100000L, 5000, 10, 10000L, 1),

@@ -136,10 +136,21 @@ object Scd2 {
     * snapshot) is never shuffled; the rewrite is embarrassingly parallel.
     * At 100 TB the dim would additionally be partitioned by key-hash
     * buckets so the routing join is co-located.
+    *
+    * Op-aware when `opCol` is set: a change whose op is DELETE expires
+    * the key's current row and inserts nothing (scd2_loader.py:409-446;
+    * DELETE of an absent key is a no-op, :440-441). Routing stays
+    * existence-based (J2): the op column only distinguishes delete vs
+    * upsert, INSERT-vs-UPDATE is decided by whether a current row exists
+    * — including re-INSERT after a DELETE, which continues the key's
+    * version numbering from its last version.
     */
   def merge(dim: DataFrame, batch: DataFrame,
-            key: String, ts: String, tie: String): DataFrame =
-    merge(dim, batch, key, ts, tie, opCol = None)
+            key: String, ts: String, tie: String,
+            opCol: Option[String] = None): DataFrame =
+    // nothing is cached: the caller gets no cleanup to release it with
+    mergeSegments(None, dim, batch, key, ts, tie, opCol, BatchKeys.Planned, cache = false)
+      .rows
 
   /** An incremental-merge result: the rewritten dimension plus a cleanup
     * releasing the cached routed batch. Call `cleanup()` after the result
@@ -147,20 +158,6 @@ object Scd2 {
     * (one merge per streaming micro-batch) would otherwise accumulate one
     * cache entry per batch. */
   final case class MergeResult(dim: DataFrame, cleanup: () => Unit)
-
-  /** Op-aware merge: when `opCol` is set, a change whose op is DELETE
-    * expires the key's current row and inserts nothing
-    * (scd2_loader.py:409-446; DELETE of an absent key is a no-op,
-    * :440-441). Routing stays existence-based (J2): the op column only
-    * distinguishes delete vs upsert, INSERT-vs-UPDATE is decided by
-    * whether a current row exists — including re-INSERT after a DELETE,
-    * which continues the key's version numbering from its last version. */
-  def merge(dim: DataFrame, batch: DataFrame,
-            key: String, ts: String, tie: String,
-            opCol: Option[String]): DataFrame =
-    // nothing is cached: the caller gets no cleanup to release it with
-    mergeSegments(None, dim, batch, key, ts, tie, opCol, BatchKeys.Planned, cache = false)
-      .rows
 
   /** [[merge]] returning a [[MergeResult]] whose `cleanup` unpersists the
     * routed-batch cache once the merged dimension has been materialized.
@@ -184,9 +181,12 @@ object Scd2 {
   /** A merge over a dimension kept as two segments, split by what the
     * merge rewrites: `kept` is the live rows the batch leaves as they are,
     * `expired` the current rows it closes, `opened` the rest of the rows
-    * current after it. `cleanup` is [[MergeResult]]'s. */
+    * current after it. `unchanged` is true when the merge is known to
+    * expire no current row and open no version, so the dimension after it
+    * equals the one before; the planned route does not find out and says
+    * false. `cleanup` is [[MergeResult]]'s. */
   final case class SegmentMerge(kept: DataFrame, expired: DataFrame, opened: DataFrame,
-                                cleanup: () => Unit) {
+                                unchanged: Boolean, cleanup: () => Unit) {
     /** The closed rows added by this batch: the versions it expires, plus
       * any closed rows the live segment still held. */
     def closed: DataFrame = kept.filter(!col("is_current")).unionByName(expired)
@@ -208,16 +208,9 @@ object Scd2 {
     * `mergeBatch(history ∪ live)`. The key metadata the batch's keys
     * join against (timeline end, max `version_no`, has-current) still
     * spans both segments, but only the rows of the batch's keys are
-    * aggregated; the history is never re-encoded. Lazy, as
-    * [[mergeBatch]]. */
-  def mergeSegments(history: Option[DataFrame], live: DataFrame,
-                    batch: DataFrame, key: String, ts: String, tie: String,
-                    opCol: Option[String]): SegmentMerge =
-    mergeSegments(history, live, batch, key, ts, tie, opCol, BatchKeys.Planned)
-
-  /** [[mergeSegments]] routed by `keys`, as the private [[mergeBatch]].
-    * Without `cache` the planned route caches nothing and `cleanup` is a
-    * no-op. */
+    * aggregated; the history is never re-encoded. Routed by `keys`, and
+    * lazy, as the private [[mergeBatch]]. Without `cache` the planned
+    * route caches nothing and `cleanup` is a no-op. */
   private[graft] def mergeSegments(history: Option[DataFrame], live: DataFrame,
                                    batch: DataFrame, key: String, ts: String,
                                    tie: String, opCol: Option[String],
@@ -227,7 +220,7 @@ object Scd2 {
     val cols = live.columns.toIndexedSeq.map(col)
     SegmentMerge(live.filter(!col("is_current") || r.untouched),
       r.expired.select(cols: _*),
-      r.curUnchanged.unionByName(r.newVersions.select(cols: _*)), r.cleanup)
+      r.curUnchanged.unionByName(r.newVersions.select(cols: _*)), r.unchanged, r.cleanup)
   }
 
   /** A change batch's distinct keys, collected into the application when
@@ -284,11 +277,12 @@ object Scd2 {
 
   /** The batch-dependent parts of a merge: the versions it opens, the
     * current rows it expires, and the current rows it leaves alone — those
-    * `untouched` selects from the current rows, plus `curUnchanged` — and
+    * `untouched` selects from the current rows, plus `curUnchanged` —
+    * whether it is known to change nothing (see [[SegmentMerge]]), and
     * the cleanup releasing what routing cached. */
   private final case class Routing(newVersions: DataFrame, expired: DataFrame,
                                    curUnchanged: DataFrame, untouched: Column,
-                                   cleanup: () => Unit)
+                                   unchanged: Boolean, cleanup: () => Unit)
 
   /** Route `batch` against `dim` (every version) and `cur` (the current
     * rows to rewrite).
@@ -343,7 +337,7 @@ object Scd2 {
         .withColumn("is_current", lit(false))
         .drop("_new_ts"),
       cur.join(changedKeys, Seq(key), "left_anti"),
-      lit(false), () => if (cache) Caches.release(routed))
+      lit(false), unchanged = false, () => if (cache) Caches.release(routed))
   }
 
   private def routeSmall(batch: DataFrame, dim: DataFrame, cur: DataFrame,
@@ -384,10 +378,14 @@ object Scd2 {
     val (expired, unchanged) = curRows.partition(r =>
       !r.isNullAt(r.fieldIndex(key)) && newTs.contains(r.getAs[Any](key)))
     val (vt, ic) = (cur.schema.fieldIndex("valid_to"), cur.schema.fieldIndex("is_current"))
+    // the rows [[newVersions]] keeps: a routed DELETE (or null op) opens
+    // no version, and one of a key with no current row expires nothing
+    val opens = routedRows.exists(r => opCol.forall { c =>
+      val op = r.getAs[Any](c); op != null && op != "DELETE" })
     Routing(newVersions(local(routedRows, planned.schema), ts, opCol),
       local(expired.map(r => Row.fromSeq(r.toSeq
         .updated(vt, newTs(r.getAs[Any](key))).updated(ic, false))), cur.schema),
-      local(unchanged, cur.schema), !inBatch, () => ())
+      local(unchanged, cur.schema), !inBatch, expired.isEmpty && !opens, () => ())
   }
 
   /** J1 keyed lookup + T4 stale guard: the deduped batch `b` with each

@@ -628,16 +628,20 @@ object SimilarityOps {
     // bench SF, regressing all 11 recall rows ~0.3–0.6 s each. The
     // lazy join keeps the evaluator's plan fused.)
     //
-    // The retrieved side is |queries|×k rows BY CONTRACT (every caller
-    // passes a top-k probe result), so broadcast it explicitly: the
-    // planner's size estimate for these windowed probe plans is far too
-    // large to pick the broadcast itself, and the sort-merge fallback
-    // re-exchanged BOTH arms by (q_id, vec_id). Broadcast keeps the
-    // brute arm on the window's hash(q_id) partitioning end-to-end, so
-    // the hits aggregate below also plans without an exchange (guide
-    // §2.4 — one exchange serves window + join + aggregate).
+    // The retrieved side is at most |queries|×k rows BY CONTRACT (every
+    // caller passes a top-k probe result), so it is broadcast explicitly
+    // whenever the query set fits a broadcast: the planner's size
+    // estimate for these windowed probe plans is far too large to pick
+    // the broadcast itself, and the sort-merge fallback re-exchanged
+    // BOTH arms by (q_id, vec_id). Broadcast keeps the brute arm on the
+    // window's hash(q_id) partitioning end-to-end, so the hits aggregate
+    // below also plans without an exchange (guide §2.4 — one exchange
+    // serves window + join + aggregate). A query set too large for a
+    // broadcast takes the sort-merge join instead of failing at the
+    // broadcast size limit.
+    val r = retrieved.select("q_id", "vec_id")
     val hits = brute.select("q_id", "vec_id")
-      .join(broadcast(retrieved.select("q_id", "vec_id")),
+      .join(if (Skew.fitsBroadcast(queries)) broadcast(r) else r,
         Seq("q_id", "vec_id"))
       .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
     q.select("q_id")

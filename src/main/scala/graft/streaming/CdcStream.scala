@@ -130,7 +130,8 @@ object CdcStream {
     * batch-only columns, null for history) make the same calls with
     * carry off: the whole dimension is merged and rewritten, so no
     * carried file can lack a new column or sit in a wrong bucket. All
-    * are rare, loud-in-the-log events; steady state carries. */
+    * are rare, loud-in-the-log events; steady state carries. A carried
+    * batch the merge knows changes no row publishes nothing. */
   def applyChangeBatch(store: SnapshotStore, batch: DataFrame,
                        key: String, ts: String, tie: String,
                        opCol: Option[String], dimBuckets: Int = 0,
@@ -175,6 +176,9 @@ object CdcStream {
       store.read().map(_.drop(BucketCol)).getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie)),
       payload)))
     val merged = Scd2.mergeSegments(history, live, batch, key, ts, tie, opCol, keys)
+    // a carried batch known to change nothing (every change stale, or a
+    // DELETE of an absent key) would publish a copy of the current version
+    if (segments.nonEmpty && merged.unchanged) { merged.cleanup(); return }
     def withBucket(df: DataFrame) = if (buckets) bucketed(df, key, dimBuckets) else df
     // cleanup in finally: a throwing publish replays the batch, and each
     // failed attempt must not leave the routed-batch cache resident (a

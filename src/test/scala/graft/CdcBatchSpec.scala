@@ -14,8 +14,8 @@ import graft.engine.{ChangeGen, SnapshotStore}
 import graft.streaming.CdcStream
 
 /** One micro-batch of the streaming SCD2 merge, as [[CdcStream]] runs it:
-  * what an empty batch publishes, the schema readers see, and what each
-  * job of a batch is named. */
+  * what an empty or a no-op batch publishes, the schema readers see, and
+  * what each job of a batch is named. */
 class CdcBatchSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -64,6 +64,27 @@ class CdcBatchSpec extends AnyFunSuite {
         assert(store.currentVersion() === v)
       }
       assert(store.versions().max === v.get)
+      assert(rows(store) === before)
+    }
+  }
+
+  for ((mode, buckets) <- Seq(("whole-dim", 0), ("bucketed", 4))) {
+    test(s"a batch that changes no row publishes no version ($mode)") {
+      val store = new SnapshotStore(spark,
+        Files.createTempDirectory(s"cdc_noop_$mode").toString)
+      apply(store, batchFile(0, 400), buckets, manifest = false)
+      apply(store, batchFile(400, 700), buckets, manifest = false)
+      val (v, vs, before) = (store.currentVersion(), store.versions(), rows(store))
+      // an UPDATE older than its key's timeline end (the stale guard
+      // drops it) and a DELETE of a key the dimension never held
+      val one = batchFile(0, 100).limit(1)
+      val stale = one.withColumn(tie, lit(100000L)).withColumn(op, lit("UPDATE"))
+        .withColumn(ts, lit("2000-01-01 00:00:00").cast("timestamp"))
+      val absent = one.withColumn(tie, lit(100001L)).withColumn(op, lit("DELETE"))
+        .withColumn(key, lit(99999999L))
+      apply(store, stale.unionByName(absent), buckets, manifest = false)
+      assert(store.currentVersion() === v)
+      assert(store.versions() === vs)
       assert(rows(store) === before)
     }
   }

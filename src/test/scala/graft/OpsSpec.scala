@@ -247,6 +247,24 @@ class OpsSpec extends AnyFunSuite {
     assert(all === bf)
   }
 
+  test("recallOf broadcasts the retrieved side only while the query set fits a broadcast") {
+    val e = Tables.embeddings(spark, sfDir)
+    val queries = e.filter($"vec_id" % 97 === 0)
+    // a plain retrieved frame, not a probe: every even id for each query
+    val retrieved = queries.select($"vec_id".as("q_id"))
+      .crossJoin(e.select("vec_id").filter($"vec_id" % 2 === 0))
+    def report() = SimilarityOps.recallOf(e, queries, 10, retrieved).orderBy("q_id")
+    val atDefault = report().collect().toSeq
+    assert(atDefault.exists(r => r.getAs[Long]("n_hits") > 0 && r.getAs[Long]("n_hits") < 10))
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val rep = report()
+      assert(rep.collect().toSeq === atDefault)
+      assert(!rep.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+  }
+
   test("PQ: deterministic codes, sane ADC ranking") {
     val e = Tables.embeddings(spark, sfDir)
     val r1 = SimilarityOps.pqTopK(e, 0L, 10).collect().toSeq

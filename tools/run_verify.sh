@@ -1,20 +1,9 @@
 #!/bin/bash
-# Local dev loop: run graft.Verify with plain java (no sbt startup cost).
-# Usage: tools/run_verify.sh [sfDir] [outDir]
+# Local dev loop: run graft.Verify through tools/run_main.sh.
+# Usage: tools/run_verify.sh [sfDir] [outDir] [query,query,...]
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.001}
 OUT=${2:-/tmp/verify_out}
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 rm -rf "$OUT"
-exec java $ADDOPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF" "$OUT" ${3:+"$3"}
+exec tools/run_main.sh graft.Verify "$SF" "$OUT" ${3:+"$3"}
